@@ -37,31 +37,6 @@ class OverwriteResult:
     n_inserted: int = 0
 
 
-def _scan_entries(table: LakeTable, entries: list[dict], snap, target) -> DataFrame:
-    """Aligned scan of an explicit file-entry list (grouped by physical
-    schema id, no footer merging)."""
-    import json as J
-
-    from pyspark.sql import types as T
-
-    groups: dict[str, list[str]] = {}
-    for e in entries:
-        groups.setdefault(e["schema_id"], []).append(
-            os.path.join(table.root, e["path"])
-        )
-    if not groups:
-        return table.spark.createDataFrame([], target)
-    parts = []
-    for sid, paths in groups.items():
-        phys = T.StructType.fromJson(J.loads(snap.schemas[sid]))
-        df = table.spark.read.schema(phys).parquet(*paths)
-        parts.append(df.select(*alignment_columns(df, target)))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
 def _observed_count(obs, df, timeout_s: float = 30.0) -> int:
     """Read an Observation's row count with a hang guard: the metrics
     arrive with the action that executed the observed plan, so this
@@ -160,7 +135,7 @@ def _overwrite_where_once(
                     kept.setdefault(b, []).append(e)
                 else:
                     overlap.append(e)
-        existing = _scan_entries(table, overlap, snap, target)
+        existing = table.scan_files(overlap, snap, target)
     else:
         existing = table.read(snap=snap)
         existing = existing.select(*alignment_columns(existing, target))
@@ -199,7 +174,7 @@ def _overwrite_where_once(
     result = (
         survivors.withColumn(tag, F.lit(False))
         .unionByName(fresh)
-        .withColumn(BUCKET_COL, table.bucket_expr(F.col(key)))
+        .withColumn(BUCKET_COL, table.bucket_expr(F.col(key), snap=snap))
         .repartition(snap.n_buckets, F.col(BUCKET_COL))
         .observe(
             obs,

@@ -181,7 +181,9 @@ def _merge_once(
     # events).
     if mode != "mor":
         stats = (
-            batch_df.groupBy(table.bucket_expr(F.col(key)).alias(BUCKET_COL))
+            batch_df.groupBy(
+                table.bucket_expr(F.col(key), snap=snap).alias(BUCKET_COL)
+            )
             .agg(
                 F.count(F.lit(1)).alias("n"),
                 F.sum((F.col(op_col) == OP_DELETE).cast("long")).alias("nd"),
@@ -264,7 +266,7 @@ def _merge_once(
                 *alignment_columns(upd, target),
                 F.col("_op").alias(MOR_OP_COL),
             )
-            .withColumn(BUCKET_COL, table.bucket_expr(F.col(key)))
+            .withColumn(BUCKET_COL, table.bucket_expr(F.col(key), snap=snap))
             .repartition(snap.n_buckets, F.col(BUCKET_COL))
         )
         new_files = table._write_files(delta)
@@ -297,7 +299,7 @@ def _merge_once(
         # files in 4 batches).
         result = (
             survivors.unionByName(new_rows)
-            .withColumn(BUCKET_COL, table.bucket_expr(F.col(key)))
+            .withColumn(BUCKET_COL, table.bucket_expr(F.col(key), snap=snap))
             .repartition(max(len(affected), 1), F.col(BUCKET_COL))
         )
         new_files = table._write_files(result)
@@ -396,7 +398,7 @@ def append_batch(
     )
     target = plan.target
     df = batch_df.select(*alignment_columns(batch_df, target)).withColumn(
-        BUCKET_COL, table.bucket_expr(F.col(key))
+        BUCKET_COL, table.bucket_expr(F.col(key), snap=snap)
     )
     new_files = table._write_files(df)
     schemas = dict(snap.schemas)

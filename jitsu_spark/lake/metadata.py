@@ -12,7 +12,7 @@ Layout on disk:
         version-hint.txt       # current version number (tmp+rename, atomic)
         v{N}.json              # immutable snapshot descriptor, claimed O_EXCL
       data/
-        c{N}/_jb=<bucket>/part-*.parquet   # files written by commit N
+        c-<token>/_jb=<bucket>/part-*.parquet  # files of one commit (hex token)
 
 Snapshot descriptor contents:
 - logical table schema (+ history of physical schema ids; every data file

@@ -27,9 +27,12 @@ public API of this class maps onto Iceberg DDL + MERGE INTO directly.
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import uuid
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,7 +40,7 @@ from pyspark.sql import types as T
 
 from jitsu_spark.lake import metadata as md
 from jitsu_spark.lake.metadata import CommitConflict, Snapshot
-from jitsu_spark.typesys.align import align_to_schema
+from jitsu_spark.typesys.align import align_to_schema, alignment_columns
 
 BUCKET_COL = "_jb"  # internal bucket column used only around writes
 MOR_OP_COL = "_mor_op_file"  # op column persisted inside MoR delta files
@@ -51,6 +54,9 @@ WRITE_MODE_PROP = "write.mode"  # "cow" (default) | "mor"
 # every full key with that prefix. Requires a STRING key; the separator
 # must never appear inside the prefix component.
 BUCKET_PREFIX_SEP_PROP = "bucket.prefix_sep"
+# Every commit writes its files under data/c-<token>/<bucket dir>/; group 1
+# is the commit's hex token (see _write_files).
+COMMIT_TOKEN_RE = r"/c-([0-9a-f]+)/[^/]+/[^/]+$"
 
 
 @dataclass
@@ -58,6 +64,13 @@ class CommitResult:
     version: int
     skipped: bool = False
     n_rows: int | None = None
+
+
+def _schema(snap: Snapshot, sid: str | None = None) -> T.StructType:
+    """The logical schema of ``snap``, or its physical schema ``sid``."""
+    return T.StructType.fromJson(
+        json.loads(snap.schema_json if sid is None else snap.schemas[sid])
+    )
 
 
 class LakeTable:
@@ -121,17 +134,17 @@ class LakeTable:
         return md.load_snapshot(self.root, version)
 
     def schema(self, version: int | None = None) -> T.StructType:
-        return T.StructType.fromJson(
-            __import__("json").loads(self.snapshot(version).schema_json)
-        )
+        return _schema(self.snapshot(version))
 
-    def bucket_expr(self, key_col, n_buckets: int | None = None) -> F.Column:
-        """Bucket id for a key value. With ``bucket.prefix_sep`` set, the
-        hash covers only the key's prefix (text before the first
-        separator) — a bare prefix therefore hashes to the same bucket as
-        every full key carrying it, which is what makes prefix-pruned
-        reads exact."""
-        snap = self.snapshot()
+    def bucket_expr(
+        self, key_col, n_buckets: int | None = None, snap: Snapshot | None = None
+    ) -> F.Column:
+        """Bucket id for a key value under ``snap`` (default: the current
+        snapshot). With ``bucket.prefix_sep`` set, the hash covers only the
+        key's prefix (text before the first separator) — a bare prefix
+        therefore hashes to the same bucket as every full key carrying it,
+        which is what makes prefix-pruned reads exact."""
+        snap = snap or self.snapshot()
         n = snap.n_buckets if n_buckets is None else n_buckets
         sep = snap.properties.get(BUCKET_PREFIX_SEP_PROP)
         base = F.substring_index(key_col, sep, 1) if sep else key_col
@@ -156,10 +169,9 @@ class LakeTable:
     ) -> DataFrame:
         """Snapshot-consistent merged scan, pruned to ``buckets`` if given.
 
-        Files are grouped by physical schema id (and, for merge-on-read
-        deltas, by commit sequence); each group is read with its exact
-        schema (no footer-merging scan) and cast to the logical schema in a
-        single projection.
+        Files are read in one scan per physical schema id, with that exact
+        schema (no footer-merging scan), and cast to the logical schema in
+        a single projection.
 
         MoR reconcile is **delta-aware per bucket**: rows are hash-bucketed
         by key, so a key never spans buckets, and only the buckets that
@@ -178,7 +190,7 @@ class LakeTable:
         key regardless of the pruned column's range.
         """
         snap = snap or self.snapshot(version)
-        logical = T.StructType.fromJson(__import__("json").loads(snap.schema_json))
+        logical = _schema(snap)
         wanted = (
             set(str(b) for b in buckets) if buckets is not None else set(snap.files)
         )
@@ -191,76 +203,96 @@ class LakeTable:
             return st is not None and (st[1] < lo or st[0] >= hi)
 
         # split selected buckets: clean (base-only) vs dirty (>=1 delta file)
-        clean_groups: dict[str, list[str]] = {}  # schema_id -> paths
-        dirty_groups: dict[tuple[str, int], list[str]] = {}  # (sid, mseq) -> paths
+        clean, dirty = [], []
         for b, entries in snap.files.items():
             if b not in wanted:
                 continue
             if any(e.get("kind", "base") == "delta" for e in entries):
-                for e in entries:
-                    dirty_groups.setdefault(
-                        (e["schema_id"], int(e.get("mseq", 0))), []
-                    ).append(os.path.join(self.root, e["path"]))
+                dirty += entries
             else:
-                for e in entries:
-                    if excluded(e):
-                        continue
-                    clean_groups.setdefault(e["schema_id"], []).append(
-                        os.path.join(self.root, e["path"])
-                    )
-        if not clean_groups and not dirty_groups:
-            return self.spark.createDataFrame([], logical)
+                clean += [e for e in entries if not excluded(e)]
+        if not dirty:
+            return self.scan_files(clean, snap, logical)
+        rec = self._reconcile_scan(dirty, snap, logical)
+        return self.scan_files(clean, snap, logical).unionByName(rec) if clean else rec
 
-        parts = []
-        for sid, paths in clean_groups.items():
-            phys = T.StructType.fromJson(__import__("json").loads(snap.schemas[sid]))
-            df = self.spark.read.schema(phys).parquet(*paths)
-            parts.append(align_to_schema(df, logical))
-        if dirty_groups:
-            parts.append(self._reconcile_scan(dirty_groups, snap, logical))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+    def scan_files(
+        self, entries: list[dict], snap: Snapshot, target: T.StructType
+    ) -> DataFrame:
+        """Aligned scan of an explicit file-entry list: one scan per
+        physical schema id, each with its exact schema, cast to ``target``."""
+        groups: dict[str, list[str]] = {}
+        for e in entries:
+            groups.setdefault(e["schema_id"], []).append(
+                os.path.join(self.root, e["path"])
+            )
+        if not groups:
+            return self.spark.createDataFrame([], target)
+        reader = self.spark.read
+        return reduce(DataFrame.unionByName, [
+            align_to_schema(reader.schema(_schema(snap, sid)).parquet(*ps), target)
+            for sid, ps in groups.items()
+        ])
 
-    def _reconcile_scan(
+    def _commit_scan(
         self,
-        groups: dict[tuple[str, int], list[str]],
+        entries: list[dict],
         snap: Snapshot,
         logical: T.StructType,
+        seq_name: str,
+        op_name: str,
     ) -> DataFrame:
-        """LWW-reconcile base+delta files of delta-bearing buckets: base
-        rows carry (_mseq=0, _op='u'); delta rows their commit seq and real
-        op; latest wins, 'd' drops the key."""
-        key = snap.key_field
-        from jitsu_spark.typesys.align import alignment_columns
+        """Base and delta files of ``entries`` in one scan per physical
+        schema id (read with the delta layout; base files lack the op
+        column, read as NULL -> 'u'), aligned to ``logical``, plus each
+        row's op ``op_name`` and commit sequence ``seq_name`` (0 for base).
 
+        The sequence comes from a map, one entry per commit, from the hex
+        token of the commit directory in the row's file path to its
+        ``mseq``. Spark URL-encodes that path; the token needs no escaping.
+        A row whose token misses the map fails the query."""
+        groups: dict[str, list[str]] = {}
+        seq_of: dict[str, int] = {}
+        for e in entries:
+            groups.setdefault(e["schema_id"], []).append(
+                os.path.join(self.root, e["path"])
+            )
+            token, seq = re.search(COMMIT_TOKEN_RE, e["path"])[1], e.get("mseq", 0)
+            if seq_of.setdefault(token, seq) != seq:
+                raise ValueError(f"commit dir c-{token} holds two sequences")
+        seq_map = F.create_map(*[F.lit(x) for kv in seq_of.items() for x in kv])
         parts = []
-        for (sid, mseq), paths in groups.items():
-            phys = T.StructType.fromJson(__import__("json").loads(snap.schemas[sid]))
-            if mseq > 0:  # delta files persist their op column
-                phys = T.StructType(
-                    list(phys.fields) + [T.StructField(MOR_OP_COL, T.StringType())]
-                )
+        for sid, paths in groups.items():
+            phys = _schema(snap, sid).add(MOR_OP_COL, T.StringType())
             df = self.spark.read.schema(phys).parquet(*paths)
-            op_col = F.col(MOR_OP_COL) if mseq > 0 else F.lit("u")
+            path = df.metadataColumn("_metadata").getField("file_path")
+            seq = seq_map[F.regexp_extract(path, COMMIT_TOKEN_RE, 1)]
             parts.append(
                 df.select(
                     *alignment_columns(df, logical),
-                    F.lit(mseq).cast("long").alias("_mor_seq"),
-                    op_col.alias("_mor_op"),
+                    F.coalesce(F.col(MOR_OP_COL), F.lit("u")).alias(op_name),
+                    F.coalesce(
+                        seq, F.raise_error(F.concat(F.lit("no commit for "), path))
+                    ).cast("long").alias(seq_name),
                 )
             )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+        return reduce(DataFrame.unionByName, parts)
+
+    def _reconcile_scan(
+        self, entries: list[dict], snap: Snapshot, logical: T.StructType
+    ) -> DataFrame:
+        """LWW-reconcile base+delta files of delta-bearing buckets, read by
+        :meth:`_commit_scan`: latest commit sequence wins per key, op 'd'
+        drops the key."""
+        key = snap.key_field
         payload = [f.name for f in logical.fields if f.name != key]
         winner = F.max_by(
             F.struct(*[F.col(c) for c in payload], F.col("_mor_op")),
             F.col("_mor_seq"),
         ).alias("_w")
         return (
-            out.groupBy(key)
+            self._commit_scan(entries, snap, logical, "_mor_seq", "_mor_op")
+            .groupBy(key)
             .agg(winner)
             .select(key, "_w.*")
             .filter(F.col("_mor_op") != "d")
@@ -278,8 +310,9 @@ class LakeTable:
 
         Exact for merge-on-read tables: each MoR merge lands one
         LWW'd-per-batch delta file per bucket, stamped with its commit
-        sequence, so the changelog IS those files. Returns the payload
-        columns plus ``_change_op`` ('i'/'u'/'d') and ``_commit_version``.
+        sequence, so the changelog IS those files, read in one scan per
+        schema id (:meth:`_commit_scan`). Returns the payload columns plus
+        ``_change_op`` ('i'/'u'/'d') and ``_commit_version``.
 
         Raises if the range contains a commit whose row-level changes are
         not reconstructible from files (CoW merge rewrites, overwrites) —
@@ -293,7 +326,7 @@ class LakeTable:
         steady-state regime of every continuously-compacted stream)."""
         snap = self.snapshot(to_version)
         hi = snap.version if to_version is None else to_version
-        logical = T.StructType.fromJson(__import__("json").loads(snap.schema_json))
+        logical = _schema(snap)
         if self.write_mode(snap) != "mor":
             raise ValueError(
                 "changes() needs write.mode=mor (CoW merges rewrite whole "
@@ -340,43 +373,20 @@ class LakeTable:
                     "changes are not reconstructible (consume changes "
                     "before overwrite/append, or use MoR write mode)"
                 )
-        groups: dict[tuple[str, int], list[str]] = {}
-        for entries in snap.files.values():
-            for e in entries:
-                mseq = int(e.get("mseq", 0))
-                if e.get("kind", "base") == "delta" and since_version < mseq <= hi:
-                    groups.setdefault((e["schema_id"], mseq), []).append(
-                        os.path.join(self.root, e["path"])
-                    )
-        if not groups:
-            out_schema = T.StructType(
-                list(logical.fields)
-                + [
-                    T.StructField("_change_op", T.StringType()),
-                    T.StructField("_commit_version", T.LongType()),
-                ]
+        window = [
+            e
+            for entries in snap.files.values()
+            for e in entries
+            if e.get("kind", "base") == "delta"
+            and since_version < int(e["mseq"]) <= hi
+        ]
+        if not window:
+            return self.spark.createDataFrame(
+                [], logical.add("_change_op", "string").add("_commit_version", "long")
             )
-            return self.spark.createDataFrame([], out_schema)
-        from jitsu_spark.typesys.align import alignment_columns
-
-        parts = []
-        for (sid, mseq), paths in groups.items():
-            phys = T.StructType.fromJson(__import__("json").loads(snap.schemas[sid]))
-            phys = T.StructType(
-                list(phys.fields) + [T.StructField(MOR_OP_COL, T.StringType())]
-            )
-            df = self.spark.read.schema(phys).parquet(*paths)
-            parts.append(
-                df.select(
-                    *alignment_columns(df, logical),
-                    F.col(MOR_OP_COL).alias("_change_op"),
-                    F.lit(mseq).cast("long").alias("_commit_version"),
-                )
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return self._commit_scan(
+            window, snap, logical, "_commit_version", "_change_op"
+        )
 
     # -- write path (internal; public entry points are in merge.py) ---------
 
@@ -525,7 +535,7 @@ class LakeTable:
             return CommitResult(version=snap.version, skipped=True)
         df = self.read(buckets=[int(b) for b in frag], snap=snap)
         key = snap.key_field
-        df = df.withColumn(BUCKET_COL, self.bucket_expr(F.col(key)))
+        df = df.withColumn(BUCKET_COL, self.bucket_expr(F.col(key), snap=snap))
         df = df.repartition(len(frag), F.col(BUCKET_COL))
         new_files = self._write_files(df)
         files = dict(snap.files)
@@ -537,19 +547,13 @@ class LakeTable:
                 files[b] = compact_entries[b]
             else:
                 files.pop(b, None)
-        new_snap = Snapshot(
+        new_snap = replace(
+            snap,
             version=snap.version + 1,
-            key_field=snap.key_field,
-            n_buckets=snap.n_buckets,
-            schema_json=snap.schema_json,
-            schemas=snap.schemas,
-            current_schema_id=snap.current_schema_id,
             files=files,
-            committed=snap.committed,
             lineage=snap.lineage
             + [{"version": snap.version + 1, "kind": "compact",
                 "buckets": frag}],
-            properties=snap.properties,
             parent=snap.version,
         )
         self._commit(new_snap)
@@ -587,23 +591,18 @@ class LakeTable:
         new_n = snap.n_buckets * factor
         key = snap.key_field
         df = self.read(snap=snap).withColumn(
-            BUCKET_COL, self.bucket_expr(F.col(key), n_buckets=new_n)
+            BUCKET_COL, self.bucket_expr(F.col(key), n_buckets=new_n, snap=snap)
         )
         new_files = self._write_files(df)
         entries = self.build_entries(new_files, snap.current_schema_id, snap)
-        new_snap = Snapshot(
+        new_snap = replace(
+            snap,
             version=snap.version + 1,
-            key_field=key,
             n_buckets=new_n,
-            schema_json=snap.schema_json,
-            schemas=snap.schemas,
-            current_schema_id=snap.current_schema_id,
             files=entries,
-            committed=snap.committed,
             lineage=snap.lineage
             + [{"version": snap.version + 1, "kind": "rebucket",
                 "from": snap.n_buckets, "to": new_n}],
-            properties=snap.properties,
             parent=snap.version,
         )
         self._commit(new_snap)

@@ -58,6 +58,30 @@ def test_mor_oracle_replay_and_compaction(spark, tmpdir_path):
     assert kinds <= {"base"}
 
 
+def _with_evolved_columns(v: dict) -> dict:
+    """An oracle row in the logical schema evolving_phases ends with."""
+    for c in ("lang", "quality", "published_at"):
+        v.setdefault(c, None)
+    if v["quality"] is not None:
+        v["quality"] = float(v["quality"])
+    return v
+
+
+def _assert_changes_match(ch, batches, norm=lambda v: v):
+    """``ch`` (a changes() frame) holds, per committed batch, each key's
+    latest event of that batch: its op, payload and commit version.
+    ``batches`` is [(commit version, event rows)]."""
+    expected = {}
+    for version, rows in batches:
+        for r in sorted(rows, key=lambda r: r["seq"]):
+            payload = {c: v for c, v in r.items() if c not in ("seq", "op")}
+            expected[f"{r['doc_id']}@{version}"] = norm(
+                {**payload, "_change_op": r["op"], "_commit_version": version}
+            )
+    key = F.concat_ws("@", "doc_id", F.col("_commit_version").cast("string"))
+    assert_matches_oracle(ch.withColumn("_ck", key), expected, key="_ck")
+
+
 def test_mor_schema_evolution(spark, tmpdir_path):
     t = make_mor(spark, tmpdir_path)
     phases = evolving_phases(spark, n_events=600, n_docs=60, seed=8)
@@ -67,13 +91,91 @@ def test_mor_schema_evolution(spark, tmpdir_path):
         all_rows += [r.asDict(recursive=True) for r in p.collect()]
     expected = dict_replay(all_rows)
     for v in expected.values():
-        v.setdefault("lang", None)
-        v.setdefault("quality", None)
-        v.setdefault("published_at", None)
-        if v["quality"] is not None:
-            v["quality"] = float(v["quality"])
+        _with_evolved_columns(v)
     assert t.schema()["quality"].dataType.simpleString() == "double"
     assert_matches_oracle(t.read(), expected)
+
+
+def test_mor_root_with_space_and_percent(spark, tmpdir_path):
+    """Spark URL-encodes the file paths it reports (a space becomes %20,
+    a '%' becomes %25); the reconcile must still find every file's commit
+    sequence under such a table root."""
+    t = LakeTable.create(
+        spark, os.path.join(tmpdir_path, "a b%20c", "mor"), TARGET_SCHEMA,
+        "doc_id", n_buckets=4, properties={"write.mode": "mor"},
+    )
+    log = changelog_df(spark, n_events=1200, n_docs=100, seed=5, dup_pct=0.04)
+    rows = [r.asDict(recursive=True) for r in log.collect()]
+    per, window = 200, []
+    for i in range(6):
+        part = [r for r in rows if i * per <= r["seq"] < (i + 1) * per]
+        merge_batch(t, batch(spark, part), batch_id=i)
+        if i == 1:
+            t.compact(max_files_per_bucket=0)
+            v_fold = t.snapshot().version
+        elif i > 1:
+            window.append((t.snapshot().version, part))
+    expected = dict_replay(rows)
+    assert_matches_oracle(t.read(), expected)
+    _assert_changes_match(t.changes(since_version=v_fold), window)
+    t.compact(max_files_per_bucket=0)
+    assert_matches_oracle(t.read(), expected)
+
+
+def test_mor_user_column_named_metadata(spark, tmpdir_path):
+    """A payload column named ``_metadata`` does not shadow the file
+    metadata the reconcile takes commit sequences from."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType([T.StructField("k", T.StringType()),
+                           T.StructField("_metadata", T.StringType())])
+    t = LakeTable.create(
+        spark, os.path.join(tmpdir_path, "m"), schema, "k", n_buckets=2,
+        properties={"write.mode": "mor"},
+    )
+    events = T.StructType(schema.fields + [T.StructField("seq", T.LongType()),
+                                           T.StructField("op", T.StringType())])
+    merge_batch(t, spark.createDataFrame(
+        [("a", "x", 1, "i"), ("b", "y", 2, "i")], events), batch_id=0)
+    merge_batch(t, spark.createDataFrame(
+        [("a", "z", 3, "u"), ("b", None, 4, "d")], events), batch_id=1)
+    assert [tuple(r) for r in t.read().collect()] == [("a", "z")]
+    assert {tuple(r) for r in t.changes(since_version=0).collect()} == {
+        ("a", "x", "i", 1), ("b", "y", "i", 1), ("a", "z", "u", 2),
+        ("b", None, "d", 2),
+    }
+
+
+def test_mor_compacted_base_under_older_schema_than_deltas(spark, tmpdir_path):
+    """A dirty bucket whose compacted base file was written under an older
+    schema id than its deltas reads and emits changes exactly: the base
+    file meets deltas of two newer schemas in one reconcile."""
+    t = make_mor(spark, tmpdir_path, n_buckets=4)
+    phases = evolving_phases(spark, n_events=600, n_docs=60, seed=8)
+    first = [r.asDict(recursive=True) for r in phases[0].collect()]
+    half = sorted(r["seq"] for r in first)[len(first) // 2]
+    merge_batch(t, batch(spark, [r for r in first if r["seq"] < half]), batch_id=0)
+    merge_batch(t, batch(spark, [r for r in first if r["seq"] >= half]), batch_id=1)
+    t.compact(max_files_per_bucket=0)
+    v_fold = t.snapshot().version
+    window = []
+    for i, p in enumerate(phases[1:], start=2):
+        merge_batch(t, p, batch_id=i)
+        rows = [r.asDict(recursive=True) for r in p.collect()]
+        window.append((t.snapshot().version, rows))
+    snap = t.snapshot()
+    base_sids = {e["schema_id"] for es in snap.files.values() for e in es
+                 if e.get("kind", "base") == "base"}
+    delta_sids = {e["schema_id"] for es in snap.files.values() for e in es
+                  if e.get("kind") == "delta"}
+    assert base_sids == {"0"} and len(delta_sids) == 2 and "0" not in delta_sids
+    expected = dict_replay(first + [r for _, rows in window for r in rows])
+    for v in expected.values():
+        _with_evolved_columns(v)
+    assert_matches_oracle(t.read(), expected)
+    _assert_changes_match(
+        t.changes(since_version=v_fold), window, norm=_with_evolved_columns
+    )
 
 
 def test_mor_duplicate_batch_skipped(spark, tmpdir_path):

@@ -187,6 +187,60 @@ def test_mor_read_reconciles_and_prunes(spark, tmpdir_path):
     assert len(rows) == 1 and rows[0]["tokens"] == [2]
 
 
+def _scans(df) -> int:
+    return plan_of(df).split("\n\n")[0].count("Scan parquet")
+
+
+def _reconcile_scans(df) -> int:
+    """Parquet scans under the first (reconcile) aggregate of ``df``'s
+    operator tree."""
+    tree = plan_of(df).split("\n\n")[0]
+    aggs = [p for p in (tree.find("HashAggregate"), tree.find("SortAggregate"))
+            if p >= 0]
+    assert aggs, tree
+    return tree[min(aggs):].count("Scan parquet")
+
+
+def test_mor_reconcile_reads_one_scan_per_schema_id(spark, tmpdir_path):
+    """A dirty bucket's base file and every delta under one schema id are
+    read by ONE parquet scan, however many commits wrote them; a scan per
+    commit made the read plan, schedule and shuffle grow with the delta
+    depth. A column added by a merge brings exactly one more scan.
+    changes() follows the same rule."""
+    from jitsu_spark.lake import LakeTable
+    from jitsu_spark.lake.merge import merge_batch
+    from tests.test_merge import TARGET_SCHEMA, batch, ev
+
+    t = LakeTable.create(
+        spark, os.path.join(tmpdir_path, "t"), TARGET_SCHEMA, "doc_id",
+        n_buckets=4, properties={"write.mode": "mor"},
+    )
+    merge_batch(
+        t, batch(spark, [ev(i, "i", f"doc{i}", [i]) for i in range(20)]),
+        batch_id=0,
+    )
+    t.compact(max_files_per_bucket=0)
+    v0 = t.snapshot().version
+    for b in range(1, 7):
+        merge_batch(
+            t, batch(spark, [ev(100 * b + i, "u", f"doc{i}", [b]) for i in range(20)]),
+            batch_id=b,
+        )
+    assert _reconcile_scans(t.read()) == 1
+    assert _scans(t.changes(since_version=v0)) == 1
+    merge_batch(
+        t,
+        batch(spark, [ev(900, "u", "doc0", [7])]).withColumn("lang", F.lit("en")),
+        batch_id=7,
+    )
+    assert len(t.snapshot().schemas) == 2
+    df = t.read()
+    assert _reconcile_scans(df) == 2
+    assert _scans(t.changes(since_version=v0)) == 2
+    rows = {r["doc_id"]: (r["tokens"], r["lang"]) for r in df.collect()}
+    assert rows["doc0"] == ([7], "en") and rows["doc1"] == ([6], None)
+
+
 def test_geo_lookup_broadcasts_and_ua_parse_stays_codegen(spark):
     """The geo dim must broadcast (fact side never shuffles) and the UA
     parse must compile to pure expressions — no Python eval, no shuffle."""
