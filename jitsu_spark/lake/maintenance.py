@@ -171,11 +171,16 @@ def _overwrite_where_once(
     fresh = replacement.select(
         *alignment_columns(replacement, target)
     ).withColumn(tag, F.lit(True))
-    result = (
+    # Any bucket may receive replacement rows, so the bucket shuffle is
+    # sized by n_buckets; LakeTable._by_bucket caps it at one task per
+    # core and keeps one file per written bucket.
+    tagged = (
         survivors.withColumn(tag, F.lit(False))
         .unionByName(fresh)
         .withColumn(BUCKET_COL, table.bucket_expr(F.col(key), snap=snap))
-        .repartition(snap.n_buckets, F.col(BUCKET_COL))
+    )
+    result = (
+        table._by_bucket(tagged, snap.n_buckets)
         .observe(
             obs,
             F.coalesce(

@@ -33,11 +33,15 @@ Physical plan, chosen for 10^10-event scale:
    UNION ALL new-images. In the steady CDC regime (batch keys <<= table,
    n_keys <= broadcast_key_threshold) the update keys are BROADCAST, so
    the big existing side never shuffles and never leaves its scan
-   partitioning — zero-shuffle rewrite. For bulk-load-sized batches
+   partitioning — zero-shuffle join. For bulk-load-sized batches
    (n_keys above the threshold) broadcasting ~1M keys per batch becomes
    driver-serial Amdahl cost and a shuffle anti-join is ~2x faster and
    scales with cores (measured at local[32]); the kernel switches
-   automatically on the per-batch key count it already collected.
+   automatically on the per-batch key count it already collected. The
+   result then takes one shuffle by bucket id into
+   ``min(affected buckets, defaultParallelism)`` tasks and lands as
+   EXACTLY ONE file per affected bucket per commit
+   (``LakeTable._by_bucket``; the MoR delta write follows the same rule).
 4. **Exactly-once.** ``job_id/batch_id`` is recorded inside the same
    atomic snapshot commit that publishes the data files; replays of an
    already-committed batch (foreachBatch is at-least-once) are skipped.
@@ -258,18 +262,13 @@ def _merge_once(
         # bucket — O(batch) work regardless of table size; readers
         # reconcile by commit sequence (LakeTable.read). The write-vs-read
         # amplification trade is bounded by compaction (compact()).
-        # repartition(n_buckets) instead of len(affected): empty bucket
-        # partitions write no files, so the layout is identical and no
-        # pre-pass is needed to size the shuffle.
-        delta = (
-            upd.select(
-                *alignment_columns(upd, target),
-                F.col("_op").alias(MOR_OP_COL),
-            )
-            .withColumn(BUCKET_COL, table.bucket_expr(F.col(key), snap=snap))
-            .repartition(snap.n_buckets, F.col(BUCKET_COL))
-        )
-        new_files = table._write_files(delta)
+        # Sized by n_buckets, not len(affected): untouched buckets write
+        # no files, so no pre-pass is needed (LakeTable._by_bucket).
+        delta = upd.select(
+            *alignment_columns(upd, target),
+            F.col("_op").alias(MOR_OP_COL),
+        ).withColumn(BUCKET_COL, table.bucket_expr(F.col(key), snap=snap))
+        new_files = table._write_files(table._by_bucket(delta, snap.n_buckets))
         if new_files:  # empty batch wrote zero files: skip the metrics
             # read (its plan may have been emptied; see observe comment)
             got = observation.get
@@ -292,17 +291,16 @@ def _merge_once(
         # One explicit repartition by bucket before the write. This
         # shuffles only the data being rewritten (== the write volume),
         # and in exchange every affected bucket lands as EXACTLY ONE
-        # file per commit. Without it, survivors keep their input-split
-        # partitioning and each task emits a file per bucket it holds —
-        # file counts (and with them listing/planning time per batch)
-        # grow linearly over the stream's life (measured: 64 -> 244
+        # file per commit, in at most one task per core
+        # (LakeTable._by_bucket). Without it, survivors keep their
+        # input-split partitioning and each task emits a file per bucket
+        # it holds — file counts (and with them listing/planning time per
+        # batch) grow linearly over the stream's life (measured: 64 -> 244
         # files in 4 batches).
-        result = (
-            survivors.unionByName(new_rows)
-            .withColumn(BUCKET_COL, table.bucket_expr(F.col(key), snap=snap))
-            .repartition(max(len(affected), 1), F.col(BUCKET_COL))
+        result = survivors.unionByName(new_rows).withColumn(
+            BUCKET_COL, table.bucket_expr(F.col(key), snap=snap)
         )
-        new_files = table._write_files(result)
+        new_files = table._write_files(table._by_bucket(result, len(affected)))
 
     # 5. Atomic snapshot commit (data + manifest + lineage + schema).
     schemas = dict(snap.schemas)

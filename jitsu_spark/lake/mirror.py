@@ -110,41 +110,35 @@ class WindowImages:
     def get(self, since: int, cur: int):
         w = (since, cur)
         if w not in self._cache:
-            key = self.src.snapshot().key_field
+            pre_snap, post_snap = self.src.snapshot(since), self.src.snapshot(cur)
+            key = post_snap.key_field
             ch = self.src.changes(since_version=since, to_version=cur)
             changed = ch.select(key).distinct().persist()
             self._pinned.append(changed)
-            # BOTH image reads resolve bucket ids against the layout of
-            # the snapshot they are pinned to — `since` for the
-            # pre-image, `cur` for the post-image. A tolerated in-window
-            # rebucket (or one committed concurrently after `cur` was
-            # captured) means the CURRENT layout's ids don't match the
-            # pinned snapshot's files, and pruning with them would
-            # silently drop retractions/assertions.
-            pre_n = self.src.snapshot(since).n_buckets if since > 0 else None
-            dirty_pre = sorted(
-                r["b"]
-                for r in changed.select(
-                    self.src.bucket_expr(F.col(key), n_buckets=pre_n)
-                    .alias("b")
+            # BOTH image reads resolve bucket ids against the snapshot
+            # they are pinned to — `since` for the pre-image, `cur` for
+            # the post-image. A tolerated in-window rebucket (or one
+            # committed concurrently after `cur` was captured) means the
+            # CURRENT layout's ids don't match the pinned snapshot's
+            # files, and pruning with them would silently drop
+            # retractions/assertions.
+
+            def buckets(snap) -> list[int]:
+                return sorted(
+                    r["b"]
+                    for r in changed.select(
+                        self.src.bucket_expr(F.col(key), snap=snap).alias("b")
+                    )
+                    .distinct()
+                    .collect()
                 )
-                .distinct()
-                .collect()
-            ) if since > 0 else []
-            post_n = self.src.snapshot(cur).n_buckets
-            dirty = sorted(
-                r["b"]
-                for r in changed.select(
-                    self.src.bucket_expr(F.col(key), n_buckets=post_n)
-                    .alias("b")
-                )
-                .distinct()
-                .collect()
-            )
-            pre = self.src.read(version=since, buckets=dirty_pre).join(
+
+            dirty_pre = buckets(pre_snap) if since > 0 else []
+            dirty = buckets(post_snap)
+            pre = self.src.read(snap=pre_snap, buckets=dirty_pre).join(
                 changed, on=key, how="semi"
             )
-            post = self.src.read(version=cur, buckets=dirty).join(
+            post = self.src.read(snap=post_snap, buckets=dirty).join(
                 changed, on=key, how="semi"
             )
             if since > 0:  # steady state: O(change) frames, worth caching

@@ -10,9 +10,13 @@ Scale design (the part that must survive 100 TB / 1000 executors):
   catalog partition discovery. Size ``n_buckets`` so one bucket's live data
   fits a task comfortably (e.g. 100 TB / 4096 buckets ≈ 25 GB per bucket,
   split further into parquet row-groups → many input splits per bucket).
-- **Copy-on-write per bucket, zero-shuffle rewrite.** The merge rewrites an
-  affected bucket by streaming its files through a broadcast anti-join
-  (see merge.py) — the big existing side never shuffles.
+- **One file per written bucket per commit, one task per core.** Every
+  write shuffles its rows by bucket id into ``min(buckets written,
+  defaultParallelism)`` tasks (:meth:`LakeTable._by_bucket`); a task
+  writes several buckets' files in turn, one file per bucket.
+- **Copy-on-write per bucket.** The merge rewrites an affected bucket by
+  streaming its files through a broadcast anti-join (see merge.py) — the
+  big existing side never shuffles before that one bucket shuffle.
 - **Reads are pruned + aligned.** Files record the physical schema id they
   were written under; the reader groups files by schema id, reads each
   group with its exact schema (no inference, no mergeSchema scan), and
@@ -390,12 +394,25 @@ class LakeTable:
 
     # -- write path (internal; public entry points are in merge.py) ---------
 
+    def _by_bucket(self, df_with_bucket: DataFrame, n_written: int) -> DataFrame:
+        """Hash-partition ``df`` by BUCKET_COL into ``min(n_written,
+        defaultParallelism)`` tasks (at least one) for a write touching up
+        to ``n_written`` buckets. A bucket stays whole in one task and the
+        planned write sorts each task by BUCKET_COL, so a written bucket
+        still gets one file. One task per bucket paid about 44 ms of task
+        start-up per bucket; AQE's size-based coalescing
+        (``repartition(col)``) packs a small write into one task instead,
+        which then writes its files serially."""
+        n = max(1, min(n_written, self.spark.sparkContext.defaultParallelism))
+        return df_with_bucket.repartition(n, F.col(BUCKET_COL))
+
     def _write_files(self, df_with_bucket: DataFrame) -> dict[str, list[str]]:
         """Write ``df`` (carrying BUCKET_COL) under a fresh commit-token dir,
         one subdir per bucket; returns {bucket: [relative paths]}.
 
         No shuffle is introduced here: ``partitionBy`` splits by value within
-        each task, and upstream merge plans keep each task single-bucket.
+        each task, and upstream plans keep each bucket inside one task
+        (:meth:`_by_bucket`).
         """
         token = uuid.uuid4().hex[:12]
         rel_dir = os.path.join("data", f"c-{token}")
@@ -536,8 +553,8 @@ class LakeTable:
         df = self.read(buckets=[int(b) for b in frag], snap=snap)
         key = snap.key_field
         df = df.withColumn(BUCKET_COL, self.bucket_expr(F.col(key), snap=snap))
-        df = df.repartition(len(frag), F.col(BUCKET_COL))
-        new_files = self._write_files(df)
+        # one file per folded bucket, in at most one task per core
+        new_files = self._write_files(self._by_bucket(df, len(frag)))
         files = dict(snap.files)
         compact_entries = self.build_entries(
             new_files, snap.current_schema_id, snap
@@ -567,12 +584,15 @@ class LakeTable:
 
         Because bucketing is ``pmod(xxhash64(key), n)`` and
         ``new_n = factor * n``, every old bucket b's rows land ONLY in the
-        factor new buckets {b, b+n, ..., b+(factor-1)n} — the rewrite is a
-        narrow per-task split (``partitionBy`` at write), never a global
-        shuffle. The commit manifest carries over, so exactly-once
-        continuity is preserved across the resize; subsequent merges hash
-        against the new count automatically (bucket_expr reads the
-        snapshot). MoR deltas are folded into base during the rewrite.
+        factor new buckets {b, b+n, ..., b+(factor-1)n} — a clean bucket's
+        rewrite is a narrow per-task split (``partitionBy`` at write), never
+        a shuffle. Delta-bearing buckets are folded into base during the
+        rewrite: their reconciled rows leave the LWW aggregate in arbitrary
+        tasks, so only those rows are shuffled by new bucket
+        (:meth:`_by_bucket`), which keeps one file per new bucket. The
+        commit manifest carries over, so exactly-once continuity is
+        preserved across the resize; subsequent merges hash against the new
+        count automatically (bucket_expr reads the snapshot).
 
         Like compaction, a rebucket folds delta files — a ``changes()``
         window is legal across it only when every in-window merge comes
@@ -589,10 +609,23 @@ class LakeTable:
     def _rebucket_once(self, factor: int) -> CommitResult:
         snap = self.snapshot()
         new_n = snap.n_buckets * factor
-        key = snap.key_field
-        df = self.read(snap=snap).withColumn(
-            BUCKET_COL, self.bucket_expr(F.col(key), n_buckets=new_n, snap=snap)
-        )
+        dirty = [
+            int(b) for b, es in snap.files.items()
+            if any(e.get("kind", "base") == "delta" for e in es)
+        ]
+        clean = [int(b) for b in snap.files if int(b) not in dirty]
+
+        def rebucketed(buckets: list[int]) -> DataFrame:
+            return self.read(buckets=buckets, snap=snap).withColumn(
+                BUCKET_COL,
+                self.bucket_expr(F.col(snap.key_field), n_buckets=new_n, snap=snap),
+            )
+
+        df = rebucketed(clean)
+        if dirty:
+            df = df.unionByName(
+                self._by_bucket(rebucketed(dirty), len(dirty) * factor)
+            )
         new_files = self._write_files(df)
         entries = self.build_entries(new_files, snap.current_schema_id, snap)
         new_snap = replace(

@@ -60,6 +60,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from jitsu_spark.lake.merge import merge_batch
+from jitsu_spark.lake.metadata import Snapshot
 from jitsu_spark.lake.mirror import MirrorResult, last_synced_version
 from jitsu_spark.lake.table import BUCKET_PREFIX_SEP_PROP, LakeTable
 from jitsu_spark.text.passages import explode_passages
@@ -207,16 +208,16 @@ class PassageDedupView:
         table: LakeTable,
         df: DataFrame,
         col: str,
-        n_buckets: int | None = None,
+        snap: Snapshot | None = None,
     ) -> list[int]:
-        """Distinct bucket ids of ``df[col]``. Pass ``n_buckets`` from the
-        snapshot a read is PINNED to whenever that read uses ``version=``
-        — resolving against the current layout while reading an older
-        pinned snapshot silently mis-prunes across a rebucket."""
+        """Distinct bucket ids of ``df[col]``. Pass the snapshot a read is
+        PINNED to whenever it reads an older version — resolving against
+        the current layout while reading an older pinned snapshot silently
+        mis-prunes across a rebucket."""
         return sorted(
             r["b"]
             for r in df.select(
-                table.bucket_expr(F.col(col), n_buckets=n_buckets).alias("b")
+                table.bucket_expr(F.col(col), snap=snap).alias("b")
             )
             .distinct()
             .collect()
@@ -244,22 +245,16 @@ class PassageDedupView:
         # is pinned to — `cur` for the post-image, `lo` for the pre-image
         # (an in-window or concurrent rebucket otherwise makes the prune
         # drop retractions/assertions)
-        dbk = self._buckets(src, changed, key,
-                            n_buckets=src.snapshot(cur).n_buckets)
-        pre_n = src.snapshot(lo).n_buckets if lo > 0 else None
-        dbk_pre = sorted(
-            r["b"]
-            for r in changed.select(
-                src.bucket_expr(F.col(key), n_buckets=pre_n).alias("b")
-            ).distinct().collect()
-        ) if lo > 0 else []
+        post_snap, pre_snap = src.snapshot(cur), src.snapshot(lo)
+        dbk = self._buckets(src, changed, key, snap=post_snap)
+        dbk_pre = self._buckets(src, changed, key, snap=pre_snap) if lo > 0 else []
         pre = (
-            src.read(version=lo, buckets=dbk_pre)
+            src.read(snap=pre_snap, buckets=dbk_pre)
             .join(changed, on=key, how="semi")
             .select(key, F.col(text_col).alias("text"))
         )
         post = (
-            src.read(version=cur, buckets=dbk)
+            src.read(snap=post_snap, buckets=dbk)
             .join(changed, on=key, how="semi")
             .select(key, F.col(text_col).alias("text"))
         )
@@ -456,12 +451,12 @@ class PassageDedupView:
             # its bucket ids resolve against THAT snapshot's layout
             win_pre_v = _version_after_batch(self.winners, self.job_id,
                                              res_since)
+            win_pre = self.winners.snapshot(win_pre_v)
             wbk3_pre = self._buckets(
-                self.winners, dirty3, "passage_h",
-                n_buckets=self.winners.snapshot(win_pre_v).n_buckets,
+                self.winners, dirty3, "passage_h", snap=win_pre
             ) if win_pre_v > 0 else []
             old_w_docs = (
-                self.winners.read(version=win_pre_v, buckets=wbk3_pre)
+                self.winners.read(snap=win_pre, buckets=wbk3_pre)
                 .join(dirty3, on="passage_h", how="semi")
                 .select(F.col("win_doc").alias("doc"))
             )
@@ -479,10 +474,10 @@ class PassageDedupView:
                 .persist()
             )
             pinned.append(affected)
-            abk = self._buckets(src, affected, key,
-                                n_buckets=src.snapshot(cur).n_buckets)
+            src_cur = src.snapshot(cur)
+            abk = self._buckets(src, affected, key, snap=src_cur)
             docs_a = (
-                src.read(version=cur, buckets=abk)
+                src.read(snap=src_cur, buckets=abk)
                 .join(affected, on=key, how="semi")
                 .select(key, F.col(text_col).alias("text"))
             )

@@ -58,6 +58,47 @@ def test_mor_oracle_replay_and_compaction(spark, tmpdir_path):
     assert kinds <= {"base"}
 
 
+def test_mor_rebucket_writes_one_file_per_bucket(spark, tmpdir_path):
+    """Rebucketing folds deltas into base and still leaves one file per new
+    bucket: the reconciled rows of delta-bearing buckets leave the LWW
+    aggregate in arbitrary tasks and must be regrouped by new bucket,
+    while clean buckets split narrowly. Covers an all-dirty table, then
+    one dirty bucket among clean ones. AQE coalescing is off so that the
+    reconcile's output spans every shuffle partition, as a large table's
+    does; coalesced into one task, this small one would hide the bug."""
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    was = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try:
+        _rebucket_one_file_per_bucket(spark, tmpdir_path)
+    finally:
+        spark.conf.set(coalesce, was)
+
+
+def _rebucket_one_file_per_bucket(spark, tmpdir_path):
+    t = make_mor(spark, tmpdir_path, n_buckets=4)
+    log = changelog_df(spark, n_events=3000, n_docs=250, seed=5, dup_pct=0.04)
+    rows = [r.asDict(recursive=True) for r in log.collect()]
+    for i in range(3):
+        merge_batch(
+            t, log.filter((F.col("seq") >= i * 1000) & (F.col("seq") < (i + 1) * 1000)),
+            batch_id=i,
+        )
+
+    def rebucket_and_check(n):
+        t.rebucket(factor=2)
+        snap = t.snapshot()
+        assert snap.n_buckets == n and len(snap.files) == n
+        assert all(len(es) == 1 for es in snap.files.values()), snap.files
+        assert_matches_oracle(t.read(), dict_replay(rows))
+
+    rebucket_and_check(8)
+    late = ev(10_000, "u", rows[0]["doc_id"], [7])
+    merge_batch(t, batch(spark, [late]), batch_id=3)
+    rows.append(late)
+    rebucket_and_check(16)
+
+
 def _with_evolved_columns(v: dict) -> dict:
     """An oracle row in the logical schema evolving_phases ends with."""
     for c in ("lang", "quality", "published_at"):

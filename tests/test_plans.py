@@ -314,6 +314,75 @@ def test_rebucket_rewrite_plan_has_no_shuffle(spark, tmpdir_path):
     assert "Exchange" not in plan, plan
 
 
+@pytest.fixture()
+def lake_writes(monkeypatch):
+    """Every lake write of the test as (widths of its hash exchanges on
+    the bucket column, {bucket: files written})."""
+    import re
+
+    from jitsu_spark.lake.table import BUCKET_COL, LakeTable
+
+    seen = []
+    write = LakeTable._write_files
+
+    def spy(self, df):
+        widths = re.findall(
+            rf"hashpartitioning\({BUCKET_COL}#\d+, (\d+)\)", plan_of(df)
+        )
+        files = write(self, df)
+        seen.append(([int(w) for w in widths], files))
+        return files
+
+    monkeypatch.setattr(LakeTable, "_write_files", spy)
+    return seen
+
+
+def test_bucket_writes_use_one_task_per_core(spark, tmpdir_path, lake_writes):
+    """A 16-bucket table under local[4]: the CoW merge, MoR merge,
+    compaction and overwrite_where each shuffle by bucket into 4 tasks,
+    not 16, and still write exactly one file per written bucket per
+    commit (a bucket stays whole inside one task, whose write is sorted
+    by bucket)."""
+    from jitsu_spark.lake import LakeTable
+    from jitsu_spark.lake.maintenance import overwrite_where
+    from jitsu_spark.lake.merge import merge_batch
+    from tests.test_merge import TARGET_SCHEMA, batch, ev
+
+    assert spark.sparkContext.defaultParallelism == 4
+    rows = [ev(i, "i", f"doc{i}", [i]) for i in range(200)]
+
+    def table(name, n_buckets, mode="cow"):
+        return LakeTable.create(
+            spark, os.path.join(tmpdir_path, name), TARGET_SCHEMA, "doc_id",
+            n_buckets=n_buckets, properties={"write.mode": mode},
+        )
+
+    cow, mor = table("cow", 16), table("mor", 16, "mor")
+    merge_batch(cow, batch(spark, rows), batch_id=0)
+    merge_batch(mor, batch(spark, rows), batch_id=0)
+    updates = [ev(1000 + i, "u", f"doc{i}", [i, i]) for i in range(200)]
+    merge_batch(mor, batch(spark, updates), batch_id=1)
+    mor.compact(max_files_per_bucket=0)
+    overwrite_where(
+        cow, batch(spark, updates).drop("seq", "op"), F.col("n_tok") > 0,
+        chunk_id="all",
+    )
+    assert len(lake_writes) == 5
+    for widths, files in lake_writes:
+        assert widths == [4], widths
+        assert len(files) == 16 and all(len(fs) == 1 for fs in files.values())
+    assert all(len(es) == 1 for es in mor.snapshot().files.values())
+    assert all(len(es) == 1 for es in cow.snapshot().files.values())
+
+    # at most as many tasks as buckets: the 4-bucket tail shape keeps its
+    # plan, and a 2-bucket table writes in 2 tasks
+    lake_writes.clear()
+    for n in (4, 2):
+        merge_batch(table(f"mor{n}", n, "mor"), batch(spark, rows), batch_id=0)
+    assert [w for w, _ in lake_writes] == [[4], [2]]
+    assert [len(f) for _, f in lake_writes] == [4, 2]
+
+
 def test_repetition_signals_two_exchanges_partial_agg(spark):
     """The repetition pipeline is exactly two shuffles — (doc, token)
     counts then per-doc re-aggregate — and the first aggregate must
