@@ -18,16 +18,14 @@ from __future__ import annotations
 
 import os
 import time
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from jitsu_spark.lake import metadata as md
-from jitsu_spark.lake.metadata import Snapshot
 from jitsu_spark.lake.table import BUCKET_COL, LakeTable
 from jitsu_spark.typesys.align import alignment_columns
-from jitsu_spark.typesys.evolution import max_columns_of, plan_evolution
 
 
 @dataclass
@@ -69,7 +67,8 @@ def overwrite_where(
 ) -> OverwriteResult:
     """Atomically replace all rows matching ``predicate`` with
     ``replacement`` (which must itself satisfy the predicate's intent —
-    not enforced). Idempotent per (job_id, chunk_id). Retries on commit
+    not enforced). Idempotent per (job_id, chunk_id), also after
+    ``compact_manifest`` folded integer chunk ids. Retries on commit
     conflict (re-snapshot + recompute), so concurrent chunk syncs — the
     reference's worker pool — interleave safely; size
     ``max_commit_retries`` to at least the number of racing writers.
@@ -86,11 +85,11 @@ def overwrite_where(
     the full rewrite when the table carries MoR delta files (compact
     first).
     """
-    return LakeTable._retry_commit(
+    return md.retry_commit(
         lambda: _overwrite_where_once(
             table, replacement, predicate, chunk_id, job_id, prune
         ),
-        max_commit_retries=max_commit_retries,
+        attempts=max_commit_retries,
     )
 
 
@@ -102,21 +101,11 @@ def _overwrite_where_once(
     job_id: str,
     prune: tuple[str, str, str] | None,
 ) -> OverwriteResult:
-    import json as J
-
-    from pyspark.sql import types as T
-
     snap = table.snapshot()
-    commit_key = f"{job_id}/{chunk_id}"
-    if chunk_id is not None and commit_key in snap.committed:
+    if chunk_id is not None and md.is_committed(snap, job_id, chunk_id):
         return OverwriteResult(version=snap.version, skipped=True)
     key = snap.key_field
-    plan = plan_evolution(
-        T.StructType.fromJson(J.loads(snap.schema_json)),
-        replacement.schema,
-        frozen=(key,),
-        max_columns=max_columns_of(snap.properties),
-    )
+    plan, schema_json = md.evolve_schema(snap, replacement.schema)
     target = plan.target
 
     has_delta = any(
@@ -140,11 +129,13 @@ def _overwrite_where_once(
         existing = table.read(snap=snap)
         existing = existing.select(*alignment_columns(existing, target))
     survivors = existing.filter(~predicate)
-    # r7: ONE Spark job per chunk. The old shape ran `fresh.count()` and
-    # then the write, each executing the full replacement pipeline (for
-    # an interval sync that is the whole report aggregation, twice per
-    # interval — the guide-§1.4 count trap). The inserted-row count now
-    # rides the write job as an Observation on the replacement branch.
+    # r7: ONE Spark action per chunk (2 jobs under AQE, one per query
+    # stage; pinned in tests/test_plans.py). The old shape ran
+    # `fresh.count()` and then the write, each executing the full
+    # replacement pipeline (for an interval sync that is the whole report
+    # aggregation, twice per interval — the guide-§1.4 count trap). The
+    # inserted-row count now rides the write job as an Observation on the
+    # replacement branch.
     # Empty-branch safety was verified empirically on this Spark version
     # for exactly this plan shape (observe -> union -> repartition ->
     # parquet write): a runtime-empty AND a statically-empty replacement
@@ -191,35 +182,18 @@ def _overwrite_where_once(
     )
     new_files = table._write_files(result)
     n_inserted = _observed_count(obs, replacement)
-    schemas = dict(snap.schemas)
-    sid = snap.current_schema_id
-    if plan.changed:
-        sid = str(max(int(s) for s in schemas) + 1)
-        schemas[sid] = target.json()
-    new_entries = table.build_entries(new_files, sid, snap)
-    files: dict[str, list[dict]] = {}
-    for b in set(kept) | set(new_entries):
-        files[b] = kept.get(b, []) + new_entries.get(b, [])
-    committed = list(snap.committed)
-    if chunk_id is not None:
-        committed.append(commit_key)
-    new_snap = Snapshot(
-        version=snap.version + 1,
-        key_field=snap.key_field,
-        n_buckets=snap.n_buckets,
-        schema_json=target.json(),
-        schemas=schemas,
-        current_schema_id=sid,
-        files=files,
-        committed=committed,
-        lineage=snap.lineage
-        + [{"version": snap.version + 1,
-            "kind": "overwrite_where", "job_id": job_id, "chunk_id": chunk_id,
-            "n_inserted": n_inserted}],
-        properties=snap.properties,
-        parent=snap.version,
+    files = md.add_files(kept, table.build_entries(
+        new_files, md.schema_id(snap, schema_json), snap
+    ))
+    new_snap = md.next_snapshot(
+        snap, "overwrite_where", files,
+        commit_key=md.commit_key(job_id, chunk_id),
+        schema_json=schema_json,
+        job_id=job_id,
+        chunk_id=chunk_id,
+        n_inserted=n_inserted,
     )
-    table._commit(new_snap)
+    md.commit_snapshot(table.root, new_snap)
     return OverwriteResult(version=new_snap.version, n_inserted=n_inserted)
 
 
@@ -296,19 +270,10 @@ def expire_snapshots(table: LakeTable, keep_last: int = 100) -> list[int]:
     horizon = min(current - keep_last + 1, hint)
     # enumerate what actually exists (O(retained + expirable) per call)
     # instead of probing every version number since 0 (O(stream age))
-    md_dir = os.path.join(table.root, "metadata")
-    expired: list[int] = []
-    for fn in os.listdir(md_dir):
-        if not (fn.startswith("v") and fn.endswith(".json")):
-            continue
-        try:
-            v = int(fn[1:-5])
-        except ValueError:
-            continue
-        if v < horizon:
-            os.unlink(os.path.join(md_dir, fn))
-            expired.append(v)
-    return sorted(expired)
+    expired = sorted(v for v in md.versions(table.root) if v < horizon)
+    for v in expired:
+        os.unlink(os.path.join(table.root, "metadata", f"v{v}.json"))
+    return expired
 
 
 def expire_snapshots_safe(
@@ -373,10 +338,9 @@ def compact_manifest(
     Retries on commit conflict (the streaming runner calls this inline in
     foreachBatch while concurrent writers may be committing), recomputing
     the fold from a fresh snapshot. A retry may re-append already-archived
-    lineage lines; ``full_history`` de-duplicates (by version, and by
-    content hash for version-less entries).
+    lineage lines; ``full_history`` de-duplicates them by version.
     """
-    return LakeTable._retry_commit(
+    return md.retry_commit(
         lambda: _compact_manifest_once(table, keep_lineage, keep_recent_batches)
     )
 
@@ -437,21 +401,11 @@ def _compact_manifest_once(
             committed_before=len(snap.committed),
             committed_after=len(snap.committed),
         )
-    new_snap = Snapshot(
-        version=snap.version + 1,
-        key_field=snap.key_field,
-        n_buckets=snap.n_buckets,
-        schema_json=snap.schema_json,
-        schemas=snap.schemas,
-        current_schema_id=snap.current_schema_id,
-        files=snap.files,
-        committed=new_committed,
-        lineage=kept
-        + [{"version": snap.version + 1, "kind": "manifest_compact",
-            "archived": len(archived),
-            "committed_folded": len(snap.committed) - len(new_committed)}],
-        properties=snap.properties,
-        parent=snap.version,
+    new_snap = md.next_snapshot(
+        replace(snap, committed=new_committed, lineage=kept),
+        "manifest_compact", snap.files,
+        archived=len(archived),
+        committed_folded=len(snap.committed) - len(new_committed),
     )
     md.commit_snapshot(table.root, new_snap)
     return ManifestCompactResult(
@@ -469,35 +423,22 @@ def _archive_path(table: LakeTable) -> str:
 def full_history(table: LakeTable) -> list[dict]:
     """Complete lineage: archived entries + the snapshot's live tail.
 
-    De-duplicates twice-archived entries — a crashed or conflict-retried
-    compaction appends the same lines again (the archive write happens
-    before the commit on purpose: archiving after would lose entries if
-    the process dies between commit and append, since the new snapshot has
-    already dropped them). Versioned entries dedupe by version; pre-stamp
-    (version-less) entries dedupe by full content hash."""
+    De-duplicates twice-archived entries by version — a crashed or
+    conflict-retried compaction appends the same lines again (the archive
+    write happens before the commit on purpose: archiving after would lose
+    entries if the process dies between commit and append, since the new
+    snapshot has already dropped them)."""
     import json as _json
 
-    out: list[dict] = []
-    seen: set[int] = set()
-    seen_unversioned: set[str] = set()
-
-    def _add(e: dict) -> None:
-        v = e.get("version")
-        if v is None:
-            k = _json.dumps(e, sort_keys=True)
-            if k in seen_unversioned:
-                return
-            seen_unversioned.add(k)
-            out.append(e)
-        elif v not in seen:
-            seen.add(v)
-            out.append(e)
-
+    entries: list[dict] = []
     path = _archive_path(table)
     if os.path.exists(path):
         with open(path) as f:
-            for line in f:
-                _add(_json.loads(line))
-    for e in table.snapshot().lineage:
-        _add(e)
+            entries = [_json.loads(line) for line in f]
+    out: list[dict] = []
+    seen: set[int] = set()
+    for e in entries + table.snapshot().lineage:
+        if e["version"] not in seen:
+            seen.add(e["version"])
+            out.append(e)
     return out

@@ -31,7 +31,7 @@ Physical plan, chosen for 10^10-event scale:
 3. **CoW rewrite with regime-adaptive anti-join.** survivors =
    existing-bucket-scan LEFT ANTI JOIN update-keys; result = survivors
    UNION ALL new-images. In the steady CDC regime (batch keys <<= table,
-   n_keys <= broadcast_key_threshold) the update keys are BROADCAST, so
+   n_keys <= BROADCAST_KEY_THRESHOLD) the update keys are BROADCAST, so
    the big existing side never shuffles and never leaves its scan
    partitioning — zero-shuffle join. For bulk-load-sized batches
    (n_keys above the threshold) broadcasting ~1M keys per batch becomes
@@ -43,7 +43,8 @@ Physical plan, chosen for 10^10-event scale:
    EXACTLY ONE file per affected bucket per commit
    (``LakeTable._by_bucket``; the MoR delta write follows the same rule).
 4. **Exactly-once.** ``job_id/batch_id`` is recorded inside the same
-   atomic snapshot commit that publishes the data files; replays of an
+   atomic snapshot commit that publishes the data files
+   (``metadata.next_snapshot`` + ``commit_snapshot``); replays of an
    already-committed batch (foreachBatch is at-least-once) are skipped.
 5. **Schema evolution in-commit.** The batch's payload schema is diffed
    against the table's logical schema (typesys/evolution.py); adds/widens
@@ -59,7 +60,6 @@ Correctness invariants (tested in tests/test_merge.py):
 
 from __future__ import annotations
 
-import json
 import time
 from dataclasses import dataclass, field
 
@@ -67,7 +67,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from jitsu_spark.lake.metadata import CommitConflict, Snapshot
+from jitsu_spark.lake import metadata as md
+from jitsu_spark.lake.metadata import is_committed
 from jitsu_spark.lake.table import (
     BUCKET_COL,
     MOR_OP_COL,
@@ -75,9 +76,11 @@ from jitsu_spark.lake.table import (
     LakeTable,
 )
 from jitsu_spark.typesys.align import alignment_columns
-from jitsu_spark.typesys.evolution import max_columns_of, plan_evolution
 
 OP_INSERT, OP_UPDATE, OP_DELETE = "i", "u", "d"
+# Batches of at most this many events broadcast their keys to the CoW
+# anti-join; larger (bulk-load) batches shuffle both sides instead.
+BROADCAST_KEY_THRESHOLD = 200_000
 
 
 @dataclass
@@ -100,53 +103,13 @@ def merge_batch(
     job_id: str = "stream",
     seq_col: str = "seq",
     op_col: str = "op",
-    broadcast_key_threshold: int = 200_000,
-    max_commit_retries: int = 5,
 ) -> MergeResult:
     """Apply one micro-batch. Retries the whole merge on commit conflicts
-    (optimistic concurrency); single-writer deployments never retry."""
-    last: CommitConflict | None = None
-    for _ in range(max_commit_retries):
-        try:
-            return _merge_once(
-                table, batch_df, batch_id, job_id, seq_col, op_col,
-                broadcast_key_threshold,
-            )
-        except CommitConflict as e:  # concurrent writer won this version
-            last = e
-    raise last  # type: ignore[misc]
-
-
-def _commit_key(job_id: str, batch_id) -> str:
-    return f"{job_id}/{batch_id}"
-
-
-def is_committed(snap, job_id: str, batch_id) -> bool:
-    """Exactly-once membership check against the commit manifest.
-
-    Besides explicit ``job_id/batch_id`` entries, understands the
-    high-watermark markers ``job_id/<=N`` written by
-    ``maintenance.compact_manifest`` — a marker covers every INTEGER
-    batch id ≤ N (streaming epoch ids are contiguous from 0, which is
-    exactly the contiguity the compactor proves before writing one).
-    Without compaction the manifest grows one entry per batch forever —
-    at 10^6 micro-batches the snapshot JSON rewrite becomes O(stream
-    age) per commit."""
-    if _commit_key(job_id, batch_id) in snap.committed:
-        return True
-    try:
-        bid = int(batch_id)
-    except (TypeError, ValueError):
-        return False
-    prefix = f"{job_id}/<="
-    for c in snap.committed:
-        if c.startswith(prefix):
-            try:
-                if bid <= int(c[len(prefix):]):
-                    return True
-            except ValueError:
-                continue
-    return False
+    (optimistic concurrency, ``metadata.retry_commit``); single-writer
+    deployments never retry."""
+    return md.retry_commit(
+        lambda: _merge_once(table, batch_df, batch_id, job_id, seq_col, op_col)
+    )
 
 
 def _merge_once(
@@ -156,7 +119,6 @@ def _merge_once(
     job_id: str,
     seq_col: str,
     op_col: str,
-    broadcast_key_threshold: int,
 ) -> MergeResult:
     t0 = time.time()
     snap = table.snapshot()
@@ -181,8 +143,9 @@ def _merge_once(
     # needs nothing ahead of the write — affected buckets fall out of the
     # written files and the batch metrics ride the write job itself as
     # observed metrics — so the steady-state (MoR) path runs ONE Spark
-    # job per batch, not two (~20% of per-batch wall measured at 500k
-    # events).
+    # action per batch, not two (~20% of per-batch wall measured at 500k
+    # events). That action is 3 Spark jobs under AQE, one per query
+    # stage (pinned in tests/test_plans.py).
     if mode != "mor":
         stats = (
             batch_df.groupBy(
@@ -208,7 +171,7 @@ def _merge_once(
     else:
         from pyspark.sql import Observation
 
-        # ONE Spark action per batch, truly: no empty-probe job. The
+        # ONE Spark action per batch, truly: no empty-probe action. The
         # observe node rides the write; emptiness is derived POST-write
         # (an empty frame under partitionBy produces zero files), and
         # observation.get is only consulted when files were written —
@@ -247,12 +210,7 @@ def _merge_once(
     )
 
     # 3. Schema evolution plan (driver-side, schemas only).
-    plan = plan_evolution(
-        T.StructType.fromJson(json.loads(snap.schema_json)),
-        payload_schema,
-        frozen=(key,),
-        max_columns=max_columns_of(snap.properties),
-    )
+    plan, schema_json = md.evolve_schema(snap, payload_schema)
     target = plan.target
 
     new_files: dict[str, list[str]] = {}
@@ -281,7 +239,7 @@ def _merge_once(
         existing = table.read(buckets=affected, snap=snap)
         existing = existing.select(*alignment_columns(existing, target))
         keys_df = upd.select(key)
-        if n_keys <= broadcast_key_threshold:
+        if n_keys <= BROADCAST_KEY_THRESHOLD:
             keys_df = F.broadcast(keys_df)
         survivors = existing.join(keys_df, on=key, how="left_anti")
 
@@ -303,64 +261,35 @@ def _merge_once(
         new_files = table._write_files(table._by_bucket(result, len(affected)))
 
     # 5. Atomic snapshot commit (data + manifest + lineage + schema).
-    schemas = dict(snap.schemas)
-    sid = snap.current_schema_id
-    if plan.changed:
-        sid = str(max(int(s) for s in schemas) + 1)
-        schemas[sid] = target.json()
-    files = dict(snap.files)
+    sid = md.schema_id(snap, schema_json)
     if mode == "mor":
         # append delta entries stamped with this commit's sequence
-        new_version = snap.version + 1
-        delta_entries = table.build_entries(
-            new_files, sid, snap, kind="delta", mseq=new_version
-        )
-        for b, entries in delta_entries.items():
-            files[b] = list(files.get(b, [])) + entries
+        files = md.add_files(snap.files, table.build_entries(
+            new_files, sid, snap, kind="delta", mseq=snap.version + 1
+        ))
     else:
-        cow_entries = table.build_entries(new_files, sid, snap)
-        for b in affected:
-            bs = str(b)
-            if bs in cow_entries:
-                files[bs] = cow_entries[bs]
-            else:
-                files.pop(bs, None)  # bucket fully deleted
-    committed = list(snap.committed)
-    if batch_id is not None:
-        committed.append(_commit_key(job_id, batch_id))
-    lineage = snap.lineage + [
-        {
-            "version": snap.version + 1,
-            "kind": "merge",
-            "job_id": job_id,
-            "batch_id": batch_id,
-            "seq_min": seq_min,
-            "seq_max": seq_max,
-            "n_keys": n_keys,
-            "n_deletes": n_deletes,
-            "buckets": affected,
-            "schema_added": plan.added,
-            "schema_widened": plan.widened,
-            "wall_s": round(time.time() - t0, 3),
-            # commit wall-clock stamp for the counter/statistics read API
-            # (per-day/hour re-aggregation); metadata only, never data
-            "ts_ms": int(time.time() * 1000),
-        }
-    ]
-    new_snap = Snapshot(
-        version=snap.version + 1,
-        key_field=snap.key_field,
-        n_buckets=snap.n_buckets,
-        schema_json=target.json(),
-        schemas=schemas,
-        current_schema_id=sid,
-        files=files,
-        committed=committed,
-        lineage=lineage,
-        properties=snap.properties,
-        parent=snap.version,
+        files = md.replace_buckets(
+            snap.files, affected, table.build_entries(new_files, sid, snap)
+        )
+    new_snap = md.next_snapshot(
+        snap, "merge", files,
+        commit_key=md.commit_key(job_id, batch_id),
+        schema_json=schema_json,
+        job_id=job_id,
+        batch_id=batch_id,
+        seq_min=seq_min,
+        seq_max=seq_max,
+        n_keys=n_keys,
+        n_deletes=n_deletes,
+        buckets=affected,
+        schema_added=plan.added,
+        schema_widened=plan.widened,
+        wall_s=round(time.time() - t0, 3),
+        # commit wall-clock stamp for the counter/statistics read API
+        # (per-day/hour re-aggregation); metadata only, never data
+        ts_ms=int(time.time() * 1000),
     )
-    table._commit(new_snap)
+    md.commit_snapshot(table.root, new_snap)
     return MergeResult(
         version=new_snap.version,
         n_keys=n_keys,
@@ -382,50 +311,34 @@ def append_batch(
     """Insert-only fast path (the reference's no-primary-key mode): pure
     file append, no bucket read/rewrite, O(batch) work regardless of table
     size. Duplicate keys are allowed — this is what 'no PK configured'
-    means in the reference (factory.go:238-244 semantics)."""
+    means in the reference (factory.go:238-244 semantics). Retries on
+    commit conflict like :func:`merge_batch`."""
+    return md.retry_commit(
+        lambda: _append_once(table, batch_df, batch_id, job_id)
+    )
+
+
+def _append_once(table: LakeTable, batch_df: DataFrame, batch_id, job_id: str):
     t0 = time.time()
     snap = table.snapshot()
     if batch_id is not None and is_committed(snap, job_id, batch_id):
         return MergeResult(version=snap.version, skipped=True)
-    key = snap.key_field
-    plan = plan_evolution(
-        T.StructType.fromJson(json.loads(snap.schema_json)),
-        T.StructType([f for f in batch_df.schema.fields]),
-        frozen=(key,),
-        max_columns=max_columns_of(snap.properties),
-    )
-    target = plan.target
-    df = batch_df.select(*alignment_columns(batch_df, target)).withColumn(
-        BUCKET_COL, table.bucket_expr(F.col(key), snap=snap)
+    plan, schema_json = md.evolve_schema(snap, batch_df.schema)
+    df = batch_df.select(*alignment_columns(batch_df, plan.target)).withColumn(
+        BUCKET_COL, table.bucket_expr(F.col(snap.key_field), snap=snap)
     )
     new_files = table._write_files(df)
-    schemas = dict(snap.schemas)
-    sid = snap.current_schema_id
-    if plan.changed:
-        sid = str(max(int(s) for s in schemas) + 1)
-        schemas[sid] = target.json()
-    files = {b: list(es) for b, es in snap.files.items()}
-    for b, entries in table.build_entries(new_files, sid, snap).items():
-        files.setdefault(b, []).extend(entries)
-    committed = list(snap.committed)
-    if batch_id is not None:
-        committed.append(_commit_key(job_id, batch_id))
-    new_snap = Snapshot(
-        version=snap.version + 1,
-        key_field=snap.key_field,
-        n_buckets=snap.n_buckets,
-        schema_json=target.json(),
-        schemas=schemas,
-        current_schema_id=sid,
-        files=files,
-        committed=committed,
-        lineage=snap.lineage
-        + [{"version": snap.version + 1, "kind": "append",
-            "job_id": job_id, "batch_id": batch_id}],
-        properties=snap.properties,
-        parent=snap.version,
+    files = md.add_files(snap.files, table.build_entries(
+        new_files, md.schema_id(snap, schema_json), snap
+    ))
+    new_snap = md.next_snapshot(
+        snap, "append", files,
+        commit_key=md.commit_key(job_id, batch_id),
+        schema_json=schema_json,
+        job_id=job_id,
+        batch_id=batch_id,
     )
-    table._commit(new_snap)
+    md.commit_snapshot(table.root, new_snap)
     return MergeResult(
         version=new_snap.version,
         affected_buckets=sorted(int(b) for b in new_files),

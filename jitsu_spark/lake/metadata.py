@@ -2,15 +2,18 @@
 
 A from-scratch, minimal lakehouse metadata layer (the sandbox has no
 Iceberg/Delta jars; at 100 TB the same design maps 1:1 onto Iceberg —
-snapshots = Iceberg snapshots, the O_EXCL version claim = Iceberg's
-optimistic catalog swap, per-file schema ids = Iceberg schema evolution).
+snapshots = Iceberg snapshots, the put-if-absent publish of ``v{N}.json``
+= Iceberg's optimistic catalog swap, per-file schema ids = Iceberg schema
+evolution).
 
 Layout on disk:
 
     <table_root>/
       metadata/
         version-hint.txt       # current version number (tmp+rename, atomic)
-        v{N}.json              # immutable snapshot descriptor, claimed O_EXCL
+        v{N}.json              # immutable snapshot descriptor, always complete
+        tmp-v{N}-<hex>         # a descriptor being published (or a dead
+                               # writer's leftover); never read
       data/
         c-<token>/_jb=<bucket>/part-*.parquet  # files of one commit (hex token)
 
@@ -27,10 +30,20 @@ Snapshot descriptor contents:
 - lineage rows (batch id, source seq range, row counts, wall time) for
   per-partition offset -> snapshot tracing.
 
-Concurrency: the claim of ``v{N}.json`` uses O_CREAT|O_EXCL, so two racing
-writers cannot both commit version N — the loser gets CommitConflict and
-retries on top of the new snapshot (optimistic concurrency, same shape as
-the reference's version-rechecked DDL lock, table_helper.go:74-167).
+Every write op builds its successor with :func:`next_snapshot`, publishes
+it with :func:`commit_snapshot` and repeats the whole op on
+:class:`CommitConflict` through :func:`retry_commit`.
+
+Concurrency: a commit writes its descriptor to a temp file of its own,
+fsyncs it, and hard-links it (``os.link``) to ``v{N}.json``. The link
+fails if the name exists, so two racing writers cannot both commit
+version N — the loser gets CommitConflict and retries on top of the new
+snapshot
+(optimistic concurrency, same shape as the reference's version-rechecked
+DDL lock, table_helper.go:74-167; Delta Lake's put-if-absent log record).
+Because only a complete, fsynced file is ever linked, a ``v{N}.json`` is
+complete the moment it exists: a writer killed at any point leaves either
+nothing visible (an unlinked temp file) or a whole committed descriptor.
 """
 
 from __future__ import annotations
@@ -38,11 +51,12 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from dataclasses import dataclass, field
 
 
 class CommitConflict(Exception):
-    """Another writer claimed this version first; reload and retry."""
+    """Another writer published this version first; reload and retry."""
 
 
 @dataclass
@@ -97,55 +111,40 @@ def _version_path(root: str, version: int) -> str:
     return os.path.join(_metadata_dir(root), f"v{version}.json")
 
 
-def current_version(root: str) -> int:
-    """Current committed version = the hint, rolled FORWARD past any
-    complete ``v{N}.json`` whose hint rename was lost to a crash.
-
-    A writer killed between the O_EXCL claim of v{N}.json and the hint
-    rename would otherwise wedge the table permanently: every future
-    commit rebuilds version N and hits CommitConflict forever. A snapshot
-    counts as committed once its descriptor is complete (valid JSON —
-    truncated in-flight claims fail to parse and stop the roll-forward);
-    the hint is opportunistically repaired, best effort."""
-    with open(_hint_path(root)) as f:
-        v = int(f.read().strip())
-    hint = v
-    if not os.path.exists(_version_path(root, v)):
-        # the hint points at an EXPIRED descriptor: a stalled repairer can
-        # regress the hint below expire_snapshots' horizon after the old
-        # descriptors are deleted. Recover by scanning the metadata dir
-        # for the newest complete descriptor and restarting the
-        # roll-forward there — only this broken case pays the listdir.
-        versions = []
-        for fn in os.listdir(_metadata_dir(root)):
-            if fn.startswith("v") and fn.endswith(".json"):
-                try:
-                    versions.append(int(fn[1:-5]))
-                except ValueError:
-                    continue
-        live = [n for n in sorted(versions, reverse=True) if n > v]
-        for n in live:
+def versions(root: str) -> list[int]:
+    """Version numbers of every ``v{N}.json`` in the metadata dir."""
+    out = []
+    for fn in os.listdir(_metadata_dir(root)):
+        if fn.startswith("v") and fn.endswith(".json"):
             try:
-                with open(_version_path(root, n)) as f:
-                    Snapshot.from_json(f.read())
-            except (OSError, ValueError, TypeError, KeyError):
-                continue  # incomplete claim
-            v = n
-            break
-        else:
+                out.append(int(fn[1:-5]))
+            except ValueError:
+                continue
+    return out
+
+
+def current_version(root: str) -> int:
+    """Current committed version = the hint, rolled FORWARD past every
+    ``v{N}.json`` whose hint write was lost to a crash.
+
+    A descriptor exists only once it is complete (see
+    :func:`commit_snapshot`), so existence is commitment: the roll-forward
+    is a chain of ``stat`` calls and no descriptor is opened. A hint that
+    points at an EXPIRED descriptor (a stalled repairer can regress it
+    below expire_snapshots' horizon after the old descriptors are deleted)
+    restarts the roll-forward at the newest descriptor above it — only
+    that broken case pays the listdir. The hint is opportunistically
+    repaired, best effort."""
+    with open(_hint_path(root)) as f:
+        v = hint = int(f.read().strip())
+    if not os.path.exists(_version_path(root, v)):
+        v = max((n for n in versions(root) if n > hint), default=None)
+        if v is None:
             raise FileNotFoundError(
-                f"no complete snapshot descriptor at or above hint {hint} "
+                f"no snapshot descriptor at or above hint {hint} "
                 f"in {_metadata_dir(root)}"
             )
-    while True:
-        nxt = _version_path(root, v + 1)
-        if not os.path.exists(nxt):
-            break
-        try:
-            with open(nxt) as f:
-                Snapshot.from_json(f.read())
-        except (OSError, ValueError, TypeError, KeyError):
-            break  # incomplete claim (in-flight or dead writer)
+    while os.path.exists(_version_path(root, v + 1)):
         v += 1
     if v != hint:
         _repair_hint(root, hint, v)
@@ -212,28 +211,188 @@ def load_snapshot(root: str, version: int | None = None) -> Snapshot:
 
 
 def commit_snapshot(root: str, snap: Snapshot) -> None:
-    """Atomically publish ``snap`` as the next table version.
+    """Atomically publish ``snap`` as version ``snap.version``
+    (put-if-absent).
 
-    Claims ``v{N}.json`` with O_EXCL (fails fast if a concurrent writer won),
-    then swings the version hint with an atomic rename.
-    """
+    The descriptor goes to a temp name no ``v*.json`` filter matches and
+    is fsynced; ``os.link`` then publishes it under ``v{N}.json``, failing
+    with CommitConflict if a concurrent writer published N first. The
+    temp name is unlinked and the version hint swung forward. A writer
+    killed before the link leaves only the temp file; one killed after it
+    has committed, and readers roll the stale hint forward."""
     snap.timestamp_ms = int(time.time() * 1000)
     path = _version_path(root, snap.version)
+    tmp = os.path.join(
+        _metadata_dir(root), f"tmp-v{snap.version}-{uuid.uuid4().hex}"
+    )
     try:
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
-    except FileExistsError as e:
-        raise CommitConflict(
-            f"version {snap.version} already committed at {path}"
-        ) from e
-    try:
-        with os.fdopen(fd, "w") as f:
+        with open(tmp, "w") as f:
             f.write(snap.to_json())
             f.flush()
             os.fsync(f.fileno())
-    except BaseException:
-        os.unlink(path)
-        raise
+        try:
+            os.link(tmp, path)
+        except FileExistsError as e:
+            raise CommitConflict(
+                f"version {snap.version} already committed at {path}"
+            ) from e
+    finally:
+        try:
+            os.unlink(tmp)
+        except FileNotFoundError:
+            pass
     _write_hint(root, snap.version, blocking=True)
+
+
+COMMIT_RETRIES = 5
+
+
+def retry_commit(op, attempts: int = COMMIT_RETRIES):
+    """Run ``op`` (snapshot, compute, publish) until it commits: on
+    CommitConflict the whole op runs again on a fresh snapshot (optimistic
+    concurrency). Every write op goes through here; single-writer
+    deployments never retry. Without it a conflict raised out of a
+    maintenance call inside foreachBatch (the runner compacts inline)
+    kills the stream even though the op is safely repeatable.
+
+    A short linearly-growing sleep between attempts de-synchronizes
+    racing writers (N writers racing the same version otherwise retry in
+    lockstep and one can starve through the whole budget)."""
+    last: CommitConflict | None = None
+    for attempt in range(attempts):
+        try:
+            return op()
+        except CommitConflict as e:
+            last = e
+            time.sleep(0.05 * attempt)
+    raise last  # type: ignore[misc]
+
+
+def commit_key(job_id: str, batch_id) -> str | None:
+    """Manifest entry of batch ``batch_id`` of ``job_id`` (None: the
+    batch carries no id and is not tracked)."""
+    return None if batch_id is None else f"{job_id}/{batch_id}"
+
+
+def is_committed(snap: Snapshot, job_id: str, batch_id) -> bool:
+    """Exactly-once membership check against the commit manifest — the
+    only one in the engine.
+
+    Besides explicit ``job_id/batch_id`` entries, understands the
+    high-watermark markers ``job_id/<=N`` written by
+    ``maintenance.compact_manifest`` — a marker covers every INTEGER
+    batch id ≤ N (streaming epoch ids are contiguous from 0, which is
+    exactly the contiguity the compactor proves before writing one).
+    Without compaction the manifest grows one entry per batch forever —
+    at 10^6 micro-batches the snapshot JSON rewrite becomes O(stream
+    age) per commit."""
+    if commit_key(job_id, batch_id) in snap.committed:
+        return True
+    try:
+        bid = int(batch_id)
+    except (TypeError, ValueError):
+        return False
+    prefix = f"{job_id}/<="
+    for c in snap.committed:
+        if c.startswith(prefix):
+            try:
+                if bid <= int(c[len(prefix):]):
+                    return True
+            except ValueError:
+                continue
+    return False
+
+
+def schema_id(snap: Snapshot, schema_json: str | None) -> str:
+    """Physical schema id of the files a child of ``snap`` with logical
+    schema ``schema_json`` writes: the current id, or the next free one
+    when ``schema_json`` is given and differs from the current schema."""
+    if schema_json is None or schema_json == snap.schema_json:
+        return snap.current_schema_id
+    return str(max(int(s) for s in snap.schemas) + 1)
+
+
+def add_files(
+    files: dict[str, list[dict]], entries: dict[str, list[dict]]
+) -> dict[str, list[dict]]:
+    """``files`` with ``entries`` appended to their buckets."""
+    return {
+        b: files.get(b, []) + entries.get(b, [])
+        for b in {**files, **entries}
+    }
+
+
+def replace_buckets(
+    files: dict[str, list[dict]], buckets, entries: dict[str, list[dict]]
+) -> dict[str, list[dict]]:
+    """``files`` with each of ``buckets`` rewritten to its ``entries``
+    (dropped when it has none: every row of the bucket was deleted)."""
+    out = dict(files)
+    for b in map(str, buckets):
+        if b in entries:
+            out[b] = entries[b]
+        else:
+            out.pop(b, None)
+    return out
+
+
+def next_snapshot(
+    snap: Snapshot,
+    kind: str,
+    files: dict[str, list[dict]],
+    *,
+    commit_key: str | None = None,
+    schema_json: str | None = None,
+    n_buckets: int | None = None,
+    **lineage_fields,
+) -> Snapshot:
+    """The child of ``snap`` holding ``files``: the next version, with
+    ``snap`` as parent, ``commit_key`` (``job_id/batch_id``) appended to
+    the manifest, the lineage entry ``{version, kind, **lineage_fields}``
+    appended, and — when ``schema_json`` (the evolved logical schema)
+    differs from the current one — a new physical schema id. Key,
+    properties and (unless ``n_buckets``) the bucket count carry over.
+    Metadata only: no I/O, no Spark."""
+    version = snap.version + 1
+    sid = schema_id(snap, schema_json)
+    if sid == snap.current_schema_id:
+        schemas, schema_json = snap.schemas, snap.schema_json
+    else:
+        schemas = {**snap.schemas, sid: schema_json}
+    return Snapshot(
+        version=version,
+        key_field=snap.key_field,
+        n_buckets=snap.n_buckets if n_buckets is None else n_buckets,
+        schema_json=schema_json,
+        schemas=schemas,
+        current_schema_id=sid,
+        files=files,
+        committed=snap.committed + ([commit_key] if commit_key else []),
+        lineage=snap.lineage
+        + [{"version": version, "kind": kind, **lineage_fields}],
+        properties=snap.properties,
+        parent=snap.version,
+    )
+
+
+def evolve_schema(snap: Snapshot, incoming):
+    """Schema evolution of an ``incoming`` Spark schema against ``snap``'s
+    logical schema (merge key frozen, the table's ``schema.max_columns``
+    guard applied). Returns the plan — its ``target`` is what the written
+    rows are aligned to — and the ``schema_json`` to hand to
+    :func:`next_snapshot`: the target's json when columns were added or
+    widened, else None (the schema id stays)."""
+    from pyspark.sql import types as T
+
+    from jitsu_spark.typesys.evolution import max_columns_of, plan_evolution
+
+    plan = plan_evolution(
+        T.StructType.fromJson(json.loads(snap.schema_json)),
+        incoming,
+        frozen=(snap.key_field,),
+        max_columns=max_columns_of(snap.properties),
+    )
+    return plan, plan.target.json() if plan.changed else None
 
 
 def init_table_dir(root: str, snap: Snapshot) -> None:

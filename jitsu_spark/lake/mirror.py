@@ -290,13 +290,19 @@ def sync_aggregate(
         )
         .persist()
     )
+    # one snapshot for the bucket ids and the read that uses them: a
+    # concurrent rebucket must not pair one bucket count with another
+    # snapshot's layout
+    dsnap = dst.snapshot()
     dst_buckets = sorted(
         r["b"]
-        for r in delta.select(dst.bucket_expr(F.col(group_col)).alias("b"))
+        for r in delta.select(
+            dst.bucket_expr(F.col(group_col), snap=dsnap).alias("b")
+        )
         .distinct()
         .collect()
     )
-    old = dst.read(buckets=dst_buckets).select(
+    old = dst.read(buckets=dst_buckets, snap=dsnap).select(
         group_col,
         F.col(count_col).alias("_old_n"),
         *[F.col(c).alias(f"_old_{c}") for c in sum_cols],

@@ -35,7 +35,7 @@ import json
 import os
 import re
 import uuid
-from dataclasses import dataclass, replace
+from dataclasses import dataclass
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from jitsu_spark.lake import metadata as md
-from jitsu_spark.lake.metadata import CommitConflict, Snapshot
+from jitsu_spark.lake.metadata import Snapshot
 from jitsu_spark.typesys.align import align_to_schema, alignment_columns
 
 BUCKET_COL = "_jb"  # internal bucket column used only around writes
@@ -336,20 +336,12 @@ class LakeTable:
                 "changes() needs write.mode=mor (CoW merges rewrite whole "
                 "buckets; row-level changes are not reconstructible)"
             )
-        # verify every in-range commit is a MoR delta merge. Entries are
-        # matched by their stamped "version"; positional lookup remains as
-        # the fallback for pre-stamp tables (full, untruncated lineage
-        # only — after compact_manifest archives old entries, position no
-        # longer encodes the version).
-        by_version = {
-            e["version"]: e for e in snap.lineage if "version" in e
-        }
-        full_positional = len(snap.lineage) == snap.version
+        # verify every in-range commit is a MoR delta merge, matching
+        # lineage entries by their stamped "version"
+        by_version = {e["version"]: e for e in snap.lineage}
         merges_before_fold = 0
         for v in range(since_version + 1, hi + 1):
             entry = by_version.get(v)
-            if entry is None and full_positional and v - 1 < len(snap.lineage):
-                entry = snap.lineage[v - 1]
             if entry is None:
                 raise ValueError(
                     f"changes({since_version}, {hi}): lineage for commit "
@@ -432,31 +424,6 @@ class LakeTable:
                     if fn.endswith(".parquet"):
                         files.setdefault(b, []).append(os.path.join(rel_dir, d, fn))
         return files
-
-    def _commit(self, snap: Snapshot) -> None:
-        md.commit_snapshot(self.root, snap)
-
-    @staticmethod
-    def _retry_commit(fn, max_commit_retries: int = 5):
-        """Optimistic-concurrency wrapper for maintenance commits (same
-        contract as merge_batch's loop): on CommitConflict re-snapshot and
-        recompute the whole op. Without this a conflict raised out of a
-        maintenance call inside foreachBatch (the runner compacts inline)
-        kills the stream even though the op is safely repeatable.
-
-        A short linearly-growing sleep between attempts de-synchronizes
-        racing workers (N writers racing the same version otherwise retry
-        in lockstep and one can starve through the whole budget)."""
-        import time as _time
-
-        last: CommitConflict | None = None
-        for attempt in range(max_commit_retries):
-            try:
-                return fn()
-            except CommitConflict as e:
-                last = e
-                _time.sleep(0.05 * attempt)
-        raise last  # type: ignore[misc]
 
     # -- per-file column stats (Iceberg-manifest-style pruning metadata) ----
 
@@ -543,7 +510,7 @@ class LakeTable:
         file. Analogous to Iceberg rewrite_data_files. Retries on commit
         conflict (concurrent writers), recomputing from a fresh snapshot.
         """
-        return self._retry_commit(lambda: self._compact_once(max_files_per_bucket))
+        return md.retry_commit(lambda: self._compact_once(max_files_per_bucket))
 
     def _compact_once(self, max_files_per_bucket: int) -> CommitResult:
         snap = self.snapshot()
@@ -555,25 +522,11 @@ class LakeTable:
         df = df.withColumn(BUCKET_COL, self.bucket_expr(F.col(key), snap=snap))
         # one file per folded bucket, in at most one task per core
         new_files = self._write_files(self._by_bucket(df, len(frag)))
-        files = dict(snap.files)
-        compact_entries = self.build_entries(
+        files = md.replace_buckets(snap.files, frag, self.build_entries(
             new_files, snap.current_schema_id, snap
-        )
-        for b in frag:
-            if b in compact_entries:
-                files[b] = compact_entries[b]
-            else:
-                files.pop(b, None)
-        new_snap = replace(
-            snap,
-            version=snap.version + 1,
-            files=files,
-            lineage=snap.lineage
-            + [{"version": snap.version + 1, "kind": "compact",
-                "buckets": frag}],
-            parent=snap.version,
-        )
-        self._commit(new_snap)
+        ))
+        new_snap = md.next_snapshot(snap, "compact", files, buckets=frag)
+        md.commit_snapshot(self.root, new_snap)
         return CommitResult(version=new_snap.version)
 
     def rebucket(self, factor: int = 2) -> CommitResult:
@@ -604,7 +557,7 @@ class LakeTable:
         Retries on commit conflict, recomputing from a fresh snapshot."""
         if factor < 2:
             raise ValueError("factor must be >= 2")
-        return self._retry_commit(lambda: self._rebucket_once(factor))
+        return md.retry_commit(lambda: self._rebucket_once(factor))
 
     def _rebucket_once(self, factor: int) -> CommitResult:
         snap = self.snapshot()
@@ -628,17 +581,11 @@ class LakeTable:
             )
         new_files = self._write_files(df)
         entries = self.build_entries(new_files, snap.current_schema_id, snap)
-        new_snap = replace(
-            snap,
-            version=snap.version + 1,
-            n_buckets=new_n,
-            files=entries,
-            lineage=snap.lineage
-            + [{"version": snap.version + 1, "kind": "rebucket",
-                "from": snap.n_buckets, "to": new_n}],
-            parent=snap.version,
+        new_snap = md.next_snapshot(
+            snap, "rebucket", entries, n_buckets=new_n,
+            **{"from": snap.n_buckets, "to": new_n},
         )
-        self._commit(new_snap)
+        md.commit_snapshot(self.root, new_snap)
         return CommitResult(version=new_snap.version)
 
     def history(self) -> list[dict]:

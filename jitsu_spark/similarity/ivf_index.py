@@ -292,15 +292,17 @@ def probe_ivf_index(
         .persist()
     )
     try:
+        snap = index.snapshot()  # bucket ids and read share one layout
         buckets = sorted(
             r["b"]
             for r in q_cells.select(
-                index.bucket_expr(F.col("cell").cast("string")).alias("b")
+                index.bucket_expr(F.col("cell").cast("string"), snap=snap)
+                .alias("b")
             )
             .distinct()
             .collect()
         )
-        cand = index.read(buckets=buckets).join(q_cells, "cell")
+        cand = index.read(buckets=buckets, snap=snap).join(q_cells, "cell")
         if not include_self:
             cand = cand.filter(F.col("_qid") != F.col("vec_id"))
         sims = cand.select(

@@ -361,3 +361,28 @@ def test_sync_redelivery_is_idempotent(spark, tmpdir_path):
     v = index.snapshot().version
     res = sync_ivf_index(src, index)
     assert res.skipped and index.snapshot().version == v
+
+
+def test_probe_loads_index_snapshot_once(spark, tmpdir_path, monkeypatch):
+    """The probe's bucket ids and its pruned read come from ONE snapshot
+    load, so a concurrent rebucket cannot pair one snapshot's bucket
+    count with another's file layout."""
+    from jitsu_spark.lake import metadata as md
+
+    rng = random.Random(31)
+    src = _mk_src(spark, os.path.join(tmpdir_path, "src"))
+    cent = _centroid_frame(spark, [(i, _vec(rng)) for i in range(6)])
+    index = create_ivf_index(
+        spark, os.path.join(tmpdir_path, "ix"), cent, n_buckets=8
+    )
+    _apply(src, spark, [(i, _vec(rng), "u") for i in range(1, 25)], 0)
+    sync_ivf_index(src, index)
+
+    loads = []
+    load = md.load_snapshot
+    monkeypatch.setattr(
+        md, "load_snapshot", lambda root, v=None: loads.append(root) or load(root, v)
+    )
+    queries = spark.createDataFrame([(101, _vec(rng))], VEC_SCHEMA)
+    probe_ivf_index(index, queries, "vec_id", k=3, n_probe=2).collect()
+    assert loads.count(index.root) == 1

@@ -446,3 +446,28 @@ def test_chunk_table_rejects_key_containing_prefix_separator(spark, tmpdir_path)
     merge_batch(src, bad, batch_id="b1", job_id="up")
     with pytest.raises(Exception, match="must not contain"):
         sync_chunks(src, chunks)
+
+
+def test_probe_pins_one_index_snapshot(spark, tmpdir_path, monkeypatch):
+    """The probe loads the index snapshot twice: once for the banding
+    parameters and once shared by the bucket ids and the pruned read (a
+    concurrent rebucket cannot pair two layouts)."""
+    from jitsu_spark.lake import metadata as md
+
+    rng = random.Random(13)
+    src = _mk_src(spark, os.path.join(tmpdir_path, "src"))
+    index = create_lsh_index(
+        spark, os.path.join(tmpdir_path, "ix"),
+        k=K, bands=BANDS, shingle_n=NGRAM, n_buckets=8,
+    )
+    _apply(src, spark, [(i, _text(rng, 12), "u") for i in range(1, 11)], 0)
+    sync_lsh_index(src, index)
+
+    loads = []
+    load = md.load_snapshot
+    monkeypatch.setattr(
+        md, "load_snapshot", lambda root, v=None: loads.append(root) or load(root, v)
+    )
+    probes = spark.createDataFrame([(101, _text(rng, 12))], DOC_SCHEMA)
+    probe_lsh_index(index, probes, "doc_id", "text").collect()
+    assert loads.count(index.root) == 2

@@ -495,3 +495,28 @@ def test_cdc_stream_chains_downstream_aggregate(spark, tmpdir_path):
     assert table.snapshot().version == v_tbl
     assert agg.snapshot().version == v_agg
     assert _agg_state(agg) == _agg_expected(table)
+
+
+def test_sync_aggregate_pins_one_dst_snapshot(spark, tmpdir_path, monkeypatch):
+    """sync_aggregate loads the destination snapshot three times: the
+    sync cursor, ONE load shared by the dirty groups' bucket ids and the
+    pruned read of their current rows (a concurrent rebucket cannot pair
+    two layouts), and the merge."""
+    from jitsu_spark.lake import metadata as md
+    from jitsu_spark.lake.mirror import sync_aggregate
+
+    src = make_mor(spark, tmpdir_path, n_buckets=8)
+    dst = _make_agg_dst(spark, tmpdir_path)
+    merge_batch(src, batch(spark, [
+        ev(1, "i", "a", [1], source="s1"),
+        ev(2, "i", "b", [2, 2], source="s2"),
+    ]), batch_id=0)
+
+    loads = []
+    load = md.load_snapshot
+    monkeypatch.setattr(
+        md, "load_snapshot", lambda root, v=None: loads.append(root) or load(root, v)
+    )
+    sync_aggregate(src, dst, "source", sum_cols=["n_tok"])
+    assert loads.count(dst.root) == 3
+    assert _agg_state(dst) == {"s1": (1, 1), "s2": (1, 2)}

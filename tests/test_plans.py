@@ -506,3 +506,73 @@ def test_cluster_assignment_partial_min_by_no_window(spark):
     assert "Window" not in plan
     assert "partial_min_by" in plan
     assert "BroadcastNestedLoopJoin" in plan
+
+
+def test_commit_kinds_spark_job_counts(spark, tmpdir_path):
+    """Spark jobs per commit kind on small fixed tables, pinned at the
+    counts measured before the write ops shared one commit path
+    (metadata.next_snapshot): snapshot bookkeeping is driver-side and
+    must add no job. The MoR merge is ONE action, which AQE runs as 3
+    jobs (one per query stage); manifest compaction runs none. Every
+    lineage entry of every commit kind carries its version."""
+    from jitsu_spark.lake import LakeTable
+    from jitsu_spark.lake.maintenance import compact_manifest, overwrite_where
+    from jitsu_spark.lake.merge import append_batch, merge_batch
+    from tests.test_merge import TARGET_SCHEMA, batch, ev
+
+    sc = spark.sparkContext
+
+    def jobs(group, op):
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup(group, group)
+        try:
+            op()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def table(name, mode="cow"):
+        return LakeTable.create(
+            spark, os.path.join(tmpdir_path, name), TARGET_SCHEMA, "doc_id",
+            n_buckets=4, properties={"write.mode": mode},
+        )
+
+    rows = batch(spark, [ev(i, "i", f"doc{i}", [i]) for i in range(40)])
+    upd = batch(spark, [ev(100 + i, "u", f"doc{i}", [i, i]) for i in range(0, 40, 3)])
+    cow, mor, app = table("cow"), table("mor", "mor"), table("app")
+    merge_batch(cow, rows, batch_id=0)
+    merge_batch(mor, rows, batch_id=0)
+    tag = os.path.basename(tmpdir_path)
+    got = {
+        "cow_merge": jobs(f"{tag}-cow", lambda: merge_batch(cow, upd, batch_id=1)),
+        "mor_merge": jobs(f"{tag}-mor", lambda: merge_batch(mor, upd, batch_id=1)),
+        "append": jobs(
+            f"{tag}-app", lambda: append_batch(app, rows.drop("seq", "op"), batch_id=0)
+        ),
+        "overwrite_where": jobs(f"{tag}-ow", lambda: overwrite_where(
+            cow, upd.drop("seq", "op"), F.col("n_tok") == 2, chunk_id="c0",
+        )),
+        "compact": jobs(
+            f"{tag}-compact", lambda: mor.compact(max_files_per_bucket=0)
+        ),
+        "rebucket": jobs(f"{tag}-rebucket", lambda: cow.rebucket(factor=2)),
+        "compact_manifest": jobs(
+            f"{tag}-cm", lambda: compact_manifest(mor, keep_recent_batches=0)
+        ),
+    }
+    assert got == {
+        "cow_merge": 7, "mor_merge": 3, "append": 1, "overwrite_where": 2,
+        "compact": 3, "rebucket": 1, "compact_manifest": 0,
+    }, got
+
+    kinds = set()
+    for t in (cow, mor, app):
+        snap = t.snapshot()
+        assert [e["version"] for e in snap.lineage] == list(
+            range(1, snap.version + 1)
+        )
+        kinds |= {e["kind"] for e in snap.lineage}
+    assert kinds == {
+        "merge", "append", "overwrite_where", "compact", "rebucket",
+        "manifest_compact",
+    }
