@@ -883,18 +883,12 @@ def q_cluster_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-balanced curation: assign every embedding to its nearest
     deterministic hash-sampled centroid (64 centroids — count independent
     of corpus size), cap each semantic cluster at 10 members via a salted
-    md5 rank (SemDeDup-style rebalancing).
-
-    r7: assignment runs through the Arrow/numpy matmul kernel
-    (``assign_via="numpy"``) instead of N*C codegen'd cosine folds — the
-    guide-§4.2 "vectorized native library inside the UDF" path, same 6dp
-    argmax contract (equivalence pinned in tests; oracle re-verified)."""
+    md5 rank (SemDeDup-style rebalancing). Assignment runs through the
+    similarity family's Arrow/numpy matmul kernel (6dp argmax)."""
     from jitsu_spark.similarity.curation import cluster_balanced_sample
 
     e = _spread_big(spark, sf_dir, "embeddings", _read(spark, sf_dir, "embeddings").select("vec_id", "embedding"))
-    return cluster_balanced_sample(
-        e, "vec_id", cap=10, n_centroids=64, seed=4, assign_via="numpy"
-    )
+    return cluster_balanced_sample(e, "vec_id", cap=10, n_centroids=64, seed=4)
 
 
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -955,17 +949,13 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-k; r7: the corpus x query similarity block runs
-    through the Arrow/numpy matmul path (via="numpy") instead of Q
-    codegen'd fold expressions per corpus row — same 4dp-rounded surface
-    (oracle re-verified)."""
+    """Exact cosine top-k: the corpus x query similarity block runs
+    through the similarity family's Arrow/numpy matmul kernel (4dp)."""
     from jitsu_spark.similarity import cosine_topk
 
     emb = _spread(spark, _read(spark, sf_dir, "embeddings"))
     queries = emb.filter(F.col("vec_id") < 8)
-    return cosine_topk(
-        queries, emb, "vec_id", "vec_id", "embedding", k=5, via="numpy"
-    )
+    return cosine_topk(queries, emb, "vec_id", "vec_id", "embedding", k=5)
 
 
 def q_ga_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1423,8 +1413,7 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _spread_big(spark, sf_dir, "embeddings", _read(spark, sf_dir, "embeddings"))
     queries = emb.filter(F.col("vec_id") < 8)
     return cosine_topk_lsh(
-        queries, emb, "vec_id", "vec_id", "embedding", k=5, dim=128, n_planes=8,
-        n_probes=4,
+        queries, emb, "vec_id", "vec_id", "embedding", k=5, n_planes=8, n_probes=4,
     )
 
 

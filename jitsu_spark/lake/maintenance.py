@@ -254,8 +254,9 @@ def expire_snapshots(table: LakeTable, keep_last: int = 100) -> list[int]:
     with ``keep_last=1`` the horizon equals ``current``, so a concurrent
     reader that just resolved the previous version as current would lose
     its descriptor mid-read (in-stream expiry should keep the window
-    comfortably above the number of commits a reader may lag). Returns
-    expired versions."""
+    comfortably above the number of commits a reader may lag). Temp
+    descriptors of versions below the horizon, left by killed writers,
+    are swept too. Returns expired versions."""
     if keep_last < 2:
         raise ValueError(
             "keep_last must be >= 2 (a concurrent reader may lag the "
@@ -273,6 +274,7 @@ def expire_snapshots(table: LakeTable, keep_last: int = 100) -> list[int]:
     expired = sorted(v for v in md.versions(table.root) if v < horizon)
     for v in expired:
         os.unlink(os.path.join(table.root, "metadata", f"v{v}.json"))
+    md.sweep_temp_descriptors(table.root, horizon)
     return expired
 
 

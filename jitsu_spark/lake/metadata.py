@@ -13,7 +13,8 @@ Layout on disk:
         version-hint.txt       # current version number (tmp+rename, atomic)
         v{N}.json              # immutable snapshot descriptor, always complete
         tmp-v{N}-<hex>         # a descriptor being published (or a dead
-                               # writer's leftover); never read
+                               # writer's leftover, swept by
+                               # expire_snapshots); never read
       data/
         c-<token>/_jb=<bucket>/part-*.parquet  # files of one commit (hex token)
 
@@ -121,6 +122,26 @@ def versions(root: str) -> list[int]:
             except ValueError:
                 continue
     return out
+
+
+def sweep_temp_descriptors(root: str, below: int) -> None:
+    """Delete the temp descriptors ``tmp-v{N}-*`` with N < ``below``.
+    Writers killed mid-publish leave them behind; no reader opens them.
+    A writer still publishing such an N lost its race: its link then
+    fails and it retries as on any CommitConflict."""
+    meta = _metadata_dir(root)
+    for fn in os.listdir(meta):
+        if not fn.startswith("tmp-v"):
+            continue
+        try:
+            n = int(fn[len("tmp-v"):].split("-", 1)[0])
+        except ValueError:
+            continue
+        if n < below:
+            try:
+                os.unlink(os.path.join(meta, fn))
+            except FileNotFoundError:  # its writer unlinked it first
+                pass
 
 
 def current_version(root: str) -> int:
@@ -232,7 +253,10 @@ def commit_snapshot(root: str, snap: Snapshot) -> None:
             os.fsync(f.fileno())
         try:
             os.link(tmp, path)
-        except FileExistsError as e:
+        except (FileExistsError, FileNotFoundError) as e:
+            # FileNotFoundError: sweep_temp_descriptors removed the temp
+            # file, which it does only below the expiry horizon — so
+            # version N is already committed
             raise CommitConflict(
                 f"version {snap.version} already committed at {path}"
             ) from e

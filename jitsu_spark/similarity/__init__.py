@@ -4,7 +4,6 @@ from jitsu_spark.similarity.ann import (
     embedding_near_dups,
     ivf_topk,
     kmeans_centroids,
-    nearest_centroid,
     sampled_centroids,
 )
 from jitsu_spark.similarity.ivf_index import (
@@ -22,7 +21,6 @@ __all__ = [
     "embedding_near_dups",
     "ivf_topk",
     "kmeans_centroids",
-    "nearest_centroid",
     "sampled_centroids",
     "create_ivf_index",
     "index_assignments",

@@ -1,9 +1,16 @@
 """Similarity search over embedding columns (array<float>).
 
+Every operator that scores a block of vectors against a small side — a
+query batch or a set of coarse centroids — runs ONE kernel,
+:func:`cosine_block`: the small side is collected once on the Spark driver
+(at most :data:`MAX_SIDE_ROWS` rows) and each Arrow batch of the big
+side is scored against it with one numpy matmul. A NULL, zero-norm or
+off-dim vector on either side has no defined similarity: its sim is
+NULL and it is never chosen as a nearest cell. Candidate pairs that a
+join already formed are re-ranked per row with :func:`cosine_expr`,
+which returns NULL for the same degenerate input.
+
 - ``cosine_topk``: exact brute-force top-k — the correctness baseline.
-  Query side is broadcast (small), similarity is a JVM-side
-  ``aggregate``/``zip_with`` fold in double precision (bit-for-bit
-  reproducible against the DuckDB oracle), top-k via a per-query window.
   Cost O(|queries| x |corpus|) — fine for query batches, not for all-pairs.
 - ``cosine_topk_lsh``: the scale path — random-hyperplane LSH. Plane
   matrix is derived from a seed driver-side (tiny, broadcast inside the
@@ -12,6 +19,8 @@
   are generated by equi-joining signature buckets (multi-probe via bit
   flips), then exact cosine re-ranks candidates only. Recall/probe
   trade-off is tested against the brute-force baseline.
+- ``ivf_topk``: IVF — corpus cells and query probe cells both come from
+  :func:`nearest_cells`, then exact cosine re-ranks candidates only.
 - ``embedding_near_dups``: near-duplicate pairs (cosine >= threshold)
   via the same LSH bucketing — the embedding leg of the dedup family.
 """
@@ -20,9 +29,18 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
+
+# Most rows cosine_block collects from its small side. It covers the
+# isqrt(N) default quantizer up to N ~ 10^9 vectors; at dim 768 the
+# float64 matrix every task receives is then ~200 MB, and each Arrow
+# batch's sim block holds batch rows x side rows doubles.
+MAX_SIDE_ROWS = 1 << 15
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -44,55 +62,129 @@ def _norm(a: Column) -> Column:
 
 
 def cosine_expr(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
+    """Per-row cosine of two array columns in double precision; NULL when
+    either vector is NULL or zero-norm (``try_divide``: under ANSI a
+    plain division by a zero norm raises DIVIDE_BY_ZERO)."""
+    return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
 
 
-def cosine_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    query_id: str,
-    corpus_id: str,
-    vec_col: str = "embedding",
-    k: int = 5,
-    include_self: bool = False,
-    via: str = "sql",
-) -> DataFrame:
-    """Exact top-k: (query_id, corpus_id, sim) with sim rounded to 4dp
-    (stable across engines), ties broken by corpus id.
+def cosine_block(
+    side: DataFrame,
+    side_id: str,
+    side_vec: str,
+    names: tuple[str, str],
+    digits: int,
+):
+    """The similarity family's block kernel. Collects ``side`` once on
+    the Spark driver (rows with a NULL id skipped; more than
+    :data:`MAX_SIDE_ROWS` rows raise) and returns ``score(vec, n=None)``,
+    a generator column that explodes each input row into
+    ``(names[0]: side id, names[1]: sim)`` rows, sims rounded to
+    ``digits`` and computed with one numpy matmul per Arrow batch.
 
-    ``via="numpy"`` (r7) computes the |corpus| x |queries| similarity
-    block as ONE Arrow/numpy matmul per batch instead of Q codegen'd
-    fold expressions per corpus row (guide §4.2) — same 4dp-rounded
-    surface; the 4dp round is the established cross-engine float
-    tolerance (the DuckDB oracle already sums in its own order). The
-    query batch is collected driver-side (it is broadcast-sized by
-    contract). Degenerate rows (NULL/zero-norm vectors) yield NULL sims
-    on both paths."""
-    if via == "numpy":
-        sims = _cosine_pairs_numpy(
-            queries, corpus, query_id, corpus_id, vec_col
+    ``n=None`` yields every side row for every input row, NULL sims
+    included. ``n=k`` yields the k best side rows with a defined sim,
+    best first, ties to the smaller side id — so an input row with no
+    defined sim yields no row.
+
+    A NULL, zero-norm or off-dim vector on either side has a NULL sim.
+    The dimension is that of the first non-empty side vector in id
+    order, so one corrupt over-long vector cannot void the rest."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    rows = (
+        side.filter(F.col(side_id).isNotNull())
+        .select(side_id, side_vec)
+        .limit(MAX_SIDE_ROWS + 1)
+        .collect()
+    )
+    if len(rows) > MAX_SIDE_ROWS:
+        raise ValueError(
+            f"cosine_block collects its small side ({side_id!r}) on the "
+            f"Spark driver and takes at most MAX_SIDE_ROWS={MAX_SIDE_ROWS} rows"
         )
-        if not include_self:
-            sims = sims.filter(F.col("_qid") != F.col("_cid"))
-    else:
-        q = F.broadcast(
-            queries.select(
-                F.col(query_id).alias("_qid"), F.col(vec_col).alias("_qvec")
+    rows.sort(key=lambda r: r[0])
+    dim = next((len(r[1]) for r in rows if r[1]), 0)
+    smat = np.full((len(rows), dim), np.nan)
+    for i, r in enumerate(rows):
+        if r[1] is not None and len(r[1]) == dim:
+            smat[i] = r[1]
+    snorm = np.linalg.norm(smat, axis=1)
+    snorm[snorm == 0.0] = np.nan
+    id_type = side.schema[side_id].dataType
+    ids = pa.array([r[0] for r in rows], type=to_arrow_type(id_type))
+    ns = len(rows)
+    ret = T.ArrayType(
+        T.StructType(
+            [T.StructField(names[0], id_type), T.StructField(names[1], T.DoubleType())]
+        )
+    )
+
+    def score(vec: Column, n: int | None = None) -> Column:
+        k = ns if n is None else min(n, ns)
+
+        @F.arrow_udf(ret)
+        def block(vecs: pa.Array) -> pa.Array:
+            nb = len(vecs)
+            keep_in = pc.fill_null(pc.equal(pc.list_value_length(vecs), dim), False)
+            ok = keep_in.to_numpy(zero_copy_only=False)
+            sims = np.full((nb, ns), np.nan)
+            if dim and ok.any():  # dim 0: no side vector is defined
+                flat = pc.list_flatten(vecs.filter(keep_in))
+                mat = flat.to_numpy(zero_copy_only=False).astype(np.float64)
+                mat = mat.reshape(-1, dim)
+                vnorm = np.linalg.norm(mat, axis=1)
+                vnorm[vnorm == 0.0] = np.nan
+                sims[ok] = np.round(
+                    (mat @ smat.T) / np.outer(vnorm, snorm), digits
+                )
+            if n is None:
+                pick = np.tile(np.arange(ns), nb)
+                sim = sims.ravel()
+                counts = np.full(nb, ns)
+            else:
+                at = np.arange(nb)
+                top = np.empty((nb, k), dtype=np.int64)
+                keep = np.empty((nb, k), dtype=bool)
+                free = np.where(np.isnan(sims), -np.inf, sims)
+                for j in range(k):
+                    # argmax returns the first maximum: the smaller side id
+                    top[:, j] = free.argmax(axis=1)
+                    keep[:, j] = free[at, top[:, j]] > -np.inf
+                    free[at, top[:, j]] = -np.inf
+                pick = top[keep]
+                sim = sims[at[:, None], top][keep]
+                counts = keep.sum(axis=1)
+            pairs = pa.StructArray.from_arrays(
+                [
+                    ids.take(pa.array(pick, pa.int64())),
+                    pa.array(sim, from_pandas=True),
+                ],
+                names=list(names),
             )
-        )
-        c = corpus.select(
-            F.col(corpus_id).alias("_cid"), F.col(vec_col).alias("_cvec")
-        )
-        joined = c.crossJoin(q)
-        if not include_self:
-            joined = joined.filter(F.col("_qid") != F.col("_cid"))
-        sims = joined.select(
-            "_qid",
-            "_cid",
-            F.round(cosine_expr(F.col("_qvec"), F.col("_cvec")), 4).alias("sim"),
-        )
-    from pyspark.sql.window import Window
+            offsets = np.concatenate([[0], np.cumsum(counts)])
+            return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), pairs)
 
+        return F.inline(block(vec))
+
+    return score
+
+
+def nearest_cells(centroids: DataFrame):
+    """:func:`cosine_block` against ``(_cent_id, _cent_vec)`` centroids:
+    ``score(vec, n)`` yields each vector's ``n`` nearest cells as
+    ``(cell, cell_sim)``, sims 6dp-rounded before the argmax so float
+    epsilons cannot flip a cell across engines, ties to the smaller
+    centroid id. Corpus, cluster and index assignment take ``n=1``;
+    query probes take ``n=n_probe``."""
+    return cosine_block(
+        centroids, "_cent_id", "_cent_vec", ("cell", "cell_sim"), digits=6
+    )
+
+
+def _top_k(sims: DataFrame, k: int, query_id: str, corpus_id: str) -> DataFrame:
+    """The k best ``(_qid, _cid, sim)`` rows per query, sim descending
+    (NULLs last), ties to the smaller corpus id."""
     w = Window.partitionBy("_qid").orderBy(F.desc("sim"), F.asc("_cid"))
     return (
         sims.withColumn("rank", F.row_number().over(w))
@@ -106,88 +198,37 @@ def cosine_topk(
     )
 
 
-def _cosine_pairs_numpy(
+def rerank_topk(cand: DataFrame, k: int, query_id: str, corpus_id: str) -> DataFrame:
+    """Exact top-k over candidate pairs ``(_qid, _qvec, _cid, _cvec)``;
+    a pair found through several buckets or cells counts once."""
+    sims = cand.select(
+        "_qid",
+        "_cid",
+        F.round(cosine_expr(F.col("_qvec"), F.col("_cvec")), 4).alias("sim"),
+    ).dropDuplicates(["_qid", "_cid"])
+    return _top_k(sims, k, query_id, corpus_id)
+
+
+def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
     query_id: str,
     corpus_id: str,
-    vec_col: str,
+    vec_col: str = "embedding",
+    k: int = 5,
+    include_self: bool = False,
 ) -> DataFrame:
-    """(_qid, _cid, sim) for every corpus x query pair, sim = 4dp-rounded
-    cosine computed as a numpy matmul per Arrow batch. NULL/zero-norm
-    vectors (either side) produce NULL sims, mirroring the SQL fold."""
-    import pandas as pd
-    from pyspark.sql import types as TT
-
-    qrows = queries.select(
-        F.col(query_id).alias("_qid"), F.col(vec_col).alias("_qvec")
-    ).collect()
-    qids = [r["_qid"] for r in qrows]
-    qvecs = [
-        None if r["_qvec"] is None else [float(x) for x in r["_qvec"]]
-        for r in qrows
-    ]
-    # NULL (or off-dim) query vectors become all-NaN rows of the model
-    # dimension — the FIRST valid vector's length, not the max (a single
-    # over-long corrupt vector must not NaN every valid query) — so they
-    # produce NULL sims like the SQL fold instead of crashing np.array
-    # on a ragged input (self-review r7, twice)
-    dim = next((len(v) for v in qvecs if v), 1)
-    qmat = np.full((len(qids), dim), np.nan)
-    for i, v in enumerate(qvecs):
-        if v is not None and len(v) == dim:
-            qmat[i] = v
-    qnorm = np.linalg.norm(qmat, axis=1)
-    qnorm[qnorm == 0.0] = np.nan
-
-    qid_type = queries.schema[query_id].dataType
-    cid_type = corpus.schema[corpus_id].dataType
-    out_schema = TT.StructType(
-        [
-            TT.StructField("_qid", qid_type),
-            TT.StructField("_cid", cid_type),
-            TT.StructField("sim", TT.DoubleType()),
-        ]
-    )
-    nq = len(qids)
-
-    def block(batches):
-        for pdf in batches:
-            if len(pdf) == 0 or nq == 0:
-                continue
-            vecs = pdf["_cvec"]
-            # off-dim corpus vectors get NULL sims too (a dim-mismatched
-            # matmul would otherwise throw in the executor)
-            ok = np.array([v is not None and len(v) == dim for v in vecs])
-            mat = (
-                np.stack([np.asarray(v, dtype=np.float64) for v in vecs[ok]])
-                if ok.any()
-                else np.zeros((0, qmat.shape[1]))
-            )
-            sims = np.full((len(pdf), nq), np.nan)
-            if len(mat):
-                vnorm = np.linalg.norm(mat, axis=1)
-                vnorm[vnorm == 0.0] = np.nan
-                sims[ok] = np.round(
-                    (mat @ qmat.T) / np.outer(vnorm, qnorm), 4
-                )
-            flat = sims.ravel()
-            yield pd.DataFrame(
-                {
-                    "_qid": np.tile(qids, len(pdf)),
-                    "_cid": np.repeat(pdf["_cid"].to_numpy(), nq),
-                    # nullable Float64: NaN (NULL/zero-norm input) must
-                    # cross Arrow as NULL, not NaN — Spark sorts NaN
-                    # ABOVE every double, the opposite of the SQL fold's
-                    # NULLS-LAST behavior in the rank window
-                    "sim": pd.array(flat, dtype="Float64"),
-                }
-            )
-
-    c = corpus.select(
-        F.col(corpus_id).alias("_cid"), F.col(vec_col).alias("_cvec")
-    )
-    return c.mapInPandas(block, out_schema)
+    """Exact top-k: (query_id, corpus_id, sim) with sim rounded to 4dp
+    (the cross-engine float tolerance: the DuckDB oracle sums in its own
+    order), ties broken by corpus id. The |corpus| x |queries| block is
+    :func:`cosine_block` with the query batch as its collected side.
+    Degenerate vectors (NULL, zero-norm, off-dim) get NULL sims, which
+    rank last."""
+    score = cosine_block(queries, query_id, vec_col, ("_qid", "sim"), digits=4)
+    sims = corpus.select(F.col(corpus_id).alias("_cid"), score(F.col(vec_col)))
+    if not include_self:
+        sims = sims.filter(F.col("_qid") != F.col("_cid"))
+    return _top_k(sims, k, query_id, corpus_id)
 
 
 # ---------------------------------------------------------------------------
@@ -250,7 +291,6 @@ def cosine_topk_lsh(
     corpus_id: str,
     vec_col: str = "embedding",
     k: int = 5,
-    dim: int | None = None,  # unused: dim is inferred from the data
     n_planes: int = 10,
     n_probes: int = 4,
     seed: int = 42,
@@ -274,24 +314,7 @@ def cosine_topk_lsh(
         "_qid", "_qvec", F.explode(probes).alias("_sig")
     )
     cand = q_probed.join(c, "_sig").filter(F.col("_qid") != F.col("_cid"))
-    sims = cand.select(
-        "_qid",
-        "_cid",
-        F.round(cosine_expr(F.col("_qvec"), F.col("_cvec")), 4).alias("sim"),
-    ).dropDuplicates(["_qid", "_cid"])
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("_qid").orderBy(F.desc("sim"), F.asc("_cid"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("_qid").alias(query_id + "_q"),
-            F.col("_cid").alias(corpus_id + "_c"),
-            "sim",
-            "rank",
-        )
-    )
+    return rerank_topk(cand, k, query_id, corpus_id)
 
 
 def sampled_centroids(
@@ -326,10 +349,8 @@ def sampled_centroids(
         F.concat_ws("#", F.lit(salt), F.col(id_col).cast("string"))
     )
     return (
-        # a NULL embedding must never become a centroid: its cosine is
-        # NULL against every vector, and (ADVICE r6) the SQL argmax's
-        # struct ordering would sort the NULL sim FIRST, misassigning the
-        # whole corpus to the degenerate centroid
+        # a NULL embedding has no sim against any vector, so it could
+        # never win a cell: it must not take one of the C centroid slots
         corpus.filter(F.col(vec_col).isNotNull())
         .select(
             F.col(id_col).alias("_cent_id"),
@@ -340,127 +361,6 @@ def sampled_centroids(
         .limit(n_centroids)
         .drop("_h")
     )
-
-
-def nearest_centroid(
-    df: DataFrame, id_col: str, vec_col: str, centroids: DataFrame
-) -> DataFrame:
-    """(id, cluster, cluster_sim): each vector's nearest centroid by
-    cosine, 6dp-rounded before the argmax so float epsilons cannot flip
-    assignment across engines; ties break on the smaller centroid id.
-
-    Shape: broadcast nested-loop against the (small) centroid set, then
-    ``min_by(struct)`` groupBy — a declarative aggregate that
-    partial-combines map-side, so the exchange carries ONE row per input
-    vector instead of the N*C sim pairs the row_number-window shape it
-    replaced shuffled (and then sorted)."""
-    sims = (
-        df.select(F.col(id_col), F.col(vec_col).alias("_v"))
-        .crossJoin(F.broadcast(centroids.select("_cent_id", "_cent_vec")))
-        .select(
-            id_col,
-            "_cent_id",
-            F.round(cosine_expr(F.col("_v"), F.col("_cent_vec")), 6).alias("_cs"),
-        )
-        # ADVICE r6: a NULL cosine (zero-norm/NULL centroid or vector)
-        # must not win the argmax — Spark's struct ordering sorts a NULL
-        # -_cs field FIRST, inverting NULLS-LAST oracle semantics and the
-        # numpy kernel (which never selects NaN centroids)
-        .filter(F.col("_cs").isNotNull())
-    )
-    best = sims.groupBy(id_col).agg(
-        F.min_by(
-            F.struct(F.col("_cent_id"), F.col("_cs")),
-            F.struct((-F.col("_cs")).alias("s"), F.col("_cent_id").alias("t")),
-        ).alias("_best")
-    )
-    return best.select(
-        id_col,
-        F.col("_best._cent_id").alias("cluster"),
-        F.col("_best._cs").alias("cluster_sim"),
-    )
-
-
-def nearest_centroid_numpy(
-    df: DataFrame, id_col: str, vec_col: str, centroids: DataFrame
-) -> DataFrame:
-    """(id, cluster, cluster_sim): same contract as
-    :func:`nearest_centroid` (cosine, 6dp-rounded before the argmax,
-    ties to the smaller centroid id) computed as ONE Arrow-vectorized
-    numpy matmul per batch instead of C codegen'd fold expressions per
-    row — the IVF build path for when assignment compute dominates
-    (measured 116 s -> seconds for 100k x 316 at dim 32; BASELINE.md
-    round 6). The centroid matrix is collected driver-side (C x d — the
-    quantizer is a model artifact, bounded) and shipped in the closure.
-
-    Float caveats: numpy's pairwise/SIMD summation can differ from the
-    SQL fold in the last ulps (the shared 6dp rounding absorbs this in
-    practice), and DEGENERATE inputs diverge — a zero-norm centroid is
-    NaN-similar here and never selected (the SQL path now filters NULL
-    sims before its argmax — ADVICE r6); a zero-norm input VECTOR
-    diverges in row membership: this kernel keeps it (assigned to the
-    smallest centroid, cluster_sim NaN) while the SQL path's NULL-sim
-    filter drops the row entirely. For oracle-audited paths keep the SQL
-    variant — this one is the scale path (same trade as
-    ``kmeans_centroids``), and inside the IVF index the kernel choice
-    is pinned at creation so the two never mix on one table."""
-    assign = centroid_assign_udf(centroids)
-    out = df.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col), assign(F.col(vec_col)).alias("_a")
-    )
-    return out.select(
-        id_col,
-        F.col("_a.cluster").alias("cluster"),
-        F.col("_a.cluster_sim").alias("cluster_sim"),
-    )
-
-
-def centroid_assign_udf(centroids: DataFrame):
-    """The Arrow/numpy nearest-centroid kernel behind
-    :func:`nearest_centroid_numpy`, exposed so callers (the IVF index
-    sync) can keep extra columns in the same narrow projection: a
-    pandas UDF vec -> struct(cluster, cluster_sim), 6dp-rounded cosine,
-    ties to the smaller centroid id."""
-    rows = sorted(
-        (
-            (int(r["_cent_id"]), [float(x) for x in r["_cent_vec"]])
-            for r in centroids.select("_cent_id", "_cent_vec").collect()
-        ),
-        key=lambda t: t[0],
-    )
-    cent_ids = np.array([i for i, _ in rows], dtype=np.int64)
-    cmat = np.array([v for _, v in rows], dtype=np.float64)  # (C, d)
-    cnorm = np.linalg.norm(cmat, axis=1)
-    cnorm[cnorm == 0.0] = np.nan  # zero-norm centroid: sim undefined -> NaN
-
-    ret = T.StructType(
-        [
-            T.StructField("cluster", T.LongType()),
-            T.StructField("cluster_sim", T.DoubleType()),
-        ]
-    )
-
-    @F.pandas_udf(ret)
-    def assign(vecs: pd.Series) -> pd.DataFrame:
-        if len(vecs) == 0:
-            return pd.DataFrame({"cluster": [], "cluster_sim": []})
-        mat = np.stack(vecs.to_numpy()).astype(np.float64)  # (B, d)
-        vnorm = np.linalg.norm(mat, axis=1)
-        vnorm[vnorm == 0.0] = np.nan
-        sims = (mat @ cmat.T) / np.outer(vnorm, cnorm)  # (B, C)
-        sims = np.round(sims, 6)
-        # argmax with ties to the SMALLER centroid id: cent_ids ascending
-        # in cmat order, argmax returns the first maximum
-        sims_safe = np.where(np.isnan(sims), -np.inf, sims)
-        best = sims_safe.argmax(axis=1)
-        return pd.DataFrame(
-            {
-                "cluster": cent_ids[best],
-                "cluster_sim": sims[np.arange(len(best)), best],
-            }
-        )
-
-    return assign
 
 
 def kmeans_centroids(
@@ -505,78 +405,35 @@ def ivf_topk(
     deterministic hash-ordered sample whose size is INDEPENDENT of corpus
     size (``n_centroids``, defaulting to isqrt(N)), hence
     oracle-checkable in pure SQL; swap in :func:`kmeans_centroids` for
-    tighter cells with the same cell-assignment plumbing. Corpus cell
-    assignment is :func:`nearest_centroid` — broadcast against the C-row
-    centroid set, argmax via a partial-combining ``min_by`` aggregate, so
-    compute is the standard O(N*C*d) IVF build cost and the shuffle is
-    O(N) rows (never the N*C pairs); the vectorized-numpy path of
-    ``with_lsh_signature`` is the drop-in speedup if build time
-    dominates. Cell sims are rounded to 6dp before the argmax so
-    float-summation epsilons cannot flip cell assignment across
-    engines."""
-    from pyspark.sql.window import Window
-
+    tighter cells with the same cell-assignment plumbing. Corpus cells
+    and query probe cells both come from :func:`nearest_cells` (one
+    matmul per Arrow batch against the collected centroids, no shuffle),
+    so a vector without a defined sim — NULL, zero-norm or off-dim — is
+    in no cell and is neither a candidate nor a query."""
     if centroids is not None:  # e.g. kmeans_centroids(...)
         cent = centroids.select("_cent_id", "_cent_vec")
     else:
         cent = sampled_centroids(corpus, corpus_id, vec_col, n_centroids)
 
-    # rows without an embedding are not searchable: drop them instead of
-    # letting NULL sims ride the rank window into the top-k (also keeps
-    # this surface identical to the maintained-index probe, which never
-    # stores NULL vectors)
-    corpus = corpus.filter(F.col(vec_col).isNotNull())
-    queries = queries.filter(F.col(vec_col).isNotNull())
-    c = corpus.select(F.col(corpus_id).alias("_cid"), F.col(vec_col).alias("_v"))
-    c_cells = nearest_centroid(c, "_cid", "_v", cent).select(
-        "_cid", F.col("cluster").alias("_cell")
-    )
-    c_in = c.join(c_cells, "_cid")
-
-    # query side: top-n_probe cells per query — the query batch is small,
-    # so the row_number window over |Q|*C pairs is bounded and cheap.
-    q = queries.select(F.col(query_id).alias("_qid"), F.col(vec_col).alias("_v"))
-    q_sims = q.crossJoin(F.broadcast(cent)).select(
-        "_qid",
-        "_cent_id",
-        F.round(cosine_expr(F.col("_v"), F.col("_cent_vec")), 6).alias("_cs"),
-    )
-    wq = Window.partitionBy("_qid").orderBy(F.desc("_cs"), F.asc("_cent_id"))
-    q_cells = (
-        q_sims.withColumn("_cr", F.row_number().over(wq))
-        .filter(F.col("_cr") <= n_probe)
-        .select("_qid", F.col("_cent_id").alias("_cell"))
-    )
-    q_in = q.join(q_cells, "_qid")
-
-    cand = (
-        q_in.withColumnRenamed("_v", "_qvec")
-        .join(c_in.withColumnRenamed("_v", "_cvec"), "_cell")
-        .filter(F.col("_qid") != F.col("_cid"))
-    )
-    sims = cand.select(
-        "_qid",
-        "_cid",
-        F.round(cosine_expr(F.col("_qvec"), F.col("_cvec")), 4).alias("sim"),
-    ).dropDuplicates(["_qid", "_cid"])
-    w = Window.partitionBy("_qid").orderBy(F.desc("sim"), F.asc("_cid"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("_qid").alias(query_id + "_q"),
-            F.col("_cid").alias(corpus_id + "_c"),
-            "sim",
-            "rank",
-        )
-    )
+    cells = nearest_cells(cent)
+    c = corpus.select(
+        F.col(corpus_id).alias("_cid"),
+        F.col(vec_col).alias("_cvec"),
+        cells(F.col(vec_col), 1),
+    ).drop("cell_sim")
+    q = queries.select(
+        F.col(query_id).alias("_qid"),
+        F.col(vec_col).alias("_qvec"),
+        cells(F.col(vec_col), n_probe),
+    ).drop("cell_sim")
+    cand = q.join(c, "cell").filter(F.col("_qid") != F.col("_cid"))
+    return rerank_topk(cand, k, query_id, corpus_id)
 
 
 def embedding_near_dups(
     df: DataFrame,
     id_col: str,
     vec_col: str = "embedding",
-    dim: int | None = None,  # unused: dim is inferred from the data
     threshold: float = 0.9,
     n_planes: int = 10,
     seed: int = 42,

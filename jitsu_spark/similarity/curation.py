@@ -6,18 +6,19 @@ rebalances it — capping over-represented semantic clusters instead of
 sampling uniformly. This module provides the two primitives:
 
 - :func:`assign_clusters` — every vector's nearest coarse centroid
-  (same deterministic hash-sampled quantizer as ``ivf_topk``, so the
-  assignment is oracle-checkable in pure SQL; swap in
-  ``kmeans_centroids`` for tighter cells);
+  (same deterministic hash-sampled quantizer and the same
+  ``nearest_cells`` kernel as ``ivf_topk``, so the assignment is
+  oracle-checkable in pure SQL; swap in ``kmeans_centroids`` for
+  tighter cells);
 - :func:`cluster_balanced_sample` — keep at most ``cap`` vectors per
   cluster, chosen by a salted md5-uniform rank (deterministic across
   reruns/partitionings, unbiased within cluster).
 
 Scale shape: the centroid count is INDEPENDENT of corpus size
 (``n_centroids``, default isqrt(N) via ``sampled_centroids``) and the
-argmax is a partial-combining ``min_by`` aggregate, so assignment costs
-O(N*C*d) compute with an O(N)-row shuffle — never the N*C pair shuffle
-of a row_number window. The per-cluster cap is a window partitioned by
+argmax runs inside the kernel's per-batch matmul, so assignment costs
+O(N*C*d) compute and no shuffle — never the N*C pair shuffle of a
+row_number window. The per-cluster cap is a window partitioned by
 cluster; with the sqrt(N) default each partition is ~sqrt(N) rows, so
 the sort parallelizes across clusters and no reducer sees the corpus.
 """
@@ -28,11 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from jitsu_spark.similarity.ann import (
-    nearest_centroid,
-    nearest_centroid_numpy,
-    sampled_centroids,
-)
+from jitsu_spark.similarity.ann import nearest_cells, sampled_centroids
 
 
 def assign_clusters(
@@ -41,23 +38,17 @@ def assign_clusters(
     vec_col: str = "embedding",
     n_centroids: int | None = None,
     centroids: DataFrame | None = None,
-    assign_via: str = "sql",
 ) -> DataFrame:
     """(id, cluster, cluster_sim): each vector's nearest centroid by
     cosine (6dp-rounded before the argmax so float epsilons cannot flip
-    assignment across engines; ties break on centroid id).
-
-    ``assign_via="numpy"`` computes the assignment through the Arrow
-    matmul kernel (``nearest_centroid_numpy``) instead of C codegen'd
-    fold expressions per row — the same contract and the same 6dp-rounded
-    argmax (equivalence pinned in tests), measured ~70x faster on the
-    O(N*C*d) build cost (BASELINE.md r6); degenerate-input caveats in the
-    kernel's docstring."""
+    assignment across engines; ties break on the smaller centroid id).
+    A vector without a defined sim (NULL, zero-norm, off-dim) is in no
+    cluster and yields no row."""
     if centroids is None:
         centroids = sampled_centroids(df, id_col, vec_col, n_centroids)
-    if assign_via == "numpy":
-        return nearest_centroid_numpy(df, id_col, vec_col, centroids)
-    return nearest_centroid(df, id_col, vec_col, centroids)
+    return df.select(
+        F.col(id_col), nearest_cells(centroids)(F.col(vec_col), 1)
+    ).withColumnsRenamed({"cell": "cluster", "cell_sim": "cluster_sim"})
 
 
 def cap_clusters(
@@ -100,12 +91,9 @@ def cluster_balanced_sample(
     n_centroids: int | None = None,
     seed: int = 0,
     centroids: DataFrame | None = None,
-    assign_via: str = "sql",
 ) -> DataFrame:
     """Cap every cluster at ``cap`` members over a fresh assignment pass.
     Returns (id, cluster, pick_rank) for the survivors — the rebalanced
     corpus."""
-    assigned = assign_clusters(
-        df, id_col, vec_col, n_centroids, centroids, assign_via=assign_via
-    )
+    assigned = assign_clusters(df, id_col, vec_col, n_centroids, centroids)
     return cap_clusters(assigned, id_col, cap=cap, seed=seed)

@@ -21,11 +21,11 @@ The coarse centroids are STRUCTURAL: every row was assigned under them,
 so they persist as a sidecar parquet under ``<root>/aux/centroids``
 (outside the snapshot-managed ``data/`` walk) and are read back by
 ``load_ivf_index`` — never re-supplied by a caller (a mismatch would
-retract nothing and probe the wrong cells). Assignment is shared with
-the batch operator's shape (broadcast centroids + partial-combining
-``min_by`` argmax, sims 6dp-rounded before the argmax) — identical
-cells by construction, so the ``ivf_probe`` gate query answers the SAME
-oracle as the batch ``ivf_topk``.
+retract nothing and probe the wrong cells). Assignment and probing run
+the batch operator's kernel (``ann.nearest_cells``: one matmul per
+Arrow batch against the collected centroids, sims 6dp-rounded before
+the argmax) — identical cells by construction, so the ``ivf_probe``
+gate query answers the SAME oracle as the batch ``ivf_topk``.
 
 Reference parity note: the reference engine has no ANN surface; this is
 part of the training-data extension family (SURVEY.md LLM-ops), design
@@ -44,7 +44,7 @@ from pyspark.sql import types as T
 
 from jitsu_spark.lake.mirror import MirrorResult, WindowImages, sync_derived_rows
 from jitsu_spark.lake.table import BUCKET_PREFIX_SEP_PROP, LakeTable
-from jitsu_spark.similarity.ann import cosine_expr
+from jitsu_spark.similarity.ann import nearest_cells, rerank_topk
 
 SEP = "#"  # never appears inside a LONG cell id rendered as decimal
 
@@ -58,7 +58,6 @@ def create_ivf_index(
     centroids: DataFrame,
     key_type: T.DataType = T.LongType(),
     n_buckets: int = 16,
-    assign_via: str = "sql",
 ) -> LakeTable:
     """Create the index table with a FROZEN coarse quantizer.
 
@@ -66,18 +65,7 @@ def create_ivf_index(
     — e.g. ``ann.sampled_centroids`` (deterministic, SQL-oracle-able) or
     ``ann.kmeans_centroids`` (tighter cells). It is materialized to the
     sidecar BEFORE the table commit (overwrite mode, so a crash between
-    the two is retryable — the table dir is what ``load`` keys on).
-
-    ``assign_via`` ("sql" or "numpy") is STRUCTURAL, exactly like the
-    centroids: retraction recomputes the pre-image's cells, so every
-    sync must use the kernel the stored rows were assigned under — the
-    two kernels can differ in the last ulps at 6dp rounding boundaries,
-    and a mixed history would leave permanently stale rows (delete
-    targeting a cell the stored row isn't in). It persists as a table
-    property; ``sync_ivf_index`` reads it back and refuses an
-    explicit override that disagrees."""
-    if assign_via not in ("sql", "numpy"):
-        raise ValueError(f"unknown assignment path {assign_via!r}")
+    the two is retryable — the table dir is what ``load`` keys on)."""
     # ADVICE r6: creating over an EXISTING index must fail BEFORE touching
     # the sidecar — the old code overwrote the frozen quantizer (stored
     # rows were assigned under it) and only then hit CommitConflict,
@@ -113,9 +101,7 @@ def create_ivf_index(
         properties={
             "write.mode": "mor",
             BUCKET_PREFIX_SEP_PROP: SEP,
-            PARAMS_PROP: json.dumps(
-                {"n_centroids": int(n_cent), "assign_via": assign_via}
-            ),
+            PARAMS_PROP: json.dumps({"n_centroids": int(n_cent)}),
         },
     )
 
@@ -132,103 +118,40 @@ def index_centroids(index: LakeTable) -> DataFrame:
     return index.spark.read.parquet(os.path.join(index.root, _CENTROID_DIR))
 
 
-def _assign(
-    rows: DataFrame, key: str, vec_col: str, cent: DataFrame,
-    numpy_udf=None,
-) -> DataFrame:
-    """(key, vec, cell, cell_sim): nearest frozen centroid by cosine —
-    sims 6dp-rounded before the argmax so float epsilons cannot flip a
-    cell across engines, ties to the smaller centroid id (same contract
-    as ``ann.nearest_centroid``). NULL/absent vectors index nothing.
-
-    Default: broadcast against the C-row centroid set, argmax via a
-    partial-combining ``min_by`` — one exchanged row per vector, never
-    the N*C sim pairs; pure-SQL, oracle-auditable. With ``numpy_udf`` (a
-    prebuilt ``ann.centroid_assign_udf`` — built ONCE per sync, not per
-    derive call): ONE Arrow-vectorized matmul per batch — the scale
-    path when assignment compute dominates (large C·d); same 6dp
-    contract, but numpy's summation order can differ from the SQL fold
-    in the last ulps (and zero-norm inputs are never selected, where
-    the SQL NULL ordering may select them — degenerate vectors)."""
-    if numpy_udf is not None:
-        out = (
-            rows.select(F.col(key), F.col(vec_col).alias("_v"))
-            .filter(F.col("_v").isNotNull())
-            .select(key, "_v", numpy_udf(F.col("_v")).alias("_a"))
-        )
-        return out.select(
-            F.col(key),
-            F.col("_v").alias("_vec"),
-            F.col("_a.cluster").alias("cell"),
-            F.col("_a.cluster_sim").alias("cell_sim"),
-        )
-    sims = (
-        rows.select(F.col(key), F.col(vec_col).alias("_v"))
-        .filter(F.col(vec_col).isNotNull())
-        .crossJoin(F.broadcast(cent.select("_cent_id", "_cent_vec")))
-        .select(
-            key,
-            "_v",
-            "_cent_id",
-            F.round(cosine_expr(F.col("_v"), F.col("_cent_vec")), 6).alias(
-                "_cs"
-            ),
-        )
-    )
-    best = sims.groupBy(key).agg(
-        F.min_by(
-            F.struct(F.col("_cent_id"), F.col("_cs")),
-            F.struct((-F.col("_cs")).alias("s"), F.col("_cent_id").alias("t")),
-        ).alias("_best"),
-        F.first("_v").alias("_vec"),
-    )
-    return best.select(
-        F.col(key),
-        F.col("_vec"),
-        F.col("_best._cent_id").alias("cell"),
-        F.col("_best._cs").alias("cell_sim"),
-    )
-
-
 def sync_ivf_index(
     src: LakeTable,
     index: LakeTable,
     vec_col: str = "embedding",
     job_id: str = "ivf-index",
     images: WindowImages | None = None,
-    assign_via: str | None = None,
 ) -> MirrorResult:
-    """Advance the index to the upstream's current version — the frozen
-    centroids AND the assignment kernel come from the index's own
-    metadata (both are structural: retraction recomputes the pre-image's
-    cells, so a kernel mismatch could delete against cells the stored
-    rows aren't in). Pass a shared ``images`` when syncing several views
-    of the same upstream in one run (the window scan/reads run once
-    across all of them). ``assign_via`` may be passed only as a
-    consistency assertion — a value that disagrees with the index's
-    persisted kernel raises."""
-    pinned = json.loads(index.snapshot().properties[PARAMS_PROP]).get(
-        "assign_via", "sql"
-    )
-    if assign_via is not None and assign_via != pinned:
+    """Advance the index to the upstream's current version under the
+    frozen centroids read from the index's own sidecar: retraction
+    recomputes the pre-image's cell, so it must be the cell the stored
+    row was assigned under. A vector without a defined sim (NULL,
+    zero-norm, off-dim) indexes nothing. Pass a shared ``images`` when
+    syncing several views of the same upstream in one run (the window
+    scan/reads run once across all of them).
+
+    An index whose params name the ``"sql"`` kernel was assigned by the
+    removed SQL cosine fold, whose cells can differ in the last ulps at
+    6dp rounding boundaries; it is refused: rebuild it."""
+    params = json.loads(index.snapshot().properties[PARAMS_PROP])
+    if "sql" in params.values():
         raise ValueError(
-            f"index at {index.root} was created with assign_via="
-            f"{pinned!r}; syncing with {assign_via!r} would retract "
-            "against the wrong cells on rounding-boundary vectors"
+            f"index at {index.root} was assigned by the removed SQL cosine "
+            "kernel; syncing it could retract against the wrong cells — "
+            "rebuild it with create_ivf_index"
         )
     key = src.snapshot().key_field
-    cent = index_centroids(index)
-    numpy_udf = None
-    if pinned == "numpy":
-        from jitsu_spark.similarity.ann import centroid_assign_udf
-
-        # built ONCE per sync: derive() runs twice (pre + post image),
-        # and the UDF construction collects the C x d centroid set
-        numpy_udf = centroid_assign_udf(cent)
+    # built ONCE per sync: derive() runs twice (pre + post image), and
+    # the kernel collects the C x d centroid set
+    cells = nearest_cells(index_centroids(index))
 
     def derive(rows: DataFrame) -> DataFrame:
-        a = _assign(rows, key, vec_col, cent, numpy_udf=numpy_udf)
-        return a.select(
+        return rows.select(
+            F.col(key), F.col(vec_col), cells(F.col(vec_col), 1)
+        ).select(
             F.concat(
                 F.col("cell").cast("string"),
                 F.lit(SEP),
@@ -236,7 +159,7 @@ def sync_ivf_index(
             ).alias("ik"),
             "cell",
             F.col(key).alias("vec_id"),
-            F.col("_vec").cast(T.ArrayType(T.FloatType())).alias("vec"),
+            F.col(vec_col).cast(T.ArrayType(T.FloatType())).alias("vec"),
         )
 
     return sync_derived_rows(src, index, derive, job_id=job_id, images=images)
@@ -260,35 +183,20 @@ def probe_ivf_index(
     include_self: bool = False,
 ) -> DataFrame:
     """ANN top-k against the maintained index: score each query against
-    the frozen centroids (broadcast; the row_number window is over
-    |Q|*C pairs — bounded by the query batch), take its ``n_probe``
-    nearest cells, then read ONLY those cells' buckets (metadata-level
-    prefix prune — O(candidates), not O(corpus)) and exact-cosine
-    re-rank. Output matches the batch ``ivf_topk`` surface:
+    the frozen centroids (``ann.nearest_cells``; a query without a
+    defined sim probes nothing), take its ``n_probe`` nearest cells,
+    then read ONLY those cells' buckets (metadata-level prefix prune —
+    O(candidates), not O(corpus)) and exact-cosine re-rank. Output
+    matches the batch ``ivf_topk`` surface:
     ``(<query_id>_q, <corpus_id_name>_c, sim, rank)``."""
-    from pyspark.sql.window import Window
-
-    cent = index_centroids(index)
-    # ADVICE r6: a NULL query embedding yields NULL sims that would still
-    # receive row_number ranks; drop it up front, mirroring ivf_topk —
-    # keeps the probe==batch-oracle contract on degenerate data
-    queries = queries.filter(F.col(vec_col).isNotNull())
-    q = queries.select(
-        F.col(query_id).alias("_qid"), F.col(vec_col).alias("_qvec")
-    )
-    q_sims = q.crossJoin(F.broadcast(cent)).select(
-        "_qid",
-        "_qvec",
-        "_cent_id",
-        F.round(cosine_expr(F.col("_qvec"), F.col("_cent_vec")), 6).alias(
-            "_cs"
-        ),
-    )
-    wq = Window.partitionBy("_qid").orderBy(F.desc("_cs"), F.asc("_cent_id"))
+    cells = nearest_cells(index_centroids(index))
     q_cells = (
-        q_sims.withColumn("_cr", F.row_number().over(wq))
-        .filter(F.col("_cr") <= n_probe)
-        .select("_qid", "_qvec", F.col("_cent_id").alias("cell"))
+        queries.select(
+            F.col(query_id).alias("_qid"),
+            F.col(vec_col).alias("_qvec"),
+            cells(F.col(vec_col), n_probe),
+        )
+        .drop("cell_sim")
         .persist()
     )
     try:
@@ -302,27 +210,16 @@ def probe_ivf_index(
             .distinct()
             .collect()
         )
-        cand = index.read(buckets=buckets, snap=snap).join(q_cells, "cell")
-        if not include_self:
-            cand = cand.filter(F.col("_qid") != F.col("vec_id"))
-        sims = cand.select(
-            "_qid",
-            F.col("vec_id").alias("_cid"),
-            F.round(cosine_expr(F.col("_qvec"), F.col("vec")), 4).alias(
-                "sim"
-            ),
-        ).dropDuplicates(["_qid", "_cid"])
-        w = Window.partitionBy("_qid").orderBy(F.desc("sim"), F.asc("_cid"))
-        out = (
-            sims.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+        cand = (
+            index.read(buckets=buckets, snap=snap)
             .select(
-                F.col("_qid").alias(query_id + "_q"),
-                F.col("_cid").alias(corpus_id_name + "_c"),
-                "sim",
-                "rank",
+                "cell", F.col("vec_id").alias("_cid"), F.col("vec").alias("_cvec")
             )
+            .join(q_cells, "cell")
         )
+        if not include_self:
+            cand = cand.filter(F.col("_qid") != F.col("_cid"))
+        out = rerank_topk(cand, k, query_id, corpus_id_name)
         out = out.localCheckpoint(eager=True)
     finally:
         q_cells.unpersist()

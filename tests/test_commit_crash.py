@@ -1,8 +1,9 @@
 """Kill matrix for the snapshot publish: a committer process SIGKILLed at
 each point of ``commit_snapshot`` must leave a table that (1) reads the
-last committed state, (2) accepts the next commit, and (3) applies the
+last committed state, (2) accepts the next commit, (3) applies the
 killed batch exactly once — skipped on re-run if and only if its
-descriptor was published."""
+descriptor was published — and (4) loses the killed writer's temp
+descriptor to the next ``expire_snapshots``."""
 
 from __future__ import annotations
 
@@ -14,6 +15,7 @@ import sys
 import pytest
 
 from jitsu_spark.lake import metadata as md
+from jitsu_spark.lake.maintenance import expire_snapshots
 from jitsu_spark.lake.merge import merge_batch
 from tests.test_merge import batch, ev, make_table
 
@@ -104,3 +106,49 @@ def test_killed_publish_recovers_exactly_once(spark, tmpdir_path, point, linked)
     assert _rows(t) == oracle
     assert merge_batch(t, killed, batch_id=7, job_id="kill").skipped
     assert _rows(t) == oracle
+
+    # (4) one more commit puts the temp descriptor below the horizon of
+    # expire_snapshots(keep_last=2), which sweeps it
+    assert _temps(t.root) == [v + 1]
+    merge_batch(t, batch(spark, [ev(4, "i", "d", [4])]), batch_id=9, job_id="kill")
+    oracle["d"] = [4]
+    expire_snapshots(t, keep_last=2)
+    assert _temps(t.root) == []
+    assert _rows(t) == oracle
+    merge_batch(t, batch(spark, [ev(5, "i", "e", [5])]), batch_id=10, job_id="kill")
+    oracle["e"] = [5]
+    assert _rows(t) == oracle
+
+
+def _temps(root: str) -> list[int]:
+    """Versions of the temp descriptors in the metadata dir."""
+    return sorted(
+        int(fn[len("tmp-v"):].split("-")[0])
+        for fn in os.listdir(os.path.join(root, "metadata"))
+        if fn.startswith("tmp-v")
+    )
+
+
+def test_swept_temp_descriptor_is_a_conflict(spark, tmpdir_path, monkeypatch):
+    """The sweep removes only temp descriptors below the expiry horizon,
+    so a writer whose temp file vanished before its link lost the race
+    for that version: the publish raises CommitConflict (which
+    retry_commit retries), not FileNotFoundError."""
+    t = make_table(spark, tmpdir_path, n_buckets=4)
+    merge_batch(t, batch(spark, [ev(1, "i", "a", [1])]), batch_id=0, job_id="j")
+    v = md.current_version(t.root)
+    snap = md.load_snapshot(t.root)
+    snap = md.next_snapshot(snap, "merge", snap.files)
+    link = os.link
+
+    def sweep_then_link(src, dst):  # expiry runs between write and link
+        os.unlink(src)
+        link(src, dst)
+
+    monkeypatch.setattr(os, "link", sweep_then_link)
+    with pytest.raises(md.CommitConflict):
+        md.commit_snapshot(t.root, snap)
+    monkeypatch.setattr(os, "link", link)
+    assert md.current_version(t.root) == v and _temps(t.root) == []
+    merge_batch(t, batch(spark, [ev(2, "i", "b", [2])]), batch_id=1, job_id="j")
+    assert _rows(t) == {"a": [1], "b": [2]}

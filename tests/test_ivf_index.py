@@ -1,11 +1,15 @@
 """Incrementally maintained IVF ANN index (similarity/ivf_index.py) vs
 full recomputes after every upstream batch — inserts, cell-moving
 updates (stale-cell retraction), deletes, probe-vs-batch-ivf_topk
-equality, persisted centroids, NULL vectors, and redelivery idempotence.
+equality, persisted centroids, NULL vectors, and redelivery idempotence;
+the cell kernel against a pure-Python brute force, and degenerate
+(zero-norm, NULL, off-dim) vectors across the whole similarity family.
 """
 
 from __future__ import annotations
 
+import json
+import math
 import os
 import random
 
@@ -15,8 +19,10 @@ from pyspark.sql import types as T
 
 from jitsu_spark.lake.merge import merge_batch
 from jitsu_spark.lake.table import LakeTable
-from jitsu_spark.similarity.ann import ivf_topk, nearest_centroid
+from jitsu_spark.similarity.ann import ivf_topk
+from jitsu_spark.similarity.curation import assign_clusters
 from jitsu_spark.similarity.ivf_index import (
+    PARAMS_PROP,
     create_ivf_index,
     index_assignments,
     index_centroids,
@@ -61,12 +67,40 @@ def _centroid_frame(spark, vecs):
     )
 
 
+def _cos(a, b):
+    na = math.sqrt(math.fsum(x * x for x in a))
+    nb = math.sqrt(math.fsum(x * x for x in b))
+    if na == 0.0 or nb == 0.0:
+        return None
+    return math.fsum(x * y for x, y in zip(a, b)) / (na * nb)
+
+
+def _brute_assign(rows, cent):
+    """Independent reference for the cell kernel, in pure Python:
+    {(vec_id, cell, cell_sim)} with the 6dp-rounded cosine, ties to the
+    smaller centroid id; a vector without a defined sim gets no cell."""
+    cents = sorted((r["_cent_id"], r["_cent_vec"]) for r in cent.collect())
+    out = set()
+    for vid, vec in rows:
+        if vec is None:
+            continue
+        sims = [
+            (round(s, 6), cid)
+            for cid, cv in cents
+            if (s := _cos(vec, cv)) is not None
+        ]
+        if sims:
+            sim, cid = min(sims, key=lambda t: (-t[0], t[1]))
+            out.add((vid, cid, sim))
+    return out
+
+
 def _expected_assign(src, cent):
-    cur = src.read().select("vec_id", "embedding")
-    return {
-        (r["vec_id"], r["cluster"])
-        for r in nearest_centroid(cur, "vec_id", "embedding", cent).collect()
-    }
+    rows = [
+        (r["vec_id"], r["embedding"])
+        for r in src.read().select("vec_id", "embedding").collect()
+    ]
+    return {(vid, cid) for vid, cid, _ in _brute_assign(rows, cent)}
 
 
 def _actual_assign(index):
@@ -203,20 +237,18 @@ def test_null_vector_indexes_nothing(spark, tmpdir_path):
     assert index.read().count() == 0
 
 
-def test_numpy_assignment_matches_sql_path(spark, tmpdir_path):
-    """The Arrow/numpy matmul kernel must agree with the SQL cosine fold
-    under the shared 6dp-rounding contract — cells AND sims — both as a
-    batch operator (nearest_centroid_numpy) and through the index sync
-    (assign_via='numpy'), including NULL vectors and a tie."""
-    from jitsu_spark.similarity.ann import nearest_centroid_numpy
-
+def test_kernel_assignment_matches_brute_force(spark, tmpdir_path):
+    """The Arrow/numpy cell kernel must agree with a pure-Python cosine
+    under the 6dp-rounding contract — cells AND sims — both as a batch
+    operator (assign_clusters) and through the index sync, including
+    NULL vectors and a tie. An index whose params name the removed
+    "sql" kernel is refused."""
     rng = random.Random(31)
     src = _mk_src(spark, os.path.join(tmpdir_path, "src"))
     base_cents = [(i, _vec(rng)) for i in range(5)]
     # centroid 5 DUPLICATES centroid 0: cells 0 and 5 score identically
     # for every vector, so any vector nearest to that direction
-    # exercises the tie-break (must pick the smaller id, 0) in BOTH
-    # kernels
+    # exercises the tie-break (must pick the smaller id, 0)
     cent = _centroid_frame(spark, base_cents + [(5, base_cents[0][1])])
     rows = [(i, _vec(rng), "u") for i in range(1, 41)] + [
         (41, None, "u"),
@@ -227,42 +259,44 @@ def test_numpy_assignment_matches_sql_path(spark, tmpdir_path):
     _apply(src, spark, rows, 0)
     cur = src.read().select("vec_id", "embedding")
 
-    # batch comparison on the defined domain (nearest_centroid_numpy
-    # skips NULL vectors; the SQL batch operator emits a degenerate row)
-    defined = cur.filter(F.col("embedding").isNotNull())
     got = {
         (r["vec_id"], r["cluster"], r["cluster_sim"])
-        for r in nearest_centroid_numpy(
-            defined, "vec_id", "embedding", cent
+        for r in assign_clusters(
+            cur, "vec_id", "embedding", centroids=cent
         ).collect()
     }
-    want = {
-        (r["vec_id"], r["cluster"], r["cluster_sim"])
-        for r in nearest_centroid(
-            defined, "vec_id", "embedding", cent
-        ).collect()
-    }
+    want = _brute_assign(
+        [(r["vec_id"], r["embedding"]) for r in cur.collect()], cent
+    )
     assert got == want
+    assert 41 not in {r[0] for r in got}  # the NULL vector has no cell
     # the tied vector resolved to the SMALLER of the two identical cells
     assert {r[1] for r in got if r[0] == 42} == {0}
 
-    # through the sync path: identical index state
-    ix_sql = create_ivf_index(
-        spark, os.path.join(tmpdir_path, "ix1"), cent, n_buckets=8
+    # through the sync path: the same cells
+    ix = create_ivf_index(
+        spark, os.path.join(tmpdir_path, "ix"), cent, n_buckets=8
     )
-    ix_np = create_ivf_index(
-        spark, os.path.join(tmpdir_path, "ix2"), cent, n_buckets=8,
-        assign_via="numpy",
+    sync_ivf_index(src, ix)
+    assert _actual_assign(ix) == {(r[0], r[1]) for r in want}
+    assert "sql" not in json.loads(ix.snapshot().properties[PARAMS_PROP]).values()
+
+    # an index assigned by the removed SQL kernel is refused: its stored
+    # cells may differ at rounding boundaries, so a sync could retract
+    # against the wrong cells
+    old = LakeTable.create(
+        spark,
+        os.path.join(tmpdir_path, "old"),
+        ix.schema(),
+        "ik",
+        n_buckets=8,
+        properties={
+            **ix.snapshot().properties,
+            PARAMS_PROP: json.dumps({"n_centroids": 6, "assign_via": "sql"}),
+        },
     )
-    sync_ivf_index(src, ix_sql)
-    sync_ivf_index(src, ix_np, assign_via="numpy")
-    assert _actual_assign(ix_np) == _actual_assign(ix_sql)
-    # the kernel is structural: syncing under the OTHER kernel must
-    # refuse (a mixed history could retract against the wrong cells)
-    with pytest.raises(ValueError, match="assign_via"):
-        sync_ivf_index(src, ix_np, assign_via="sql")
-    with pytest.raises(ValueError, match="assign_via"):
-        sync_ivf_index(src, ix_sql, assign_via="numpy")
+    with pytest.raises(ValueError, match="rebuild"):
+        sync_ivf_index(src, old)
 
 
 def test_probe_read_prunes_to_probed_cells_buckets(spark, tmpdir_path):
@@ -386,3 +420,79 @@ def test_probe_loads_index_snapshot_once(spark, tmpdir_path, monkeypatch):
     queries = spark.createDataFrame([(101, _vec(rng))], VEC_SCHEMA)
     probe_ivf_index(index, queries, "vec_id", k=3, n_probe=2).collect()
     assert loads.count(index.root) == 1
+
+
+def test_degenerate_vectors_across_similarity_family(spark, tmpdir_path):
+    """A zero-norm vector in the corpus, in the queries and among the
+    centroids (plus a NULL and an off-dim corpus vector where the
+    operator scores blocks) must raise nowhere in the similarity family:
+    under ANSI a cosine that divides by a zero norm raises
+    DIVIDE_BY_ZERO. Degenerate rows carry NULL sims or get no cell, and
+    the zero-norm centroid never wins a cell."""
+    from jitsu_spark.similarity.ann import (
+        cosine_topk,
+        cosine_topk_lsh,
+        embedding_near_dups,
+    )
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    rng = random.Random(37)
+    zero = [0.0] * DIM
+    vecs = [(i, _vec(rng)) for i in range(1, 21)] + [(50, zero)]
+    corpus = spark.createDataFrame(vecs, VEC_SCHEMA)
+    # the block kernels also see a NULL and an off-dim vector
+    corpus_x = corpus.union(
+        spark.createDataFrame([(51, None), (52, [1.0, 0.0, 0.0])], VEC_SCHEMA)
+    )
+    queries = spark.createDataFrame(vecs[:3] + [(60, zero)], VEC_SCHEMA)
+    cent = _centroid_frame(spark, [(i, _vec(rng)) for i in range(4)] + [(9, zero)])
+    degenerate = {50, 51, 52, 60}
+
+    def rows(df):
+        return [tuple(r) for r in df.collect()]
+
+    exact = rows(cosine_topk(queries, corpus_x, "vec_id", "vec_id", k=25))
+    assert {r[0] for r in exact} == {1, 2, 3, 60}
+    for q, c, sim, _ in exact:
+        assert (sim is None) == (q in degenerate or c in degenerate)
+
+    lsh = rows(
+        cosine_topk_lsh(
+            queries, corpus, "vec_id", "vec_id", k=25, n_planes=2, n_probes=2
+        )
+    )
+    assert 60 in {r[0] for r in lsh} and 50 in {r[1] for r in lsh}
+    for q, c, sim, _ in lsh:
+        assert (sim is None) == (q in degenerate or c in degenerate)
+
+    dups = rows(embedding_near_dups(corpus, "vec_id", threshold=-1.0, n_planes=2))
+    assert dups and not {50} & {i for a, b, _ in dups for i in (a, b)}
+
+    batch_ivf = rows(
+        ivf_topk(
+            queries, corpus_x, "vec_id", "vec_id", k=3, n_probe=2,
+            centroids=cent,
+        )
+    )
+    assert batch_ivf
+    assert not degenerate & {i for q, c, _, _ in batch_ivf for i in (q, c)}
+    assert all(sim is not None for *_, sim, _ in batch_ivf)
+
+    assigned = rows(assign_clusters(corpus_x, "vec_id", centroids=cent))
+    assert {r[0] for r in assigned} == set(range(1, 21))
+    assert 9 not in {r[1] for r in assigned}
+    assert all(r[2] is not None for r in assigned)
+
+    src = _mk_src(spark, os.path.join(tmpdir_path, "src"))
+    _apply(
+        src, spark,
+        [(i, v, "u") for i, v in vecs + [(51, None), (52, [1.0, 0.0, 0.0])]],
+        0,
+    )
+    index = create_ivf_index(
+        spark, os.path.join(tmpdir_path, "ix"), cent, n_buckets=8
+    )
+    sync_ivf_index(src, index)
+    assert _actual_assign(index) == {(r[0], r[1]) for r in assigned}
+    probed = rows(probe_ivf_index(index, queries, "vec_id", k=3, n_probe=2))
+    assert set(probed) == set(batch_ivf)

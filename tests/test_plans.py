@@ -6,6 +6,8 @@ over the transform surface."""
 
 from __future__ import annotations
 
+import re
+
 import os
 
 import pytest
@@ -490,12 +492,13 @@ def test_passage_dedup_no_window_partial_min(spark):
     assert "partial_min" in plan
 
 
-def test_cluster_assignment_partial_min_by_no_window(spark):
-    """Coarse-quantizer cell assignment must be the partial-combining
-    min_by(struct) aggregate over a broadcast of the fixed-size centroid
-    set — never a row_number window over the N*C sim pairs (that shape
-    shuffled and sorted N*C rows; at centroids=N/25 it was the measured
-    O(N^2) scale-killer of BENCH_r05 cluster_balanced_10x = 262 s)."""
+def test_cluster_assignment_one_arrow_kernel_no_window(spark):
+    """Coarse-quantizer cell assignment must be ONE Arrow UDF node (the
+    matmul kernel against the collected centroid set) — never a
+    row_number window over the N*C sim pairs (that shape shuffled and
+    sorted N*C rows; at centroids=N/25 it was the measured O(N^2)
+    scale-killer of BENCH_r05 cluster_balanced_10x = 262 s), and no
+    nested-loop join of vectors against centroids."""
     from jitsu_spark.similarity.curation import assign_clusters
 
     df = spark.createDataFrame(
@@ -504,8 +507,9 @@ def test_cluster_assignment_partial_min_by_no_window(spark):
     )
     plan = plan_of(assign_clusters(df, "vec_id", n_centroids=4))
     assert "Window" not in plan
-    assert "partial_min_by" in plan
-    assert "BroadcastNestedLoopJoin" in plan
+    # the formatted plan names each node once in its details list
+    assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1
+    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_commit_kinds_spark_job_counts(spark, tmpdir_path):

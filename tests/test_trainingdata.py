@@ -148,11 +148,27 @@ def test_cosine_topk_exact(spark, embeddings):
     assert out[0]["sim"] >= out[1]["sim"] >= out[2]["sim"]
 
 
+def test_cosine_topk_caps_collected_query_side(spark, embeddings, monkeypatch):
+    """The block kernel collects its small side on the Spark driver: above
+    MAX_SIDE_ROWS rows it raises, naming the cap, instead of collecting."""
+    from jitsu_spark.similarity import ann
+
+    monkeypatch.setattr(ann, "MAX_SIDE_ROWS", 4)
+    with pytest.raises(ValueError, match="MAX_SIDE_ROWS=4"):
+        cosine_topk(
+            embeddings.filter(F.col("vec_id") < 5), embeddings, "vec_id", "vec_id"
+        )
+    at_cap = cosine_topk(
+        embeddings.filter(F.col("vec_id") < 4), embeddings, "vec_id", "vec_id", k=1
+    )
+    assert at_cap.count() == 4
+
+
 def test_cosine_topk_lsh_recall(spark, embeddings):
     queries = embeddings.filter(F.col("vec_id") < 5)
     exact = cosine_topk(queries, embeddings, "vec_id", "vec_id", k=3)
     approx = cosine_topk_lsh(
-        queries, embeddings, "vec_id", "vec_id", k=3, dim=16, n_planes=4, n_probes=4
+        queries, embeddings, "vec_id", "vec_id", k=3, n_planes=4, n_probes=4
     )
     e = {(r["vec_id_q"], r["vec_id_c"]) for r in exact.collect()}
     a = {(r["vec_id_q"], r["vec_id_c"]) for r in approx.collect()}
@@ -167,7 +183,7 @@ def test_cosine_topk_lsh_recall(spark, embeddings):
 
 def test_embedding_near_dups(spark, embeddings):
     pairs = embedding_near_dups(
-        embeddings, "vec_id", dim=16, threshold=0.95, n_planes=6
+        embeddings, "vec_id", threshold=0.95, n_planes=6
     ).collect()
     assert any((r["id_a"], r["id_b"]) == (0, 1) for r in pairs)
 

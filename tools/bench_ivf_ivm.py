@@ -49,12 +49,8 @@ def main() -> None:
     from jitsu_spark.lake import LakeTable
     from jitsu_spark.lake.merge import merge_batch
     from jitsu_spark.session import get_spark
-    from jitsu_spark.similarity.ann import (
-        ivf_topk,
-        nearest_centroid,
-        nearest_centroid_numpy,
-        sampled_centroids,
-    )
+    from jitsu_spark.similarity.ann import ivf_topk, sampled_centroids
+    from jitsu_spark.similarity.curation import assign_clusters
     from jitsu_spark.similarity.ivf_index import (
         create_ivf_index,
         probe_ivf_index,
@@ -120,19 +116,12 @@ def main() -> None:
         job_id="up",
     )
 
-    # JITSU_IVF_ASSIGN=numpy: assignment via the Arrow/numpy matmul
-    # kernel (sync AND the full-recompute comparator) instead of the
-    # SQL cosine fold — the scale path when C*d dominates. The kernel
-    # is structural, so it's pinned at index creation.
-    assign_via = os.environ.get("JITSU_IVF_ASSIGN", "sql")
-
     cent = sampled_centroids(corpus, "vec_id", "embedding", n_centroids)
     cent_dir = os.path.join(work, "cent")
     cent.write.parquet(cent_dir)
     cent = spark.read.parquet(cent_dir)
     index = create_ivf_index(
-        spark, os.path.join(work, "ivf"), cent, n_buckets=n_buckets,
-        assign_via=assign_via,
+        spark, os.path.join(work, "ivf"), cent, n_buckets=n_buckets
     )
 
     results: dict = {
@@ -140,11 +129,11 @@ def main() -> None:
         "delta_pct": round(100.0 * delta_vecs / n_vecs, 3),
         "n_batches": n_batches, "cpus": cpus,
         "n_buckets": n_buckets, "n_centroids": n_centroids,
-        "assign_via": assign_via, "dim_tile": dim_tile,
+        "dim_tile": dim_tile,
     }
 
     t0 = time.monotonic()
-    sync_ivf_index(up, index, assign_via=assign_via)
+    sync_ivf_index(up, index)
     results["bootstrap_s"] = round(time.monotonic() - t0, 3)
 
     def _noop(df):
@@ -169,7 +158,7 @@ def main() -> None:
         )
         merge_batch(up, delta, batch_id=f"d{i}", job_id="up")
         t0 = time.monotonic()
-        sync_ivf_index(up, index, assign_via=assign_via)
+        sync_ivf_index(up, index)
         inc.append(round(time.monotonic() - t0, 3))
         t0 = time.monotonic()
         _noop(probe_ivf_index(index, queries, "vec_id", k=5, n_probe=4))
@@ -184,11 +173,7 @@ def main() -> None:
     full_probe = None
     for _ in range(3):
         t0 = time.monotonic()
-        _assign_fn = (
-            nearest_centroid_numpy if assign_via == "numpy"
-            else nearest_centroid
-        )
-        _noop(_assign_fn(cur, "vec_id", "embedding", cent))
+        _noop(assign_clusters(cur, "vec_id", "embedding", centroids=cent))
         el = time.monotonic() - t0
         full_assign = el if full_assign is None else min(full_assign, el)
         t0 = time.monotonic()
