@@ -64,16 +64,6 @@ def _shingles(col: Column, n: int) -> Column:
     )
 
 
-def minhash_expr(col: Column, seed: int, shingle_n: int = 1) -> Column:
-    """min over shingles of md5('<seed>#' || shingle)."""
-    return F.array_min(
-        F.transform(
-            _shingles(col, shingle_n),
-            lambda w: F.md5(F.concat(F.lit(f"{seed}#"), w)),
-        )
-    )
-
-
 def minhash_signature(
     df: DataFrame, text_col: str, k: int = 8, shingle_n: int = 1, prefix: str = "mh"
 ) -> DataFrame:

@@ -35,27 +35,6 @@ class OverwriteResult:
     n_inserted: int = 0
 
 
-def _observed_count(obs, df, timeout_s: float = 30.0) -> int:
-    """Read an Observation's row count with a hang guard: the metrics
-    arrive with the action that executed the observed plan, so this
-    normally returns immediately — but if a future optimizer change eats
-    the CollectMetrics node on some plan shape, fall back to counting
-    ``df`` directly instead of blocking a sync forever."""
-    import threading
-
-    holder: dict = {}
-
-    def read() -> None:
-        holder["v"] = obs.get
-
-    th = threading.Thread(target=read, daemon=True)
-    th.start()
-    th.join(timeout=timeout_s)
-    if "v" in holder:
-        return int(holder["v"]["n"])
-    return df.count()
-
-
 def overwrite_where(
     table: LakeTable,
     replacement: DataFrame,
@@ -140,9 +119,7 @@ def _overwrite_where_once(
     # for exactly this plan shape (observe -> union -> repartition ->
     # parquet write): a runtime-empty AND a statically-empty replacement
     # both deliver {'n': 0} rather than losing the CollectMetrics node
-    # (the hazard the merge kernel documents for AQE-emptied branches);
-    # `_observed_count` still guards the read with a timeout + recompute
-    # fallback so a regression can never hang a sync.
+    # (the hazard the merge kernel documents for AQE-emptied branches).
     from pyspark.sql import Observation
 
     obs = Observation()
@@ -151,10 +128,11 @@ def _overwrite_where_once(
     # accumulator in a map stage, and re-executed map tasks (fetch
     # failure on a cluster) would double-count; above the exchange the
     # count rides the result stage, whose successful-task updates Spark
-    # applies exactly once (speculative execution, off by default, is
-    # the remaining caveat). The tag is dropped before the write so the
-    # file schema is unchanged; its name is derived to never collide
-    # with a real table column (withColumn REPLACES same-named columns).
+    # applies exactly once (speculative execution is the remaining
+    # caveat; LakeTable._observed refuses the read under it). The tag is
+    # dropped before the write so the file schema is unchanged; its name
+    # is derived to never collide with a real table column (withColumn
+    # REPLACES same-named columns).
     tag = "_ow_fresh"
     taken = {f.name for f in target.fields}
     while tag in taken:
@@ -181,7 +159,7 @@ def _overwrite_where_once(
         .drop(tag)
     )
     new_files = table._write_files(result)
-    n_inserted = _observed_count(obs, replacement)
+    n_inserted = int(table._observed(obs)["n"])
     files = md.add_files(kept, table.build_entries(
         new_files, md.schema_id(snap, schema_json), snap
     ))

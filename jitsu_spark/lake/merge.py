@@ -229,7 +229,7 @@ def _merge_once(
         new_files = table._write_files(table._by_bucket(delta, snap.n_buckets))
         if new_files:  # empty batch wrote zero files: skip the metrics
             # read (its plan may have been emptied; see observe comment)
-            got = observation.get
+            got = table._observed(observation)
             n_keys = got["n"]
             n_deletes = got["nd"]
             seq_min, seq_max = got["smin"], got["smax"]

@@ -38,7 +38,7 @@ import uuid
 from dataclasses import dataclass
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -397,6 +397,18 @@ class LakeTable:
         which then writes its files serially."""
         n = max(1, min(n_written, self.spark.sparkContext.defaultParallelism))
         return df_with_bucket.repartition(n, F.col(BUCKET_COL))
+
+    def _observed(self, obs: Observation) -> dict:
+        """The metrics of ``obs``, read after the write that ran its plan.
+        They are exact only if each task's update counts once; a
+        speculative copy of a task can report its rows a second time, so
+        the read refuses while ``spark.speculation`` is on."""
+        if self.spark.conf.get("spark.speculation", "false").lower() == "true":
+            raise ValueError(
+                "observed write metrics would be inexact under "
+                "spark.speculation=true; run lake writes with it off"
+            )
+        return obs.get
 
     def _write_files(self, df_with_bucket: DataFrame) -> dict[str, list[str]]:
         """Write ``df`` (carrying BUCKET_COL) under a fresh commit-token dir,

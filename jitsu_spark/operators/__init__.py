@@ -10,7 +10,7 @@ from jitsu_spark.operators.geo_ua import (
     with_parsed_ua,
 )
 from jitsu_spark.operators.routing import route_to_tables, table_name_expr
-from jitsu_spark.operators.salting import salted_agg, salted_lww
+from jitsu_spark.operators.salting import salted_agg
 from jitsu_spark.operators.transform import (
     replay_dead_letters,
     split_dead_letter,
@@ -33,7 +33,6 @@ __all__ = [
     "route_to_tables",
     "table_name_expr",
     "salted_agg",
-    "salted_lww",
     "replay_dead_letters",
     "split_dead_letter",
     "transform_events",

@@ -8,7 +8,9 @@ aggregation shuffled raw rows by key. Two mechanisms prevent that here:
    kernel's ``max_by`` LWW reduce uses) collapse duplicates per map task
    before the shuffle — the hot key crosses the wire at most once per
    input partition. When the aggregate is algebraic, ALWAYS prefer this;
-   it is the built-in two-phase aggregation.
+   it is the built-in two-phase aggregation. Last-writer-wins is one such
+   aggregate: the single hash-agg ``max_by`` is the engine's only LWW
+   kernel, with no salted variant.
 2. **Explicit salting** for cases partial combine can't save:
    high-cardinality state per key (collect_list/collect_set, exact
    percentile buffers) where the per-key combine buffer itself is the
@@ -68,33 +70,4 @@ def salted_agg(
     return phase1.groupBy(*keys).agg(*p2_exprs)
 
 
-def salted_lww(
-    df: DataFrame,
-    key: str,
-    seq_col: str,
-    payload_cols: list[str],
-    n_salts: int = 16,
-) -> DataFrame:
-    """Explicit two-phase last-writer-wins: per (key, salt) winner first,
-    then per key across ≤n_salts candidates. Semantically identical to the
-    single hash-agg ``max_by`` (which Spark already two-phases via partial
-    combine); kept as the building block for engines/sinks that need the
-    reduction staged explicitly, and as the regression baseline for the
-    skew tests."""
-    winner = lambda: F.max_by(  # noqa: E731
-        F.struct(*[F.col(c) for c in payload_cols]), F.col(seq_col)
-    ).alias("_w")
-    salted = df.withColumn(
-        SALT_COL,
-        F.pmod(F.xxhash64(F.col(key), F.col(seq_col)), F.lit(n_salts)).cast("int"),
-    )
-    phase1 = salted.groupBy(key, SALT_COL).agg(winner(), F.max(seq_col).alias(seq_col))
-    phase2 = (
-        phase1.select(key, seq_col, "_w.*")
-        .groupBy(key)
-        .agg(winner(), F.max(seq_col).alias(seq_col))
-    )
-    return phase2.select(key, seq_col, "_w.*")
-
-
-__all__ = ["salted_agg", "salted_lww", "SALT_COL"]
+__all__ = ["salted_agg", "SALT_COL"]

@@ -259,17 +259,22 @@ def _signature_udf(n_planes: int, seed: int):
     """Vectorized pandas UDF: embeddings (Arrow list<float>) -> int bucket.
     The plane matrix is rebuilt deterministically inside each executor from
     (seed, observed dim) — no large broadcast payload, no dim config to
-    get wrong."""
+    get wrong. The observed dim is the batch's most common vector length:
+    a NULL vector, or one of any other length, gets a NULL signature and
+    so joins no bucket — like the block kernel, which never chooses it."""
 
     @F.pandas_udf(T.LongType())
     def sig(col: pd.Series) -> pd.Series:
-        if len(col) == 0:
-            return pd.Series([], dtype="int64")
-        mat = np.stack(col.to_numpy())  # (batch, dim) float32
-        planes = _rademacher_planes(mat.shape[1], n_planes, seed)
-        bits = (mat.astype(np.float64) @ planes) > 0  # (batch, n_planes)
-        weights = (1 << np.arange(n_planes)).astype(np.int64)
-        return pd.Series(bits @ weights)
+        out = pd.Series(pd.NA, index=col.index, dtype="Int64")
+        lens = col.map(len, na_action="ignore")  # NaN for a NULL vector
+        if lens.notna().any():
+            ok = lens == lens.mode().iloc[0]
+            mat = np.stack(col[ok].to_numpy())  # (rows, dim) float32
+            planes = _rademacher_planes(mat.shape[1], n_planes, seed)
+            bits = (mat.astype(np.float64) @ planes) > 0  # (rows, n_planes)
+            weights = (1 << np.arange(n_planes)).astype(np.int64)
+            out[ok] = bits @ weights
+        return out
 
     return sig
 

@@ -12,24 +12,21 @@ Scale shape:
   TakeOrderedAndProject (per-partition heaps, no global sort), and the
   id assignment runs a row_number window over the ALREADY-LIMITED V-row
   frame — the single-partition window touches V rows, never the corpus;
-- encoding is, by default, a NARROW projection: the V-row vocab is
-  collected driver-side (bounded control-plane read — V is the model's
-  embedding width) into a ``create_map`` literal and each document's
-  token array maps through ``element_at`` inside codegen. Zero shuffle,
-  zero explode, composes with any downstream partitioning — measured
-  2→8-core scaling went from 0.59 (join+collect_list reassembly, the
-  ``strategy="join"`` fallback) to ~the hardware ceiling, because the
-  join path's doc_id re-shuffle of every (pos, id) pair disappears.
-  For a vocab too large for a map literal (> ``map_literal_max``),
-  the auto default is ``strategy="udf"``: the V-row vocab broadcast as
-  a plain dict, encode in ONE Arrow-vectorized pandas UDF — the same
-  narrow zero-shuffle shape at any V (a real tokenizer vocab is
-  32k-256k). ``strategy="join"`` keeps the broadcast-join path
-  (exploded (doc, pos, token) stream joined against the vocab,
-  re-assembled with an array_sort over collected (pos, id) structs —
-  one doc_id shuffle) for engines/UDF-less deployments; measured 2->8
-  scaling at 800k docs, V=32k: join 0.61, udf ~hardware ceiling
-  (BASELINE.md round 6).
+- encoding is a NARROW projection at any V: the vocab is collected
+  driver-side ONCE (``limit(MAX_VOCAB_ROWS + 1).collect()`` — a bounded
+  control-plane read; V is the model's embedding width) and the same rows
+  feed one of two kernels, picked by the row count:
+  * V <= ``MAP_LITERAL_MAX``: a ``create_map`` literal, each document's
+    token array mapped through ``element_at`` inside codegen;
+  * above it: the rows broadcast as a plain dict, encoded in ONE
+    Arrow-vectorized pandas UDF (a real tokenizer vocab is 32k-256k).
+  Both are zero shuffle, zero explode, no per-doc reassembly, and compose
+  with any downstream partitioning. The map literal measured faster where
+  it applies (V=256 at sf0.1); measured 2->8-core scaling of both reaches
+  ~the hardware ceiling, where a broadcast-join encode (an
+  exploded token stream re-assembled by a doc_id shuffle) reached 0.59
+  (BASELINE.md round 6). A vocab over ``MAX_VOCAB_ROWS`` is refused
+  rather than collected.
 """
 
 from __future__ import annotations
@@ -42,6 +39,10 @@ from pyspark.sql.window import Window
 
 #: id stamped on tokens outside the vocabulary
 OOV_ID = -1
+#: largest vocab encoded through a ``create_map`` literal
+MAP_LITERAL_MAX = 4096
+#: largest vocab ``encode_documents`` collects into the driver
+MAX_VOCAB_ROWS = 1_000_000
 
 
 def build_vocab(
@@ -70,47 +71,24 @@ def encode_documents(
     vocab: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    strategy: str | None = None,
-    map_literal_max: int = 4096,
-    udf_vocab_max: int = 1_000_000,
 ) -> DataFrame:
     """Per document: ``n_tokens``, ``n_oov`` and ``token_ids`` (array of
     long, OOV as -1, in original token order).
 
-    ``strategy``: None (auto — map literal when the vocab fits in
-    ``map_literal_max`` rows, the broadcast-dict Arrow UDF up to
-    ``udf_vocab_max``, else the distributed join), "map", "udf", or
-    "join". The udf cap bounds the driver-side vocab collect: a real
-    tokenizer vocab (32k–256k) is far under it, but a raw
-    distinct-token frame from a web corpus is not — auto must never
-    turn a previously-distributed encode into a driver OOM."""
-    if strategy not in (None, "map", "udf", "join"):
-        raise ValueError(f"unknown encode strategy {strategy!r}")
-    if strategy in (None, "map"):
-        # bounded control-plane read: at most map_literal_max+1 rows
-        head = vocab.select("token", "token_id").limit(map_literal_max + 1).collect()
-        if len(head) <= map_literal_max:
-            return _encode_via_map(docs, head, id_col, text_col)
-        if strategy == "map":
-            raise ValueError(
-                f"vocab exceeds map_literal_max={map_literal_max}; "
-                "use strategy='udf' (or 'join')"
-            )
-    if strategy in (None, "udf"):
-        # bounded existence check, not a full count
-        over = (
-            vocab.select("token").limit(udf_vocab_max + 1).count()
-            > udf_vocab_max
+    ``vocab`` (token, token_id) is collected once: up to
+    ``MAP_LITERAL_MAX`` rows it becomes a map literal, above that a
+    broadcast dict behind one Arrow UDF. More than ``MAX_VOCAB_ROWS``
+    rows raise ``ValueError`` — a raw distinct-token frame from a web
+    corpus must not be collected into the driver."""
+    rows = vocab.select("token", "token_id").limit(MAX_VOCAB_ROWS + 1).collect()
+    if len(rows) > MAX_VOCAB_ROWS:
+        raise ValueError(
+            f"vocab has more than MAX_VOCAB_ROWS={MAX_VOCAB_ROWS} rows; "
+            "build it with a vocab_size at or under that cap"
         )
-        if not over:
-            return _encode_via_udf(docs, vocab, id_col, text_col)
-        if strategy == "udf":
-            raise ValueError(
-                f"vocab exceeds udf_vocab_max={udf_vocab_max} rows — "
-                "collecting it would risk the driver; use "
-                "strategy='join' or raise udf_vocab_max deliberately"
-            )
-    return _encode_via_join(docs, vocab, id_col, text_col)
+    if len(rows) <= MAP_LITERAL_MAX:
+        return _encode_via_map(docs, rows, id_col, text_col)
+    return _encode_via_udf(docs, rows, id_col, text_col)
 
 
 def _encode_via_map(
@@ -137,20 +115,13 @@ def _encode_via_map(
 
 
 def _encode_via_udf(
-    docs: DataFrame, vocab: DataFrame, id_col: str, text_col: str
+    docs: DataFrame, vocab_rows: list, id_col: str, text_col: str
 ) -> DataFrame:
-    """Broadcast-dict Arrow-vectorized encode — the large-V default.
-
-    The vocab is collected ONCE driver-side (bounded by V, a model
-    hyper-parameter — 32k-256k rows is a few MB, the same argument as
-    the map literal) and shipped as a broadcast dict; one pandas UDF
-    emits (n_tokens, n_oov, token_ids) per Arrow batch. Keeps the
-    map path's NARROW shape at any V: zero shuffle, zero explode, no
-    per-doc reassembly — the join path's doc_id re-shuffle of every
-    (pos, id) pair (its 2->8 scaling was 0.61 at 800k docs where this
-    path and the map literal hit the hardware ceiling)."""
-    rows = vocab.select("token", "token_id").collect()
-    mapping = {r["token"]: int(r["token_id"]) for r in rows}
+    """Broadcast-dict Arrow-vectorized encode for vocabs above the map
+    literal cap: the collected rows ship as a broadcast dict and one
+    pandas UDF emits (n_tokens, n_oov, token_ids) per Arrow batch — the
+    map path's narrow shape at any V."""
+    mapping = {r["token"]: int(r["token_id"]) for r in vocab_rows}
     bmap = docs.sparkSession.sparkContext.broadcast(mapping)
 
     ret = T.StructType(
@@ -166,7 +137,7 @@ def _encode_via_udf(
         m = bmap.value
         oov = OOV_ID
         # NULL text = empty document (one empty token), matching the
-        # map/join paths' split(coalesce(text, '')) semantics
+        # map path's split(coalesce(text, '')) semantics
         ids = texts.map(
             lambda t: [
                 m.get(w, oov) for w in ("" if t is None else t).split(" ")
@@ -187,33 +158,4 @@ def _encode_via_udf(
         F.col("_e.n_tokens").alias("n_tokens"),
         F.col("_e.n_oov").alias("n_oov"),
         F.col("_e.token_ids").alias("token_ids"),
-    )
-
-
-def _encode_via_join(
-    docs: DataFrame, vocab: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """Broadcast-join encode for vocabularies too large for a map
-    literal; one doc_id shuffle to reassemble order."""
-    # NULL text = empty document (one empty token) — every id keeps a row
-    toks = docs.select(
-        F.col(id_col),
-        F.posexplode(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), " ")
-        ).alias("pos", "token"),
-    )
-    joined = toks.join(
-        F.broadcast(vocab.select("token", "token_id")), on="token", how="left"
-    ).select(
-        id_col,
-        "pos",
-        F.coalesce(F.col("token_id"), F.lit(OOV_ID)).alias("tid"),
-    )
-    return joined.groupBy(id_col).agg(
-        F.count("*").cast("long").alias("n_tokens"),
-        F.sum((F.col("tid") == OOV_ID).cast("long")).cast("long").alias("n_oov"),
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "tid"))),
-            lambda s: s["tid"].cast("long"),
-        ).alias("token_ids"),
     )

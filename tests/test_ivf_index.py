@@ -424,11 +424,11 @@ def test_probe_loads_index_snapshot_once(spark, tmpdir_path, monkeypatch):
 
 def test_degenerate_vectors_across_similarity_family(spark, tmpdir_path):
     """A zero-norm vector in the corpus, in the queries and among the
-    centroids (plus a NULL and an off-dim corpus vector where the
-    operator scores blocks) must raise nowhere in the similarity family:
-    under ANSI a cosine that divides by a zero norm raises
-    DIVIDE_BY_ZERO. Degenerate rows carry NULL sims or get no cell, and
-    the zero-norm centroid never wins a cell."""
+    centroids, plus a NULL and an off-dim corpus vector, must raise
+    nowhere in the similarity family: under ANSI a cosine that divides
+    by a zero norm raises DIVIDE_BY_ZERO. Degenerate rows carry NULL
+    sims or get no cell, a NULL vector joins no LSH bucket, and the
+    zero-norm centroid never wins a cell."""
     from jitsu_spark.similarity.ann import (
         cosine_topk,
         cosine_topk_lsh,
@@ -440,7 +440,7 @@ def test_degenerate_vectors_across_similarity_family(spark, tmpdir_path):
     zero = [0.0] * DIM
     vecs = [(i, _vec(rng)) for i in range(1, 21)] + [(50, zero)]
     corpus = spark.createDataFrame(vecs, VEC_SCHEMA)
-    # the block kernels also see a NULL and an off-dim vector
+    # the corpus plus a NULL and an off-dim vector
     corpus_x = corpus.union(
         spark.createDataFrame([(51, None), (52, [1.0, 0.0, 0.0])], VEC_SCHEMA)
     )
@@ -458,15 +458,16 @@ def test_degenerate_vectors_across_similarity_family(spark, tmpdir_path):
 
     lsh = rows(
         cosine_topk_lsh(
-            queries, corpus, "vec_id", "vec_id", k=25, n_planes=2, n_probes=2
+            queries, corpus_x, "vec_id", "vec_id", k=25, n_planes=2, n_probes=2
         )
     )
     assert 60 in {r[0] for r in lsh} and 50 in {r[1] for r in lsh}
+    assert 51 not in {r[1] for r in lsh}  # NULL signature: no bucket
     for q, c, sim, _ in lsh:
         assert (sim is None) == (q in degenerate or c in degenerate)
 
-    dups = rows(embedding_near_dups(corpus, "vec_id", threshold=-1.0, n_planes=2))
-    assert dups and not {50} & {i for a, b, _ in dups for i in (a, b)}
+    dups = rows(embedding_near_dups(corpus_x, "vec_id", threshold=-1.0, n_planes=2))
+    assert dups and not {50, 51, 52} & {i for a, b, _ in dups for i in (a, b)}
 
     batch_ivf = rows(
         ivf_topk(

@@ -5,6 +5,7 @@ from __future__ import annotations
 import datetime as dt
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from jitsu_spark.lake import LakeTable
@@ -47,6 +48,35 @@ def test_overwrite_where_replaces_chunk_idempotently(spark, tmpdir_path):
     overwrite_where(t, fresh, pred, chunk_id="2024-01-01-retry")
     rows2 = {r["doc_id"]: r["tokens"] for r in t.read().collect()}
     assert rows2 == rows
+
+
+def test_observed_counts_refuse_speculation(spark, tmpdir_path, monkeypatch):
+    """The observed row counts of overwrite_where and of the MoR merge
+    are exact only without speculative task copies: with
+    spark.speculation on, both refuse and publish no snapshot."""
+    cow = make_table(spark, tmpdir_path)
+    mor = LakeTable.create(
+        spark, os.path.join(tmpdir_path, "mor"), TARGET_SCHEMA, "doc_id",
+        n_buckets=4, properties={"write.mode": "mor"},
+    )
+    rows = batch(spark, [ev(1, "i", "a", [1]), ev(2, "i", "b", [2])])
+    merge_batch(cow, rows, batch_id=0)
+    real_get = spark.conf.get
+
+    def conf_get(key, *default):
+        if key == "spark.speculation":
+            return "true"
+        return real_get(key, *default)
+
+    monkeypatch.setattr(spark.conf, "get", conf_get)
+    before = (cow.snapshot().version, mor.snapshot().version)
+    with pytest.raises(ValueError, match="spark.speculation"):
+        overwrite_where(
+            cow, rows.drop("seq", "op"), F.col("doc_id") == "a", chunk_id="c0"
+        )
+    with pytest.raises(ValueError, match="spark.speculation"):
+        merge_batch(mor, rows, batch_id=0)
+    assert (cow.snapshot().version, mor.snapshot().version) == before
 
 
 def test_overwrite_where_idempotent_after_manifest_fold(spark, tmpdir_path):

@@ -16,7 +16,6 @@ from jitsu_spark.operators import (
     parse_rule,
     route_to_tables,
     salted_agg,
-    salted_lww,
     table_name_expr,
     with_context_enrichment,
     with_deterministic_event_id,
@@ -146,27 +145,6 @@ def test_salted_agg_equals_plain(spark):
         ).collect()
     }
     assert plain == salted
-
-
-def test_salted_lww_equals_hash_agg_lww(spark):
-    log = changelog_df(spark, n_events=3000, n_docs=40, seed=9, hot_key_pct=0.4)
-    via_salt = {
-        r["doc_id"]: (r["seq"], r["n_tok"])
-        for r in salted_lww(
-            log, "doc_id", "seq", ["op", "n_tok", "source"], n_salts=8
-        ).collect()
-    }
-    via_agg = {
-        r["doc_id"]: (r["seq"], r["n_tok"])
-        for r in log.groupBy("doc_id")
-        .agg(
-            F.max_by(F.struct("n_tok"), F.col("seq")).alias("_w"),
-            F.max("seq").alias("seq"),
-        )
-        .select("doc_id", "seq", "_w.n_tok")
-        .collect()
-    }
-    assert via_salt == via_agg
 
 
 # ---------------------------------------------------------------------------

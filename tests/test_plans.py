@@ -23,6 +23,18 @@ def plan_of(df) -> str:
     )
 
 
+def spark_jobs(spark, group: str, op) -> int:
+    """Number of Spark jobs ``op()`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(group, group)
+    try:
+        op()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="module")
 def log_dir(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("plans") / "log")
@@ -419,36 +431,48 @@ def test_vocab_encode_map_path_is_narrow(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_vocab_encode_join_path_broadcasts(spark):
-    """The large-V fallback joins the exploded token stream against the
-    vocab: must be a broadcast hash join, never sort-merge."""
+def test_vocab_encode_udf_path_is_narrow_arrow(spark, monkeypatch):
+    """Above MAP_LITERAL_MAX the encode (broadcast-dict Arrow UDF) keeps
+    the map path's narrow shape at any V: zero exchanges, no join,
+    exactly an Arrow-vectorized eval — no doc_id reassembly shuffle."""
+    from jitsu_spark.text import vocab as vocab_mod
     from jitsu_spark.text.vocab import build_vocab, encode_documents
 
+    monkeypatch.setattr(vocab_mod, "MAP_LITERAL_MAX", 2)
     df = spark.createDataFrame(
         [(i, "a b c d e") for i in range(10)], "doc_id long, text string"
     )
     vocab = build_vocab(df, 4)
-    plan = plan_of(encode_documents(df, vocab, strategy="join"))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
-def test_vocab_encode_udf_path_is_narrow_arrow(spark):
-    """The large-V default (broadcast-dict Arrow UDF) keeps the map
-    path's narrow shape at any V: zero exchanges, no join, exactly an
-    Arrow-vectorized eval — never the join path's doc_id reassembly
-    shuffle."""
-    from jitsu_spark.text.vocab import build_vocab, encode_documents
-
-    df = spark.createDataFrame(
-        [(i, "a b c d e") for i in range(10)], "doc_id long, text string"
-    )
-    vocab = build_vocab(df, 4)
-    plan = plan_of(encode_documents(df, vocab, strategy="udf"))
+    plan = plan_of(encode_documents(df, vocab))
     assert "Exchange" not in plan
     assert "Join" not in plan
     assert "ArrowEvalPython" in plan
     assert "BatchEvalPython" not in plan  # never row-at-a-time Python
+
+
+def test_vocab_encode_evaluates_the_vocab_once(spark, monkeypatch):
+    """The encode collects a lazy ``build_vocab`` frame once and picks
+    its kernel from those rows: building the encode runs exactly the
+    Spark jobs of one vocab evaluation, on either side of the map cap."""
+    from jitsu_spark.text import vocab as vocab_mod
+    from jitsu_spark.text.vocab import build_vocab, encode_documents
+
+    df = spark.createDataFrame(
+        [(i, f"w{i % 7} w{i % 5} w{i % 3}") for i in range(50)],
+        "doc_id long, text string",
+    )
+    one_eval = spark_jobs(
+        spark, "vocab-once-build", lambda: build_vocab(df, 16).collect()
+    )
+    monkeypatch.setattr(vocab_mod, "MAP_LITERAL_MAX", 4)
+    udf_setup = spark_jobs(
+        spark, "vocab-once-udf", lambda: encode_documents(df, build_vocab(df, 16))
+    )
+    monkeypatch.setattr(vocab_mod, "MAP_LITERAL_MAX", 4096)
+    map_setup = spark_jobs(
+        spark, "vocab-once-map", lambda: encode_documents(df, build_vocab(df, 16))
+    )
+    assert (one_eval, udf_setup, map_setup) == (2, 2, 2)
 
 
 def test_pii_scrub_is_shuffle_free_codegen(spark):
@@ -524,16 +548,8 @@ def test_commit_kinds_spark_job_counts(spark, tmpdir_path):
     from jitsu_spark.lake.merge import append_batch, merge_batch
     from tests.test_merge import TARGET_SCHEMA, batch, ev
 
-    sc = spark.sparkContext
-
     def jobs(group, op):
-        prev = sc.getLocalProperty("spark.jobGroup.id")
-        sc.setJobGroup(group, group)
-        try:
-            op()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", prev)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        return spark_jobs(spark, group, op)
 
     def table(name, mode="cow"):
         return LakeTable.create(

@@ -178,57 +178,6 @@ def test_recognition_redelivery_idempotent(spark, tmpdir_path):
     assert before == after
 
 
-def test_stateful_recognition_matches_pending_table_variant(spark, tmpdir_path):
-    """The applyInPandasWithState variant must produce the same final
-    destination state as the pending-table design over the same 3-phase
-    scenario (park -> identify/unpark -> inline recognition)."""
-    from jitsu_spark.lake.merge import merge_batch
-    from jitsu_spark.streaming.recognition_state import recognize_with_state
-
-    chunks = [
-        [ev(1, "e1", "a1", None), ev(2, "e2", "a1", None), ev(3, "e3", None, "u3")],
-        [ev(4, "e4", "a1", "U1", 9.0)],
-        [ev(5, "e5", "a1", None, 2.0)],
-    ]
-    src = os.path.join(tmpdir_path, "src")
-    for rows in chunks:
-        spark.createDataFrame(rows, BATCH_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    dest = LakeTable.create(
-        spark, os.path.join(tmpdir_path, "dest"), DEST_SCHEMA, "event_id",
-        n_buckets=4,
-    )
-
-    def sink(bdf, bid):
-        merge_batch(dest, bdf, batch_id=bid, job_id="state-rec")
-
-    stream = (
-        spark.readStream.schema(BATCH_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        recognize_with_state(stream)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(tmpdir_path, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    assert q.exception() is None
-
-    rows = {r["event_id"]: r for r in dest.read().collect()}
-    assert set(rows) == {"e1", "e2", "e3", "e4", "e5"}
-    assert rows["e1"]["user_id"] == "U1"   # unparked retroactively
-    assert rows["e2"]["user_id"] == "U1"
-    assert rows["e3"]["user_id"] == "u3"   # direct passthrough
-    assert rows["e5"]["user_id"] == "U1"   # recognized from kept mapping
-    assert rows["e5"]["value"] == 2.0
-    assert rows["e1"]["value"] == 1.0      # parked payload survives intact
-
-
 def test_expire_pending_bounds_state(spark, tmpdir_path):
     """Parked events older than the retention horizon are dropped; newer
     ones stay identifiable."""
@@ -250,69 +199,6 @@ def test_expire_pending_bounds_state(spark, tmpdir_path):
     assert r1.n_reconciled == 1
     rows = {r["event_id"]: r["user_id"] for r in dest.read().collect()}
     assert rows.get("e2") == "U2" and "e1" not in rows
-
-
-def test_stateful_recognition_preserves_numeric_string_ids(spark, tmpdir_path):
-    """Parked events round-trip through JSON state; dtype pinning must keep
-    a numeric-token StringType id ('007') a string and a nullable long a
-    long (ADVICE r2: read_json re-inference corrupted both)."""
-    from jitsu_spark.lake.merge import merge_batch
-    from jitsu_spark.streaming.recognition_state import recognize_with_state
-
-    schema = T.StructType(
-        list(BATCH_SCHEMA.fields) + [T.StructField("n_items", T.LongType())]
-    )
-    dest_schema = T.StructType(
-        [f for f in schema.fields if f.name not in ("seq", "op")]
-    )
-
-    def ev2(seq, event_id, anon_id, user_id, n_items):
-        d = ev(seq, event_id, anon_id, user_id)
-        d["n_items"] = n_items
-        return d
-
-    chunks = [
-        # parked: event_id is a numeric-token string, n_items NULL on e1
-        [ev2(1, "007", "a1", None, None), ev2(2, "008", "a1", None, 7)],
-        # identify arrives later -> both unpark through the JSON round trip
-        [ev2(3, "e3", "a1", "U1", 1)],
-    ]
-    src = os.path.join(tmpdir_path, "src")
-    for rows in chunks:
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    dest = LakeTable.create(
-        spark, os.path.join(tmpdir_path, "dest"), dest_schema, "event_id",
-        n_buckets=4,
-    )
-
-    def sink(bdf, bid):
-        merge_batch(dest, bdf, batch_id=bid, job_id="state-rec-dtypes")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        recognize_with_state(stream)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(tmpdir_path, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    assert q.exception() is None
-
-    rows = {r["event_id"]: r for r in dest.read().collect()}
-    # '007' must NOT have been re-inferred to int 7 (a '7' key would both
-    # corrupt the merge key and collide with nothing here)
-    assert set(rows) == {"007", "008", "e3"}
-    assert rows["007"]["user_id"] == "U1"
-    assert rows["007"]["n_items"] is None
-    assert rows["008"]["n_items"] == 7
 
 
 def test_recognition_large_anon_slice_falls_back_to_shuffle(spark, tmpdir_path):

@@ -107,42 +107,32 @@ def test_shard_corpus_rejects_bad_n(spark):
         shard_corpus(df, 0)
 
 
-def test_encode_map_and_join_paths_equivalent(spark):
-    from jitsu_spark.text.vocab import build_vocab, encode_documents
+def test_encode_map_and_join_paths_equivalent(spark, monkeypatch):
+    """The map-literal and the broadcast-dict UDF encodes both answer
+    exactly like a pure-Python dict encode, NULL text included; a vocab
+    over MAX_VOCAB_ROWS is refused, never collected."""
+    from jitsu_spark.text import vocab as vocab_mod
 
     rows = [(i, f"t{i % 9} zz t{i % 4} t{i % 9}") for i in range(200)] + [
         (999, None)
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     vocab = build_vocab(df, 6)
-    m = encode_documents(df, vocab, strategy="map").select(
-        "doc_id", "n_tokens", "n_oov", F.col("token_ids").cast("string").alias("s")
-    )
-    j = encode_documents(df, vocab, strategy="join").select(
-        "doc_id", "n_tokens", "n_oov", F.col("token_ids").cast("string").alias("s")
-    )
-    assert m.exceptAll(j).count() == 0 and j.exceptAll(m).count() == 0
-    # the broadcast-dict Arrow-UDF path answers identically
-    u = encode_documents(df, vocab, strategy="udf").select(
-        "doc_id", "n_tokens", "n_oov", F.col("token_ids").cast("string").alias("s")
-    )
-    assert u.exceptAll(j).count() == 0 and j.exceptAll(u).count() == 0
-    # forced map strategy on an oversized vocab is rejected
-    big = build_vocab(df, 6)
-    with pytest.raises(ValueError):
-        encode_documents(df, big, strategy="map", map_literal_max=2)
-    # auto falls back to the udf path above the cap (still correct)
-    auto = encode_documents(df, vocab, map_literal_max=2).select(
-        "doc_id", "n_tokens", "n_oov", F.col("token_ids").cast("string").alias("s")
-    )
-    assert auto.exceptAll(j).count() == 0
-    # above udf_vocab_max, auto degrades to the distributed join (never
-    # an unbounded driver collect) and explicit udf refuses
-    auto2 = encode_documents(
-        df, vocab, map_literal_max=2, udf_vocab_max=2
-    ).select(
-        "doc_id", "n_tokens", "n_oov", F.col("token_ids").cast("string").alias("s")
-    )
-    assert auto2.exceptAll(j).count() == 0
-    with pytest.raises(ValueError, match="udf_vocab_max"):
-        encode_documents(df, vocab, strategy="udf", udf_vocab_max=2)
+    ids = {r["token"]: r["token_id"] for r in vocab.collect()}
+    expected = {}
+    for doc_id, text in rows:
+        enc = [ids.get(w, OOV_ID) for w in (text or "").split(" ")]
+        expected[doc_id] = (len(enc), enc.count(OOV_ID), enc)
+
+    def encoded():
+        return {
+            r["doc_id"]: (r["n_tokens"], r["n_oov"], list(r["token_ids"]))
+            for r in encode_documents(df, vocab).collect()
+        }
+
+    assert encoded() == expected  # 6 rows <= MAP_LITERAL_MAX: map literal
+    monkeypatch.setattr(vocab_mod, "MAP_LITERAL_MAX", 2)
+    assert encoded() == expected  # above the map cap: the Arrow UDF
+    monkeypatch.setattr(vocab_mod, "MAX_VOCAB_ROWS", 5)
+    with pytest.raises(ValueError, match="MAX_VOCAB_ROWS"):
+        encode_documents(df, vocab)

@@ -19,16 +19,17 @@ import subprocess
 import sys
 import tempfile
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from bench_scaling_full import CPU_CONTROL  # noqa: E402 — same control
 
 RUNNER = '''
 import json, os, sys, time
-sys.path.insert(0, "/root/repo")
+corpus_dir, cpus, repo = sys.argv[1], int(sys.argv[2]), sys.argv[3]
+sys.path.insert(0, repo)
 from jitsu_spark.session import get_spark
 import __spark_entry__ as entry
-corpus_dir, cpus = sys.argv[1], int(sys.argv[2])
 spark = get_spark(cores=cpus, shuffle_partitions=max(cpus * 4, 8))
 spark.sparkContext.setLogLevel("ERROR")
 ops = {
@@ -36,46 +37,12 @@ ops = {
     "vocab_encode": entry.q_vocab_encode,
     "repetition_signals": entry.q_repetition_signals,
 }
-def _vocab_encode_join(spark, sf_dir):
-    # the large-V fallback: force the broadcast-join encode path (the one
-    # taken when V > map_literal_max) with a 64k-cap vocab
-    from pyspark.sql import functions as F
-    from jitsu_spark.text.vocab import build_vocab, encode_documents
-    d = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
-        "doc_id", "text")
-    enc = encode_documents(d, build_vocab(d, 65536), strategy="join")
-    return enc.select(
-        "doc_id", "n_tokens", "n_oov",
-        F.array_join(F.transform(F.slice(F.col("token_ids"), 1, 32),
-                                 lambda x: x.cast("string")), ",").alias("ids_csv"))
-ops["vocab_encode_join"] = _vocab_encode_join
-def _vocab_encode_join32k(spark, sf_dir):
-    # REALIZED-32k-V join path: the synthetic corpus's natural vocab is
-    # small, so _vocab_encode_join's 64k cap never binds; here each doc
-    # contributes two hash-derived pseudo-tokens over a 45k space so the
-    # built vocab genuinely hits the 32768 cap (a real tokenizer vocab is
-    # 32k-256k) and the encode join carries a full-size dimension.
-    from pyspark.sql import functions as F
-    from jitsu_spark.text.vocab import build_vocab, encode_documents
-    d = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
-        "doc_id", "text")
-    d = d.withColumn(
-        "text",
-        F.concat_ws(
-            " ", "text",
-            F.concat(F.lit("tk"), F.pmod(F.xxhash64("doc_id"),
-                                         F.lit(45000)).cast("string")),
-            F.concat(F.lit("tk"), F.pmod(F.xxhash64("doc_id", F.lit(1)),
-                                         F.lit(45000)).cast("string"))))
-    enc = encode_documents(d, build_vocab(d, 32768), strategy="join")
-    return enc.select(
-        "doc_id", "n_tokens", "n_oov",
-        F.array_join(F.transform(F.slice(F.col("token_ids"), 1, 32),
-                                 lambda x: x.cast("string")), ",").alias("ids_csv"))
-ops["vocab_encode_join32k"] = _vocab_encode_join32k
 def _vocab_encode_udf32k(spark, sf_dir):
-    # same realized-32k vocab, broadcast-dict Arrow-UDF path (the
-    # large-V auto default): narrow, zero shuffle at any V
+    # REALIZED-32k-V encode: the synthetic corpus's natural vocab is
+    # small, so each doc contributes two hash-derived pseudo-tokens over
+    # a 45k space and the built vocab genuinely hits the 32768 cap (a
+    # real tokenizer vocab is 32k-256k) — above MAP_LITERAL_MAX, so the
+    # encode runs the broadcast-dict Arrow UDF: narrow, zero shuffle
     from pyspark.sql import functions as F
     from jitsu_spark.text.vocab import build_vocab, encode_documents
     d = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
@@ -88,7 +55,7 @@ def _vocab_encode_udf32k(spark, sf_dir):
                                          F.lit(45000)).cast("string")),
             F.concat(F.lit("tk"), F.pmod(F.xxhash64("doc_id", F.lit(1)),
                                          F.lit(45000)).cast("string"))))
-    enc = encode_documents(d, build_vocab(d, 32768), strategy="udf")
+    enc = encode_documents(d, build_vocab(d, 32768))
     return enc.select(
         "doc_id", "n_tokens", "n_oov",
         F.array_join(F.transform(F.slice(F.col("token_ids"), 1, 32),
@@ -166,7 +133,7 @@ def main() -> None:
     for r in range(n_reps):
         for cpus in levels:
             res = subprocess.run(
-                [sys.executable, "-c", RUNNER, work, str(cpus)],
+                [sys.executable, "-c", RUNNER, work, str(cpus), REPO],
                 capture_output=True,
                 text=True,
             )
