@@ -14,7 +14,9 @@ Usage:
   (same inflation rule as bench.py), built once and cached in
   /dev/shm/jitsu_r7_10x (delete the dir to regenerate);
 - `interval_sync_8day` / `singer_tap_50k` drive the same job harnesses
-  bench.py uses (imported from it).
+  bench.py uses (imported from it);
+- a name outside the bench.py suite runs that `queries()` gate entry
+  (e.g. the `*_ivm` views), timed the same way.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default 32), JITSU_BENCH_REPS (default 3).
@@ -174,7 +176,9 @@ def main() -> None:
                 el = bench.bench_cdc_replay(
                     spark, 2_000_000, 200_000, mode="mor", reps=1)
             else:
-                _noop_write(suite[name](spark, data_dir))
+                # any other gate query by its queries() name
+                q = suite.get(name) or entry.queries()[name]
+                _noop_write(q(spark, data_dir))
                 el = time.time() - t0
             el = round(el, 3)
             results[name] = min(results.get(name, el), el)

@@ -160,17 +160,8 @@ def probe_lsh_index(
     br = _band_rows_for(index, docs.select(id_col, text_col), id_col, text_col)
     br = br.persist()
     try:
-        snap = index.snapshot()  # bucket ids and read share one layout
-        buckets = sorted(
-            r["b"]
-            for r in br.select(
-                index.bucket_expr(F.col("bh"), snap=snap).alias("b")
-            )
-            .distinct()
-            .collect()
-        )
         hits = (
-            index.read(buckets=buckets, snap=snap)
+            index.read_for(br, "bh")
             .join(br, on=["bh", "band_no"], how="inner")
             .select(F.col(id_col).alias("probe_id"),
                     F.col("doc").alias("match_doc"))

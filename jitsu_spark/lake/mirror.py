@@ -17,11 +17,23 @@ commit and versions are monotone, so LWW ordering is exact) and
 Consume-before-compact applies transitively: sync each mirror past an
 upstream version before compacting/overwriting the upstream beyond it
 (changes() raises rather than silently skipping a gap).
+
+Derived views (``sync_derived_rows``, ``sync_aggregate``, and the views
+built on them) share three pieces:
+
+- :class:`WindowImages` computes a window's ``(changed keys, pre-image,
+  post-image)`` frames, once per window for every view of the upstream;
+- :func:`sync_window` is the one sync prologue: it checks the shared
+  ``images`` belongs to the upstream, makes a private one if none was
+  given, and on exit releases it with every frame the call persisted;
+- :func:`retract_assert` builds the merge batch that retracts the
+  pre-image's derived rows and asserts the post-image's.
 """
 
 from __future__ import annotations
 
 import re
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -77,25 +89,26 @@ def sync_mirror(
 
 
 class WindowImages:
-    """Memoized (changed keys, dirty buckets, pre-image, post-image) of an
-    upstream sync window — the frames every ``sync_aggregate`` /
-    ``sync_derived_rows`` call over the same upstream recomputes from
-    scratch. One CDC-maintained table usually feeds SEVERAL derived views
-    (term stats + bigram counts + LSH index + chunk table ...); without
-    sharing, each view re-runs the changes() scan, the distinct, and two
-    reconcile reads of every dirty upstream bucket — the dominant
-    per-sync cost once deltas spread across buckets. The frames after the
-    changed-keys semi-join are O(change), so they're ``localCheckpoint``ed
-    (eager) once and served to every view syncing the SAME (since, cur)
-    window; a view whose cursor lags (crash retry) misses the cache and
-    computes its own window, exactly as before.
+    """Memoized ``(changed keys, pre-image, post-image)`` of an upstream
+    sync window. :meth:`get` is the one place a ``changes()`` consumer's
+    window is computed; every ``sync_aggregate`` / ``sync_derived_rows`` /
+    ``PassageDedupView.sync`` call takes its frames from here. One
+    CDC-maintained table usually feeds SEVERAL derived views (term stats +
+    bigram counts + LSH index + chunk table ...); without sharing, each
+    view re-runs the changes() scan, the distinct, and two reconcile reads
+    of every dirty upstream bucket — the dominant per-sync cost once
+    deltas spread across buckets. The frames after the changed-keys
+    semi-join are O(change), so they're persisted once and served to
+    every view syncing the SAME (since, cur) window; a view whose cursor
+    lags (crash retry) misses the cache and computes its own window.
 
     Pass one instance to every sync of the same upstream within one
     driver run, and ``release()`` it after the batch's last view syncs
     (deterministic executor-memory release — GC would get there
-    eventually, but not between thousands of micro-batches). Do NOT
-    reuse across upstream commits (keys include the window, so stale
-    entries are never served — they just hold memory).
+    eventually, but not between thousands of micro-batches). A sync given
+    no instance makes and releases a private one (:func:`sync_window`).
+    Do NOT reuse across upstream commits (keys include the window, so
+    stale entries are never served — they just hold memory).
 
     Bootstrap windows (``since == 0``) are NOT materialized: there the
     post-image IS the whole corpus, and caching it would write a
@@ -110,42 +123,22 @@ class WindowImages:
     def get(self, since: int, cur: int):
         w = (since, cur)
         if w not in self._cache:
-            pre_snap, post_snap = self.src.snapshot(since), self.src.snapshot(cur)
-            key = post_snap.key_field
+            snaps = [self.src.snapshot(v) for v in (since, cur)]
+            key = snaps[1].key_field
             ch = self.src.changes(since_version=since, to_version=cur)
             changed = ch.select(key).distinct().persist()
             self._pinned.append(changed)
-            # BOTH image reads resolve bucket ids against the snapshot
-            # they are pinned to — `since` for the pre-image, `cur` for
-            # the post-image. A tolerated in-window rebucket (or one
-            # committed concurrently after `cur` was captured) means the
-            # CURRENT layout's ids don't match the pinned snapshot's
-            # files, and pruning with them would silently drop
-            # retractions/assertions.
-
-            def buckets(snap) -> list[int]:
-                return sorted(
-                    r["b"]
-                    for r in changed.select(
-                        self.src.bucket_expr(F.col(key), snap=snap).alias("b")
-                    )
-                    .distinct()
-                    .collect()
-                )
-
-            dirty_pre = buckets(pre_snap) if since > 0 else []
-            dirty = buckets(post_snap)
-            pre = self.src.read(snap=pre_snap, buckets=dirty_pre).join(
-                changed, on=key, how="semi"
-            )
-            post = self.src.read(snap=post_snap, buckets=dirty).join(
-                changed, on=key, how="semi"
+            # each image is pinned to its own version — `since` for the
+            # pre-image, `cur` for the post-image — and read_for prunes
+            # with THAT snapshot's layout (a rebucket may lie in between)
+            pre, post = (
+                self.src.read_for(changed, key, snap=snap)
+                .join(changed, on=key, how="semi")
+                for snap in snaps
             )
             if since > 0:  # steady state: O(change) frames, worth caching
-                pre = pre.persist()
-                post = post.persist()
-                self._pinned.extend([pre, post])
-            self._cache[w] = (changed, dirty, pre, post)
+                self._pinned += [pre.persist(), post.persist()]
+            self._cache[w] = (changed, pre, post)
         return self._cache[w]
 
     def release(self) -> None:
@@ -155,6 +148,53 @@ class WindowImages:
             df.unpersist()
         self._pinned.clear()
         self._cache.clear()
+
+
+@contextmanager
+def sync_window(src: LakeTable, images: WindowImages | None):
+    """The prologue every sync over ``src``'s window shares. Checks that a
+    given ``images`` belongs to ``src``, makes a private one if none was
+    given, and yields ``(images, pin)``. ``pin(df)`` persists a frame
+    private to this call. On exit, normal or raising, every pinned frame
+    is unpersisted and a private ``images`` is released, so a failed sync
+    leaks no cached frame."""
+    if images is not None and images.src.root != src.root:
+        raise ValueError(
+            f"WindowImages was built on {images.src.root}, not {src.root} — "
+            "a shared window cache serves exactly one upstream"
+        )
+    imgs = images or WindowImages(src)
+    pinned: list[DataFrame] = []
+
+    def pin(df: DataFrame) -> DataFrame:
+        pinned.append(df.persist())
+        return df
+
+    try:
+        yield imgs, pin
+    finally:
+        for df in pinned:
+            df.unpersist()
+        if images is None:
+            imgs.release()
+
+
+def retract_assert(
+    retract: DataFrame, assert_: DataFrame, cols: list, cur: int
+) -> DataFrame:
+    """The merge batch of one window into a derived table: ``retract``
+    rows as deletes at seq ``2·cur`` (op ``d``) unioned with ``assert_``
+    rows as upserts at seq ``2·cur+1`` (op ``u``). LWW keeps the upsert
+    for a key on both sides, i.e. the unchanged part of an updated doc."""
+    return retract.select(
+        *cols, F.lit(2 * cur).cast("long").alias("seq"), F.lit("d").alias("op")
+    ).unionByName(
+        assert_.select(
+            *cols,
+            F.lit(2 * cur + 1).cast("long").alias("seq"),
+            F.lit("u").alias("op"),
+        )
+    )
 
 
 def sync_derived_rows(
@@ -169,42 +209,22 @@ def sync_derived_rows(
     index: a document's passages, LSH bands, n-grams, ...). Each derived
     row must carry ``dst``'s key, UNIQUE per derived row and embedding
     the upstream key — that makes retraction exact: per sync window the
-    batch is ``derive(pre-image of changed docs)`` as deletes (even seq)
-    unioned with ``derive(post-image)`` as upserts (odd seq; LWW keeps
-    the upsert for keys on both sides, i.e. the unchanged part of an
-    updated document). Reads are bucket-pruned to the changed docs;
-    exactly-once via the destination's own manifest cursor, like every
-    other sync in this module. ``derive`` must be per-upstream-row
+    batch is ``derive(pre-image of changed docs)`` retracted and
+    ``derive(post-image)`` asserted (:func:`retract_assert`). Reads are
+    bucket-pruned to the changed docs; exactly-once via the
+    destination's own manifest cursor, like every other sync in this
+    module. ``derive`` must be per-upstream-row
     independent (each derived row from exactly one doc)."""
     since = last_synced_version(dst, job_id)
     cur = src.snapshot().version
     if cur <= since:
         return MirrorResult(from_version=since, to_version=since, skipped=True)
-    if images is not None and images.src.root != src.root:
-        raise ValueError(
-            f"WindowImages was built on {images.src.root}, not {src.root} — "
-            "a shared window cache serves exactly one upstream"
-        )
-    own = images is None
-    imgs = images or WindowImages(src)
-    try:
-        _changed, _dirty, pre, post = imgs.get(since, cur)
-        out_cols = dst.schema().fieldNames()
-        batch = derive(pre).select(
-            *out_cols,
-            F.lit(2 * cur).cast("long").alias("seq"),
-            F.lit("d").alias("op"),
-        ).unionByName(
-            derive(post).select(
-                *out_cols,
-                F.lit(2 * cur + 1).cast("long").alias("seq"),
-                F.lit("u").alias("op"),
-            )
+    with sync_window(src, images) as (imgs, _pin):
+        _changed, pre, post = imgs.get(since, cur)
+        batch = retract_assert(
+            derive(pre), derive(post), dst.schema().fieldNames(), cur
         )
         merge_batch(dst, batch, batch_id=f"v{cur}", job_id=job_id)
-    finally:
-        if own:
-            imgs.release()
     return MirrorResult(from_version=since, to_version=cur)
 
 
@@ -255,18 +275,6 @@ def sync_aggregate(
     cur = src.snapshot().version
     if cur <= since:
         return MirrorResult(from_version=since, to_version=since, skipped=True)
-    if images is not None and images.src.root != src.root:
-        raise ValueError(
-            f"WindowImages was built on {images.src.root}, not {src.root} — "
-            "a shared window cache serves exactly one upstream"
-        )
-    # the (changed, dirty-bucket, pre/post image) frames are cached once
-    # per window and shared with every other view syncing this upstream
-    # (see WindowImages) — the changes() scan, the distinct and the two
-    # reconcile reads run once, not once per view
-    own = images is None
-    imgs = images or WindowImages(src)
-    _changed, _dirty, pre_img, post_img = imgs.get(since, cur)
     cols = [group_col, *sum_cols]
 
     def _image(img: DataFrame, sign: int) -> DataFrame:
@@ -274,61 +282,46 @@ def sync_aggregate(
             img = row_transform(img)
         return img.select(*cols, F.lit(sign).alias("_sign"))
 
-    pre = _image(pre_img, -1)
-    post = _image(post_img, 1)
-    # persisted: one row per dirty group; consumed by the dst-bucket
-    # collect and the adjustment join
-    delta = (
-        post.unionByName(pre)
-        .groupBy(group_col)
-        .agg(
-            F.sum("_sign").alias("_d_n"),
-            *[
-                F.sum(F.col(c) * F.col("_sign")).alias(f"_d_{c}")
-                for c in sum_cols
-            ],
+    with sync_window(src, images) as (imgs, pin):
+        # the (changed, pre/post image) frames are cached once per window
+        # and shared with every other view syncing this upstream
+        _changed, pre_img, post_img = imgs.get(since, cur)
+        # pinned: one row per dirty group; consumed by the dst-bucket
+        # collect and the adjustment join
+        delta = pin(
+            _image(post_img, 1)
+            .unionByName(_image(pre_img, -1))
+            .groupBy(group_col)
+            .agg(
+                F.sum("_sign").alias("_d_n"),
+                *[
+                    F.sum(F.col(c) * F.col("_sign")).alias(f"_d_{c}")
+                    for c in sum_cols
+                ],
+            )
         )
-        .persist()
-    )
-    # one snapshot for the bucket ids and the read that uses them: a
-    # concurrent rebucket must not pair one bucket count with another
-    # snapshot's layout
-    dsnap = dst.snapshot()
-    dst_buckets = sorted(
-        r["b"]
-        for r in delta.select(
-            dst.bucket_expr(F.col(group_col), snap=dsnap).alias("b")
-        )
-        .distinct()
-        .collect()
-    )
-    old = dst.read(buckets=dst_buckets, snap=dsnap).select(
-        group_col,
-        F.col(count_col).alias("_old_n"),
-        *[F.col(c).alias(f"_old_{c}") for c in sum_cols],
-    )
-    merged = (
-        delta.join(old, on=group_col, how="left")
-        .select(
+        old = dst.read_for(delta, group_col).select(
             group_col,
-            (F.coalesce("_old_n", F.lit(0)) + F.col("_d_n")).alias(count_col),
-            *[
-                (
-                    F.coalesce(f"_old_{c}", F.lit(0))
-                    + F.coalesce(f"_d_{c}", F.lit(0))
-                ).alias(c)
-                for c in sum_cols
-            ],
+            F.col(count_col).alias("_old_n"),
+            *[F.col(c).alias(f"_old_{c}") for c in sum_cols],
         )
-        .withColumn("seq", F.lit(cur).cast("long"))
-        .withColumn(
-            "op", F.when(F.col(count_col) <= 0, F.lit("d")).otherwise(F.lit("u"))
+        merged = (
+            delta.join(old, on=group_col, how="left")
+            .select(
+                group_col,
+                (F.coalesce("_old_n", F.lit(0)) + F.col("_d_n")).alias(count_col),
+                *[
+                    (
+                        F.coalesce(f"_old_{c}", F.lit(0))
+                        + F.coalesce(f"_d_{c}", F.lit(0))
+                    ).alias(c)
+                    for c in sum_cols
+                ],
+            )
+            .withColumn("seq", F.lit(cur).cast("long"))
+            .withColumn(
+                "op", F.when(F.col(count_col) <= 0, F.lit("d")).otherwise(F.lit("u"))
+            )
         )
-    )
-    try:
         merge_batch(dst, merged, batch_id=f"v{cur}", job_id=job_id)
-    finally:
-        delta.unpersist()
-        if own:
-            imgs.release()
     return MirrorResult(from_version=since, to_version=cur)

@@ -21,6 +21,11 @@ Scale design (the part that must survive 100 TB / 1000 executors):
   were written under; the reader groups files by schema id, reads each
   group with its exact schema (no inference, no mergeSchema scan), and
   casts to the current logical schema in one projection.
+- **One pinned key-pruned read.** :meth:`LakeTable.read_for` is the only
+  place a reader turns probe keys into bucket ids, and it resolves them
+  against the same snapshot it reads. That is the layout rule: bucket
+  ids are meaningful only under the snapshot whose ``n_buckets`` made
+  them (a rebucket changes the count).
 - **Atomic snapshot commits** (metadata.py) give readers snapshot isolation
   and writers optimistic concurrency.
 
@@ -219,6 +224,26 @@ class LakeTable:
             return self.scan_files(clean, snap, logical)
         rec = self._reconcile_scan(dirty, snap, logical)
         return self.scan_files(clean, snap, logical).unionByName(rec) if clean else rec
+
+    def read_for(
+        self, keys: DataFrame, col, snap: Snapshot | None = None
+    ) -> DataFrame:
+        """The rows of the buckets that ``keys[col]`` hashes into, read at
+        ONE snapshot (default: the current one, loaded once). The bucket
+        ids resolve against that same snapshot's layout, so a rebucket
+        committed between the two steps, or a read pinned to an older
+        version, never pairs one bucket count with another layout's
+        files. ``col`` is a column name or a ``Column`` (e.g. a cast key).
+        A snapshot without files needs no ids (no Spark job). The caller
+        still joins ``keys`` to the result: buckets hold other keys too."""
+        snap = snap or self.snapshot()
+        if not snap.files:
+            return self.read(buckets=[], snap=snap)
+        c = F.col(col) if isinstance(col, str) else col
+        ids = keys.select(self.bucket_expr(c, snap=snap).alias("b"))
+        return self.read(
+            buckets=[r["b"] for r in ids.distinct().collect()], snap=snap
+        )
 
     def scan_files(
         self, entries: list[dict], snap: Snapshot, target: T.StructType
@@ -564,8 +589,8 @@ class LakeTable:
         AFTER it (a fully-caught-up consumer; a lagging one still raises,
         see ``changes()``). Consumers reading pre-images at an older
         version must resolve bucket ids against THAT version's layout
-        (``snapshot(v).n_buckets``), as ``lake/mirror.WindowImages``
-        does — current-layout ids don't exist in the old snapshot.
+        (``snapshot(v).n_buckets``), which :meth:`read_for` with that
+        snapshot does — current-layout ids don't exist in the old one.
         Retries on commit conflict, recomputing from a fresh snapshot."""
         if factor < 2:
             raise ValueError("factor must be >= 2")

@@ -200,18 +200,8 @@ def probe_ivf_index(
         .persist()
     )
     try:
-        snap = index.snapshot()  # bucket ids and read share one layout
-        buckets = sorted(
-            r["b"]
-            for r in q_cells.select(
-                index.bucket_expr(F.col("cell").cast("string"), snap=snap)
-                .alias("b")
-            )
-            .distinct()
-            .collect()
-        )
         cand = (
-            index.read(buckets=buckets, snap=snap)
+            index.read_for(q_cells, F.col("cell").cast("string"))
             .select(
                 "cell", F.col("vec_id").alias("_cid"), F.col("vec").alias("_cvec")
             )

@@ -212,6 +212,8 @@ class GaShapedReportDriver(IntervalDriver):
         self, spark: SparkSession, interval: TimeInterval
     ) -> DataFrame:
         self.read_log.append(interval.id)
+        # id(spark) cannot be reused while the entry lives: the cached
+        # DataFrame holds its session (DataFrame._session), so it stays alive
         ck = (id(spark), self.now)
         df = self._src_cache.get(ck)
         if df is None:

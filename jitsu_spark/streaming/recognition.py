@@ -151,20 +151,11 @@ class UserRecognition:
         # broadcast exceeds driver memory) — above the threshold both the
         # inner join and the matched-keys anti-join run as plain shuffled
         # joins and AQE picks the physical strategy.
-        ids_snap = self.identities.snapshot()
-        anon_buckets = [
-            r["b"]
-            for r in anonymous.select(
-                self.identities.bucket_expr(F.col(anon), snap=ids_snap).alias("b")
-            )
-            .distinct()
-            .collect()
-        ]
         n_anon = anonymous.count()
         small_anon = n_anon <= self.broadcast_row_threshold
-        ids_scan = self.identities.read(
-            buckets=anon_buckets, snap=ids_snap
-        ).withColumnRenamed("user_id", "_resolved")
+        ids_scan = self.identities.read_for(anonymous, anon).withColumnRenamed(
+            "user_id", "_resolved"
+        )
         recognized = (
             ids_scan.join(
                 F.broadcast(anonymous) if small_anon else anonymous,

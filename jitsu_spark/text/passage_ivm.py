@@ -21,7 +21,10 @@ per sync (upstream versions ``since -> cur``):
 
 1. changed docs D from ``changes()``; their pre-image text (upstream read
    AT ``since``, bucket-pruned to D) and post-image text (read at
-   ``cur``) explode to the occurrence rows to retract / assert — O(D);
+   ``cur``) explode to the occurrence rows to retract / assert — O(D).
+   The window's frames come from ``lake/mirror.WindowImages`` — the
+   caller's, shared with every other view of the upstream, or a private
+   one — so this module computes no window of its own;
 2. the occ merge applies retractions (op 'd', even seq) and assertions
    (op 'u', odd seq — LWW keeps the assertion when a key appears in
    both, i.e. the unchanged part of an updated document);
@@ -37,7 +40,8 @@ per sync (upstream versions ``since -> cur``):
    (pruned to those passages' buckets) and merged into ``result``;
    upstream deletes delete their result row.
 
-Everything is bucket-pruned on both ends; no full-corpus scan, shuffle,
+Everything is bucket-pruned on both ends through ``LakeTable.read_for``
+(bucket ids and files from one snapshot); no full-corpus scan, shuffle,
 or window appears anywhere. Crash-safety: each stage carries its OWN
 cursor (its table's commit manifest), applied in occ -> winners -> result
 order; a stage's window is (its own cursor, upstream current], so a crash
@@ -45,7 +49,8 @@ between stages — even with further upstream commits before the retry —
 resumes with each stage recomputing a window that exactly matches what
 its table is missing. Reads that must see another table's PRE-advance
 state pin the version its lineage records for the consistent batch
-(``_version_after_batch``). Consume-before-compact applies to the
+(``_version_after_batch``); stage 3 reads the current winners at one
+pinned snapshot. Consume-before-compact applies to the
 upstream as for any ``changes()`` consumer, and to the state tables'
 manifests for unfinished retries.
 """
@@ -61,7 +66,12 @@ from pyspark.sql import types as T
 
 from jitsu_spark.lake.merge import merge_batch
 from jitsu_spark.lake.metadata import Snapshot
-from jitsu_spark.lake.mirror import MirrorResult, last_synced_version
+from jitsu_spark.lake.mirror import (
+    MirrorResult,
+    last_synced_version,
+    retract_assert,
+    sync_window,
+)
 from jitsu_spark.lake.table import BUCKET_PREFIX_SEP_PROP, LakeTable
 from jitsu_spark.text.passages import explode_passages
 
@@ -76,17 +86,18 @@ SEP = "#"  # never appears inside an md5 hex prefix
 WINDOW_PROP = "passage_ivm.window"
 
 
-def _version_after_batch(table: LakeTable, job_id: str, upstream_v: int) -> int:
-    """The version of ``table`` just AFTER batch ``v<upstream_v>`` was
-    merged (0 when ``upstream_v`` is 0, i.e. never synced) — the pinned
-    read point at which ``table`` is consistent with the upstream at
-    ``upstream_v``. Raises if the batch's lineage entry has been archived
-    (sync retries must complete before ``compact_manifest``, the usual
+def _version_after_batch(snap: Snapshot, job_id: str, upstream_v: int) -> int:
+    """The version of a state table just AFTER batch ``v<upstream_v>`` was
+    merged, looked up in the lineage of its snapshot ``snap`` (0 when
+    ``upstream_v`` is 0, i.e. never synced) — the pinned read point at
+    which the table is consistent with the upstream at ``upstream_v``.
+    Raises if the batch's lineage entry has been archived (sync retries
+    must complete before ``compact_manifest``, the usual
     consume-before-compact rule)."""
     if upstream_v <= 0:
         return 0
     bid = f"v{upstream_v}"
-    for e in table.snapshot().lineage:
+    for e in snap.lineage:
         if (
             e.get("kind") == "merge"
             and e.get("job_id") == job_id
@@ -94,7 +105,7 @@ def _version_after_batch(table: LakeTable, job_id: str, upstream_v: int) -> int:
         ):
             return e["version"]
     raise ValueError(
-        f"lineage for sync batch {bid} of {table.root} is archived — "
+        f"lineage for sync batch {bid} of job {job_id!r} is archived — "
         "finish/retry syncs before compact_manifest"
     )
 
@@ -203,63 +214,6 @@ class PassageDedupView:
             "passage",
         )
 
-    def _buckets(
-        self,
-        table: LakeTable,
-        df: DataFrame,
-        col: str,
-        snap: Snapshot | None = None,
-    ) -> list[int]:
-        """Distinct bucket ids of ``df[col]``. Pass the snapshot a read is
-        PINNED to whenever it reads an older version — resolving against
-        the current layout while reading an older pinned snapshot silently
-        mis-prunes across a rebucket."""
-        return sorted(
-            r["b"]
-            for r in df.select(
-                table.bucket_expr(F.col(col), snap=snap).alias("b")
-            )
-            .distinct()
-            .collect()
-        )
-
-    def _window(self, src: LakeTable, lo: int, cur: int, key: str,
-                text_col: str, images=None):
-        """(changed keys, pre-image docs @lo, post-image docs @cur) for the
-        upstream window (lo, cur] — every read bucket-pruned to the
-        changed docs. With a shared ``images`` (lake/mirror.WindowImages),
-        the frames come from the cross-view cache instead of a fresh
-        scan — one window computation serves every view of the upstream."""
-        if images is not None:
-            changed, _dirty, pre, post = images.get(lo, cur)
-            return (
-                changed,
-                pre.select(key, F.col(text_col).alias("text")),
-                post.select(key, F.col(text_col).alias("text")),
-            )
-        changed = (
-            src.changes(since_version=lo, to_version=cur)
-            .select(key).distinct().persist()
-        )
-        # bucket ids resolve against the layout of the snapshot each read
-        # is pinned to — `cur` for the post-image, `lo` for the pre-image
-        # (an in-window or concurrent rebucket otherwise makes the prune
-        # drop retractions/assertions)
-        post_snap, pre_snap = src.snapshot(cur), src.snapshot(lo)
-        dbk = self._buckets(src, changed, key, snap=post_snap)
-        dbk_pre = self._buckets(src, changed, key, snap=pre_snap) if lo > 0 else []
-        pre = (
-            src.read(snap=pre_snap, buckets=dbk_pre)
-            .join(changed, on=key, how="semi")
-            .select(key, F.col(text_col).alias("text"))
-        )
-        post = (
-            src.read(snap=post_snap, buckets=dbk)
-            .join(changed, on=key, how="semi")
-            .select(key, F.col(text_col).alias("text"))
-        )
-        return changed, pre, post
-
     def sync(
         self, src: LakeTable, text_col: str = "text", images=None
     ) -> MirrorResult:
@@ -269,83 +223,60 @@ class PassageDedupView:
         so a crash between stages resumes exactly where it stopped even
         if more upstream commits landed in between — each retried stage
         recomputes its window from its OWN cursor against pinned upstream
-        versions, never against state another stage already moved."""
+        versions, never against state another stage already moved. The
+        windows come from ``images`` (lake/mirror.WindowImages), or from a
+        private instance when none is given."""
         res_since = last_synced_version(self.result, self.job_id)
-        cur = src.snapshot().version
+        src_snap = src.snapshot()
+        cur, key = src_snap.version, src_snap.key_field
         if cur <= res_since:
             return MirrorResult(from_version=res_since, to_version=res_since,
                                 skipped=True)
         bid = f"v{cur}"
-        key = src.snapshot().key_field
-        pinned: list[DataFrame] = []
-        # per-sync memo of the (window, occurrence, dirty-passage) frames
-        # keyed by the stage's cursor: in the steady no-crash path all
-        # three cursors coincide, so the changes() scan, the pre/post
-        # bucket-pruned reads, and the occurrence explosions are computed
-        # and persisted ONCE and shared by every stage (the per-stage
-        # windows still exist for the crash-retry path, where cursors
-        # differ and each lo gets its own entry).
-        win_cache: dict[int, tuple] = {}
+        cols = ["k", "passage_h", "doc", "pos", "passage"]
+        # per-sync memo of the occurrence and dirty-passage frames keyed
+        # by the stage's cursor: in the steady no-crash path all three
+        # cursors coincide, so the occurrence explosions are computed and
+        # persisted ONCE and shared by every stage (on the crash-retry
+        # path cursors differ and each lo gets its own entry, as it does
+        # in WindowImages).
         occ_cache: dict[int, tuple] = {}
         dirty_cache: dict[int, DataFrame] = {}
 
-        def get_window(lo: int):
-            if lo not in win_cache:
-                ch, pre, post = self._window(
-                    src, lo, cur, key, text_col, images=images
+        with sync_window(src, images) as (imgs, pin):
+
+            def get_window(lo: int):
+                ch, pre, post = imgs.get(lo, cur)
+                return ch, *(
+                    df.select(key, F.col(text_col).alias("text"))
+                    for df in (pre, post)
                 )
-                post = post.persist()
-                pinned.append(post)
-                if images is None:
-                    # only pin frames THIS sync created: with a shared
-                    # WindowImages, `ch` is the cross-view cached frame —
-                    # unpersisting it here would silently defeat the
-                    # cache for every view that syncs after this one
-                    # (its lifecycle belongs to WindowImages.release())
-                    pinned.append(ch)
-                win_cache[lo] = (ch, pre, post)
-            return win_cache[lo]
 
-        def get_occ(lo: int):
-            if lo not in occ_cache:
-                _, pre, post = get_window(lo)
-                op = self._occurrences(pre, key).persist()
-                on = self._occurrences(post, key).persist()
-                pinned.extend([op, on])
-                occ_cache[lo] = (op, on)
-            return occ_cache[lo]
+            def get_occ(lo: int):
+                if lo not in occ_cache:
+                    _, pre, post = get_window(lo)
+                    occ_cache[lo] = (
+                        pin(self._occurrences(pre, key)),
+                        pin(self._occurrences(post, key)),
+                    )
+                return occ_cache[lo]
 
-        def get_dirty(lo: int) -> DataFrame:
-            if lo not in dirty_cache:
-                op, on = get_occ(lo)
-                d = (
-                    op.select("passage_h")
-                    .unionByName(on.select("passage_h"))
-                    .distinct()
-                    .persist()
-                )
-                pinned.append(d)
-                dirty_cache[lo] = d
-            return dirty_cache[lo]
+            def get_dirty(lo: int) -> DataFrame:
+                if lo not in dirty_cache:
+                    op, on = get_occ(lo)
+                    dirty_cache[lo] = pin(
+                        op.select("passage_h")
+                        .unionByName(on.select("passage_h"))
+                        .distinct()
+                    )
+                return dirty_cache[lo]
 
-        try:
             # -- stage 1: occurrence index retract/assert — O(changed) ------
             occ_since = last_synced_version(self.occ, self.job_id)
             if occ_since < cur:
                 op1, on1 = get_occ(occ_since)
-                occ_batch = op1.select(
-                    "k", "passage_h", "doc", "pos", "passage",
-                    F.lit(2 * cur).cast("long").alias("seq"),
-                    F.lit("d").alias("op"),
-                ).unionByName(
-                    on1.select(
-                        "k", "passage_h", "doc", "pos", "passage",
-                        F.lit(2 * cur + 1).cast("long").alias("seq"),
-                        F.lit("u").alias("op"),
-                    )
-                )
-                merge_batch(self.occ, occ_batch, batch_id=bid,
-                            job_id=self.job_id)
+                merge_batch(self.occ, retract_assert(op1, on1, cols, cur),
+                            batch_id=bid, job_id=self.job_id)
 
             # -- stage 2: winner recompute for DISPLACED passages only ------
             # A dirty passage needs the (corpus-sized) occurrence index
@@ -361,19 +292,16 @@ class PassageDedupView:
             if win_since < cur:
                 dirty = get_dirty(win_since)
                 op2, on2 = get_occ(win_since)
-                wbk = self._buckets(self.winners, dirty, "passage_h")
                 # winners is still at win_since state here (its own batch
                 # is unapplied), so current reads ARE the old winners
-                old = (
-                    self.winners.read(buckets=wbk)
+                old = pin(
+                    self.winners.read_for(dirty, "passage_h")
                     .join(dirty, on="passage_h", how="semi")
-                    .persist()
                 )
-                pinned.append(old)
                 # occurrences truly retracted: in the pre-image, not
                 # re-asserted in the post-image (k = hash#doc#pos)
                 tr = op2.join(on2.select("k"), on="k", how="left_anti")
-                displaced = (
+                displaced = pin(
                     old.alias("o")
                     .join(
                         tr.alias("t"),
@@ -383,14 +311,11 @@ class PassageDedupView:
                         "left_semi",
                     )
                     .select("passage_h")
-                    .persist()
                 )
-                pinned.append(displaced)
                 # displaced passages: full recompute from occ (consistent
                 # with src@cur after stage 1), pruned to THEIR buckets
-                pbk = self._buckets(self.occ, displaced, "passage_h")
                 recomputed = (
-                    self.occ.read(buckets=pbk)
+                    self.occ.read_for(displaced, "passage_h")
                     .join(displaced, on="passage_h", how="semi")
                     .groupBy("passage_h")
                     .agg(F.min(F.struct("doc", "pos")).alias("_w"))
@@ -416,74 +341,54 @@ class PassageDedupView:
                     .groupBy("passage_h")
                     .agg(F.min("_w").alias("_w"))
                 )
-                new_winners = (
+                new_winners = pin(
                     nd.unionByName(recomputed)
                     .select(
                         "passage_h",
                         F.col("_w.doc").alias("win_doc"),
                         F.col("_w.pos").alias("win_pos"),
                     )
-                    .persist()
                 )
-                pinned.append(new_winners)
                 # gone = displaced passages with zero occurrences left
                 gone = old.join(new_winners, on="passage_h", how="left_anti")
-                win_batch = new_winners.select(
-                    "passage_h", "win_doc", "win_pos",
-                    F.lit(2 * cur + 1).cast("long").alias("seq"),
-                    F.lit("u").alias("op"),
-                ).unionByName(
-                    gone.select(
-                        "passage_h", "win_doc", "win_pos",
-                        F.lit(2 * cur).cast("long").alias("seq"),
-                        F.lit("d").alias("op"),
-                    )
+                merge_batch(
+                    self.winners,
+                    retract_assert(gone, new_winners,
+                                   ["passage_h", "win_doc", "win_pos"], cur),
+                    batch_id=bid, job_id=self.job_id,
                 )
-                merge_batch(self.winners, win_batch, batch_id=bid,
-                            job_id=self.job_id)
 
             # -- stage 3: rebuild per-doc rows for AFFECTED docs ------------
             ch3, _, post3 = get_window(res_since)
             dirty3 = get_dirty(res_since)
-            wbk3 = self._buckets(self.winners, dirty3, "passage_h")
-            # winners at the version consistent with src@res_since — the
-            # pinned pre-state even on a retry where stage 2 already ran;
-            # its bucket ids resolve against THAT snapshot's layout
-            win_pre_v = _version_after_batch(self.winners, self.job_id,
-                                             res_since)
-            win_pre = self.winners.snapshot(win_pre_v)
-            wbk3_pre = self._buckets(
-                self.winners, dirty3, "passage_h", snap=win_pre
-            ) if win_pre_v > 0 else []
-            old_w_docs = (
-                self.winners.read(snap=win_pre, buckets=wbk3_pre)
+            # old winner docs come from winners at the version consistent
+            # with src@res_since — the pinned pre-state even on a retry
+            # where stage 2 already ran; new ones, and the kept-set join
+            # below, from ONE current winners snapshot
+            win_cur = self.winners.snapshot()
+            win_pre = self.winners.snapshot(
+                _version_after_batch(win_cur, self.job_id, res_since)
+            )
+            old_w_docs, new_w_docs = (
+                self.winners.read_for(dirty3, "passage_h", snap=snap)
                 .join(dirty3, on="passage_h", how="semi")
                 .select(F.col("win_doc").alias("doc"))
+                for snap in (win_pre, win_cur)
             )
-            new_w_docs = (
-                self.winners.read(buckets=wbk3)
-                .join(dirty3, on="passage_h", how="semi")
-                .select(F.col("win_doc").alias("doc"))
-            )
-            affected = (
+            affected = pin(
                 ch3.select(F.col(key).alias("doc"))
                 .unionByName(old_w_docs)
                 .unionByName(new_w_docs)
                 .distinct()
                 .withColumnRenamed("doc", key)
-                .persist()
             )
-            pinned.append(affected)
-            src_cur = src.snapshot(cur)
-            abk = self._buckets(src, affected, key, snap=src_cur)
             docs_a = (
-                src.read(snap=src_cur, buckets=abk)
+                src.read_for(affected, key, snap=src_snap)
                 .join(affected, on=key, how="semi")
                 .select(key, F.col(text_col).alias("text"))
             )
             occ_a = self._occurrences(docs_a, key)
-            a_pbk = self._buckets(self.winners, occ_a, "passage_h")
-            w = self.winners.read(buckets=a_pbk)
+            w = self.winners.read_for(occ_a, "passage_h", snap=win_cur)
             kept = occ_a.join(w, on="passage_h", how="left").withColumn(
                 "_kept",
                 (F.col("doc") == F.col("win_doc"))
@@ -507,29 +412,25 @@ class PassageDedupView:
                     " ",
                 ).alias("clean_text"),
             )
+            # upstream deletes retract their row (NULL payload)
             deleted = ch3.join(
                 post3.select(key), on=key, how="left_anti"
-            ).select(F.col(key).alias("doc"))
-            res_batch = res.select(
-                F.col("doc").alias(key),
-                "n_passages", "n_kept", "clean_text",
-                F.lit(2 * cur + 1).cast("long").alias("seq"),
-                F.lit("u").alias("op"),
-            ).unionByName(
-                deleted.select(
-                    F.col("doc").alias(key),
-                    F.lit(None).cast("long").alias("n_passages"),
-                    F.lit(None).cast("long").alias("n_kept"),
-                    F.lit(None).cast("string").alias("clean_text"),
-                    F.lit(2 * cur).cast("long").alias("seq"),
-                    F.lit("d").alias("op"),
-                )
+            ).select(
+                F.col(key).alias("doc"),
+                F.lit(None).cast("long").alias("n_passages"),
+                F.lit(None).cast("long").alias("n_kept"),
+                F.lit(None).cast("string").alias("clean_text"),
             )
-            merge_batch(self.result, res_batch, batch_id=bid,
-                        job_id=self.job_id)
-        finally:
-            for df in pinned:
-                df.unpersist()
+            merge_batch(
+                self.result,
+                retract_assert(
+                    deleted, res,
+                    [F.col("doc").alias(key), "n_passages", "n_kept",
+                     "clean_text"],
+                    cur,
+                ),
+                batch_id=bid, job_id=self.job_id,
+            )
         return MirrorResult(from_version=res_since, to_version=cur)
 
     def read(self) -> DataFrame:

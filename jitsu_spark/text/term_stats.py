@@ -40,7 +40,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from jitsu_spark.lake.mirror import MirrorResult, WindowImages, sync_aggregate
+from jitsu_spark.lake.mirror import (
+    MirrorResult,
+    WindowImages,
+    sync_aggregate,
+    sync_window,
+)
 from jitsu_spark.lake.table import LakeTable
 from jitsu_spark.text.tokenize import doc_tokens, non_empty
 
@@ -156,9 +161,7 @@ def sync_corpus_stats(
     ``images`` to extend the sharing to further views of the same
     upstream synced in the same run."""
     key = id_col or src.snapshot().key_field
-    own = images is None
-    images = images or WindowImages(src)
-    try:
+    with sync_window(src, images) as (imgs, _pin):
         out = {
             "stats": sync_aggregate(
                 src,
@@ -168,7 +171,7 @@ def sync_corpus_stats(
                 count_col="df",
                 job_id=job_id,
                 row_transform=term_rows(key, text_col),
-                images=images,
+                images=imgs,
             ),
             "meta": sync_aggregate(
                 src,
@@ -177,7 +180,7 @@ def sync_corpus_stats(
                 count_col="n_docs",
                 job_id=job_id,
                 row_transform=corpus_rows(text_col),
-                images=images,
+                images=imgs,
             ),
         }
         if "bigrams" in tables:
@@ -188,11 +191,8 @@ def sync_corpus_stats(
                 count_col="c",
                 job_id=job_id,
                 row_transform=bigram_rows(key, text_col),
-                images=images,
+                images=imgs,
             )
-    finally:
-        if own:
-            images.release()
     return out
 
 

@@ -520,3 +520,45 @@ def test_sync_aggregate_pins_one_dst_snapshot(spark, tmpdir_path, monkeypatch):
     sync_aggregate(src, dst, "source", sum_cols=["n_tok"])
     assert loads.count(dst.root) == 3
     assert _agg_state(dst) == {"s1": (1, 1), "s2": (1, 2)}
+
+
+def test_failed_sync_releases_cached_frames(spark, tmpdir_path):
+    """A sync that raises leaves no persisted frame behind: the window
+    images, the aggregate delta and the private WindowImages are all
+    released on the way out. Inputs: a steady-state sync_aggregate whose
+    ``count_col`` names no destination column (raises after the delta
+    is persisted), and a sync_derived_rows whose ``derive`` raises."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from jitsu_spark.lake.mirror import sync_aggregate, sync_derived_rows
+
+    src = make_mor(spark, tmpdir_path, n_buckets=8)
+    dst = _make_agg_dst(spark, tmpdir_path)
+    merge_batch(src, batch(spark, [
+        ev(1, "i", "a", [1], source="s1"),
+        ev(2, "i", "b", [2, 2], source="s2"),
+    ]), batch_id=0)
+    sync_aggregate(src, dst, "source", sum_cols=["n_tok"])
+    merge_batch(src, batch(spark, [
+        ev(3, "u", "a", [1, 1, 1], source="s2"),
+    ]), batch_id=1)
+
+    def persisted() -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = persisted()
+    with pytest.raises(AnalysisException):
+        sync_aggregate(src, dst, "source", sum_cols=["n_tok"],
+                       count_col="no_such_col")
+    assert persisted() == before
+
+    def derive(df):
+        raise RuntimeError("derive failed")
+
+    with pytest.raises(RuntimeError, match="derive failed"):
+        sync_derived_rows(src, dst, derive)
+    assert persisted() == before
+    # the failed syncs committed nothing; a correct one still lands
+    sync_aggregate(src, dst, "source", sum_cols=["n_tok"])
+    assert _agg_state(dst) == _agg_expected(src)

@@ -99,6 +99,7 @@ def test_prefix_bucketing_colocates_and_prunes(spark, tmpdir_path):
         )
         assert got == [p * 100 + i for i in range(6)]
     # rebucket preserves the prefix rule (prefix probe still finds all)
+    pre = t.snapshot()
     t.rebucket(2)
     probe = spark.range(1).select(
         t.bucket_expr(F.lit("p3")).alias("b")
@@ -107,6 +108,23 @@ def test_prefix_bucketing_colocates_and_prunes(spark, tmpdir_path):
         t.read(buckets=[probe]).filter(F.col("k").startswith("p3#")).count()
         == 6
     )
+    # read_for prunes with the layout of the snapshot it reads: pinned to
+    # the pre-rebucket snapshot it uses that snapshot's 16 buckets, even
+    # for a prefix whose bucket id moved under the current 32
+    def bucket(p, snap):
+        return spark.range(1).select(
+            t.bucket_expr(F.lit(p), snap=snap).alias("b")
+        ).collect()[0]["b"]
+
+    moved = [f"p{p}" for p in range(5)
+             if bucket(f"p{p}", pre) != bucket(f"p{p}", None)]
+    assert moved and pre.n_buckets == 16
+    for p, snap in ((moved[0], pre), (moved[0], None), ("p3", None)):
+        probes = spark.createDataFrame([(p,)], "k string")
+        got = t.read_for(probes, "k", snap=snap).filter(
+            F.col("k").startswith(f"{p}#")
+        )
+        assert got.count() == 6
 
 
 def test_prefix_bucketing_requires_string_key(spark, tmpdir_path):
@@ -278,3 +296,42 @@ def test_view_load_rejects_non_view_dir(spark, tmpdir_path):
     )
     with pytest.raises(ValueError, match="passage_ivm.window"):
         PassageDedupView.load(spark, root)
+
+
+def test_sync_pins_state_table_snapshots(spark, tmpdir_path, monkeypatch):
+    """One steady-state sync loads each state table's snapshot a pinned
+    number of times. Every pruned read takes its bucket ids and its
+    files from ONE load (LakeTable.read_for), so a concurrent rebucket
+    cannot pair two layouts. winners: the stage-2 cursor, the old-winner
+    read and the merge; in stage 3 one current snapshot (lineage lookup,
+    new-winner docs and the kept-set join) plus the pinned pre-state.
+    occ: the cursor, the merge and the displaced-passage read."""
+    from jitsu_spark.lake import metadata as md
+
+    src = _mk_src(spark, os.path.join(tmpdir_path, "up"))
+    view = PassageDedupView.create(
+        spark, os.path.join(tmpdir_path, "view"), window=W, n_buckets=8
+    )
+    _apply(src, spark, [(1, f"{HEADER} {BODY[0]}", "u"),
+                        (2, f"{HEADER} {BODY[1]}", "u")], 100)
+    view.sync(src)
+    # doc 1 loses the shared header (a displaced winner), doc 3 is new
+    _apply(src, spark, [(1, BODY[2], "u"), (3, f"{HEADER} {BODY[3]}", "u")],
+           200)
+
+    loads = []
+    load = md.load_snapshot
+    monkeypatch.setattr(
+        md, "load_snapshot",
+        lambda root, v=None: loads.append((root, v)) or load(root, v),
+    )
+    view.sync(src)
+
+    def versions(table):
+        return [v for root, v in loads if root == table.root]
+
+    # the pinned pre-state is the winners version after the v2 batch
+    assert versions(view.winners) == [None] * 4 + [1]
+    assert versions(view.occ) == [None] * 3
+    assert versions(view.result) == [None] * 2
+    assert _actual(view) == _expected(src)

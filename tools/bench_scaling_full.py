@@ -15,14 +15,16 @@ import subprocess
 import sys
 import tempfile
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
+# argv: cpus, repository root (the checkout whose session helper to use)
 CPU_CONTROL = '''
 import sys, time
-sys.path.insert(0, "/root/repo")
+cpus, repo = int(sys.argv[1]), sys.argv[2]
+sys.path.insert(0, repo)
 from jitsu_spark.session import get_spark
 from pyspark.sql import functions as F
-cpus = int(sys.argv[1])
 spark = get_spark(cores=cpus, shuffle_partitions=cpus)
 spark.sparkContext.setLogLevel("ERROR")
 df = spark.range(0, 400_000_000, 1, cpus*4)
@@ -85,7 +87,7 @@ def main() -> None:
     control: dict[int, float] = {}
     for cpus in levels:
         out = subprocess.run(
-            [sys.executable, "-c", CPU_CONTROL, str(cpus)],
+            [sys.executable, "-c", CPU_CONTROL, str(cpus), REPO],
             capture_output=True, text=True,
         )
         secs = [l for l in out.stdout.splitlines() if l.startswith("SECS")]

@@ -149,7 +149,7 @@ def main() -> None:
     control: dict[int, float] = {}
     for cpus in levels:
         res = subprocess.run(
-            [sys.executable, "-c", CPU_CONTROL, str(cpus)],
+            [sys.executable, "-c", CPU_CONTROL, str(cpus), REPO],
             capture_output=True,
             text=True,
         )
