@@ -2051,9 +2051,9 @@ def q_singer_tap_sync_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S9 in the steady-state write mode: the same tap sync with every
     stream table in write.mode=mor (each portion merge is an O(portion)
     delta write, not a CoW bucket rewrite — measured 8.7x CoW on the CDC
-    path) plus the in-run compaction cadence that folds deltas back to
-    base every 3 portions. Final state must be byte-identical to the CoW
-    sync, so the oracle is the same LWW SQL."""
+    path) plus in-run maintenance, which after every portion folds any
+    bucket holding more than 2 files back to base. Final state must be
+    byte-identical to the CoW sync, so the oracle is the same LWW SQL."""
     import sys
 
     from jitsu_spark.sources.singer_tap import SingerTapJob
@@ -2070,7 +2070,7 @@ def q_singer_tap_sync_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         tables_root=os.path.join(work, "tables"),
         job_id="singer-entry-mor",
         table_properties={"write.mode": "mor"},
-        compact_every_n_portions=3,
+        compact_max_files_per_bucket=2,
     )
     job.run_once()
     job.run_once()  # resume: bookmark=8, tap emits nothing new

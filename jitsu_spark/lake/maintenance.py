@@ -1,5 +1,6 @@
-"""Table maintenance beyond compaction: time-chunk re-sync (W3) and
-orphan-file vacuum.
+"""Table maintenance: time-chunk re-sync (W3), orphan-file vacuum,
+manifest folding, snapshot expiry, and ``maintain``, the one in-stream
+step that runs whichever of them the snapshot descriptor shows is due.
 
 ``overwrite_where`` re-expresses the reference's SyncStore delete-then-
 reload of one time interval (semantics per /root/reference/server/
@@ -280,6 +281,11 @@ def expire_snapshots_safe(
     )
 
 
+#: what compact_manifest keeps: lineage entries, explicit ids per job
+KEEP_LINEAGE = 200
+KEEP_RECENT_BATCHES = 50
+
+
 @dataclass
 class ManifestCompactResult:
     version: int
@@ -291,8 +297,8 @@ class ManifestCompactResult:
 
 def compact_manifest(
     table: LakeTable,
-    keep_lineage: int = 200,
-    keep_recent_batches: int = 50,
+    keep_lineage: int = KEEP_LINEAGE,
+    keep_recent_batches: int = KEEP_RECENT_BATCHES,
 ) -> ManifestCompactResult:
     """Bound snapshot-metadata growth — the silent O(stream-age) cost of a
     long-lived CDC table.
@@ -315,7 +321,7 @@ def compact_manifest(
        into archived lineage raise — sync downstream consumers first,
        the same consume-before-compact contract as data compaction.
 
-    Retries on commit conflict (the streaming runner calls this inline in
+    Retries on commit conflict (:func:`maintain` calls this inline in
     foreachBatch while concurrent writers may be committing), recomputing
     the fold from a fresh snapshot. A retry may re-append already-archived
     lineage lines; ``full_history`` de-duplicates them by version.
@@ -331,10 +337,42 @@ def _compact_manifest_once(
     keep_recent_batches: int,
 ) -> ManifestCompactResult:
     snap = table.snapshot()
+    new_committed, _ = _fold_committed(snap.committed, keep_recent_batches)
+    n_archive = max(0, len(snap.lineage) - keep_lineage)
+    archived, kept = snap.lineage[:n_archive], snap.lineage[n_archive:]
+    res = ManifestCompactResult(
+        version=snap.version, skipped=True,
+        committed_before=len(snap.committed),
+        committed_after=len(new_committed),
+        lineage_archived=n_archive,
+    )
+    if len(new_committed) == len(snap.committed) and not archived:
+        return res
+    import json as _json
+
+    with open(_archive_path(table), "a") as f:
+        for e in archived:
+            f.write(_json.dumps(e) + "\n")
+    new_snap = md.next_snapshot(
+        replace(snap, committed=new_committed, lineage=kept),
+        "manifest_compact", snap.files,
+        archived=n_archive,
+        committed_folded=len(snap.committed) - len(new_committed),
+    )
+    md.commit_snapshot(table.root, new_snap)
+    return replace(res, version=new_snap.version, skipped=False)
+
+
+def _fold_committed(
+    committed: list[str], keep_recent_batches: int
+) -> tuple[list[str], int]:
+    """The manifest with each job's contiguous integer batch-id prefix,
+    bar the newest ``keep_recent_batches``, folded into a ``job/<=N``
+    marker; and how many explicit ids the markers absorbed."""
     passthrough: list[str] = []
     per_job: dict[str, set[int]] = {}
     markers: dict[str, int] = {}
-    for c in snap.committed:
+    for c in committed:
         job, sep, bid = c.rpartition("/")
         if not sep:
             passthrough.append(c)
@@ -351,12 +389,14 @@ def _compact_manifest_once(
         except ValueError:
             passthrough.append(c)
     new_committed = list(passthrough)
+    folded = 0
     for job, ids in sorted(per_job.items()):
         hwm = markers.pop(job, -1)
         n = hwm
         while (n + 1) in ids:
             n += 1
         marker_hwm = max(n - keep_recent_batches, hwm)
+        folded += marker_hwm - hwm
         if marker_hwm >= 0:
             new_committed.append(f"{job}/<={marker_hwm}")
         new_committed.extend(
@@ -364,36 +404,7 @@ def _compact_manifest_once(
         )
     # markers for jobs with no remaining explicit ids survive as-is
     new_committed.extend(f"{job}/<={n}" for job, n in sorted(markers.items()))
-
-    n_archive = max(0, len(snap.lineage) - keep_lineage)
-    archived = snap.lineage[:n_archive]
-    kept = snap.lineage[n_archive:]
-    if archived:
-        import json as _json
-
-        with open(_archive_path(table), "a") as f:
-            for e in archived:
-                f.write(_json.dumps(e) + "\n")
-
-    if len(new_committed) == len(snap.committed) and not archived:
-        return ManifestCompactResult(
-            version=snap.version, skipped=True,
-            committed_before=len(snap.committed),
-            committed_after=len(snap.committed),
-        )
-    new_snap = md.next_snapshot(
-        replace(snap, committed=new_committed, lineage=kept),
-        "manifest_compact", snap.files,
-        archived=len(archived),
-        committed_folded=len(snap.committed) - len(new_committed),
-    )
-    md.commit_snapshot(table.root, new_snap)
-    return ManifestCompactResult(
-        version=new_snap.version,
-        committed_before=len(snap.committed),
-        committed_after=len(new_committed),
-        lineage_archived=len(archived),
-    )
+    return new_committed, folded
 
 
 def _archive_path(table: LakeTable) -> str:
@@ -422,3 +433,31 @@ def full_history(table: LakeTable) -> list[dict]:
             seen.add(e["version"])
             out.append(e)
     return out
+
+
+def maintain(
+    table: LakeTable,
+    max_files_per_bucket: int,
+    keep_snapshots: int | None = None,
+) -> None:
+    """The one in-stream maintenance step, run after each applied batch
+    once its ``changes()`` consumers have synced (consume-before-compact).
+    Each step fires on what the snapshot descriptor shows, so a healthy
+    table costs one descriptor load and no Spark job: ``compact`` when a
+    bucket holds over ``max_files_per_bucket`` files (it folds only those
+    buckets); ``compact_manifest`` once its contiguous ids or its lineage
+    reach twice what it keeps (one metadata commit per ~50 batches);
+    ``expire_snapshots`` only when ``keep_snapshots`` is set."""
+    snap = table.snapshot()
+    if any(len(es) > max_files_per_bucket for es in snap.files.values()):
+        table.compact(max_files_per_bucket=max_files_per_bucket)
+    _, folded = _fold_committed(snap.committed, KEEP_RECENT_BATCHES)
+    if folded >= KEEP_RECENT_BATCHES or len(snap.lineage) >= 2 * KEEP_LINEAGE:
+        compact_manifest(table)
+    if keep_snapshots is not None:
+        # one maintain call can append up to TWO maintenance commits
+        # (compact + manifest_compact) AFTER the merge a post_commit
+        # consumer just synced to — its next window's pre-image read
+        # needs that merge's snapshot descriptor, so the floor is
+        # merge+compact+manifest_compact+headroom, not the plain-reader 2
+        expire_snapshots(table, keep_last=max(keep_snapshots, 4))

@@ -159,7 +159,7 @@ def _merge_once(
             )
             .collect()
         )
-        # n_events counts raw batch rows (pre-LWW upper bound on distinct
+        # n_keys counts raw batch rows (pre-LWW upper bound on distinct
         # keys; used for lineage and the join-strategy choice); n_deletes
         # counts delete envelopes, not LWW-winning deletes.
         n_keys = sum(r["n"] for r in stats)

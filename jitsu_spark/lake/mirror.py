@@ -125,7 +125,7 @@ class WindowImages:
         if w not in self._cache:
             snaps = [self.src.snapshot(v) for v in (since, cur)]
             key = snaps[1].key_field
-            ch = self.src.changes(since_version=since, to_version=cur)
+            ch = self.src.changes(since_version=since, snap=snaps[1])
             changed = ch.select(key).distinct().persist()
             self._pinned.append(changed)
             # each image is pinned to its own version — `since` for the

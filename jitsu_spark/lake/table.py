@@ -330,7 +330,8 @@ class LakeTable:
         )
 
     def changes(
-        self, since_version: int, to_version: int | None = None
+        self, since_version: int, to_version: int | None = None,
+        snap: Snapshot | None = None,
     ) -> DataFrame:
         """Incremental (CDC-out) read: the change rows committed in
         versions (since_version, to_version] — the engine's analog of an
@@ -352,9 +353,10 @@ class LakeTable:
         fold inside the window (the fold erases prior merges' delta files,
         so a lagging consumer must raise; a fully-caught-up consumer whose
         window merely STARTS before a background compaction is fine — the
-        steady-state regime of every continuously-compacted stream)."""
-        snap = self.snapshot(to_version)
-        hi = snap.version if to_version is None else to_version
+        steady-state regime of every continuously-compacted stream).
+        ``snap``, if given, is the loaded snapshot of ``to_version``."""
+        snap = snap or self.snapshot(to_version)
+        hi = snap.version
         logical = _schema(snap)
         if self.write_mode(snap) != "mor":
             raise ValueError(

@@ -39,6 +39,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from jitsu_spark.lake.maintenance import maintain
 from jitsu_spark.lake.merge import merge_batch
 from jitsu_spark.lake.table import LakeTable
 from jitsu_spark.sources.singer import split_singer_messages
@@ -188,14 +189,12 @@ class SingerTapJob:
     #: properties for lazily-created stream tables; {"write.mode": "mor"}
     #: turns every portion merge into an O(portion) delta write instead of
     #: a CoW bucket rewrite — the steady-state mode for long-lived taps
-    #: (pair with compact_every_n_portions to bound read amplification)
+    #: (pair with compact_max_files_per_bucket to bound read amplification)
     table_properties: dict | None = None
-    #: after every N applied portions, fold each stream table's delta
-    #: files back to base and compact the snapshot manifest (the stream
-    #: runner's compact_every_n_batches, at portion granularity)
-    compact_every_n_portions: int | None = None
-    compact_max_files_per_bucket: int = 8
-    applied_portions: int = 0
+    #: in-run maintenance (None = off): after every portion, each stream
+    #: table runs lake.maintenance.maintain, folding the buckets above
+    #: this file count back to base and the manifest once it has grown
+    compact_max_files_per_bucket: int | None = None
     tables: dict[str, LakeTable] = field(default_factory=dict)
     streams: dict[str, StreamMeta] = field(default_factory=dict)
 
@@ -516,22 +515,20 @@ class SingerTapJob:
         os.unlink(spool)
         return counts
 
-    def _maybe_compact(self) -> None:
-        """Fold MoR deltas + snapshot manifests on the portion cadence
-        (bounds read amplification and metadata growth over a long-lived
-        tap, same contract as the stream runner's in-stream cadence)."""
-        if not self.compact_every_n_portions:
-            return
-        if (
-            self.applied_portions == 0
-            or self.applied_portions % self.compact_every_n_portions
-        ):
-            return
-        from jitsu_spark.lake.maintenance import compact_manifest
-
-        for t in self.tables.values():
-            t.compact(max_files_per_bucket=self.compact_max_files_per_bucket)
-            compact_manifest(t)
+    def _commit_portion(
+        self, report: SingerRunReport, lines: list[str], digest, ctl: dict
+    ) -> None:
+        """Merge one portion, run each stream table's maintenance when it
+        is on, and count the portion into ``report``."""
+        counts = self._apply_portion(
+            lines, report.portions, digest.hexdigest()[:16], control=ctl
+        )
+        if self.compact_max_files_per_bucket is not None:
+            for t in self.tables.values():
+                maintain(t, self.compact_max_files_per_bucket)
+        for s, n in counts.items():
+            report.records[s] = report.records.get(s, 0) + n
+        report.portions += 1
 
     # -- the run loop --------------------------------------------------------
 
@@ -585,14 +582,7 @@ class SingerTapJob:
                         digest.update(b"\x00")
                         digest.update(line.encode())
                 if is_state or len(pending) >= self.max_portion_lines:
-                    counts = self._apply_portion(
-                        pending, report.portions, digest.hexdigest()[:16],
-                        control=ctl,
-                    )
-                    self.applied_portions += 1
-                    self._maybe_compact()
-                    for s, n in counts.items():
-                        report.records[s] = report.records.get(s, 0) + n
+                    self._commit_portion(report, pending, digest, ctl)
                     if is_state:
                         st = json.dumps(msg.get("value"))
                         self._save_state(st)
@@ -603,7 +593,6 @@ class SingerTapJob:
                     # get distinct cumulative ids (identical-content cuts
                     # cannot collide), and a redelivered run reproduces
                     # the same prefix ids, so the manifest still skips
-                    report.portions += 1
                     pending = []
                     pending_has_records = False
                     ctl = self._fresh_control()
@@ -622,13 +611,5 @@ class SingerTapJob:
             # them; their redelivery on the next run is absorbed by the
             # batch-id skip (deterministic tap) or the idempotent LWW
             # merge
-            counts = self._apply_portion(
-                pending, report.portions, digest.hexdigest()[:16],
-                control=ctl,
-            )
-            self.applied_portions += 1
-            self._maybe_compact()
-            for s, n in counts.items():
-                report.records[s] = report.records.get(s, 0) + n
-            report.portions += 1
+            self._commit_portion(report, pending, digest, ctl)
         return report

@@ -73,9 +73,8 @@ def lineage_frame(spark: SparkSession, table: LakeTable) -> DataFrame:
                 "batch_id": str(entry.get("batch_id")),
                 "seq_min": entry.get("seq_min"),
                 "seq_max": entry.get("seq_max"),
-                # merge lineage records the count as n_keys (pre-LWW row
-                # count); older name n_events kept as a fallback
-                "n_keys": entry.get("n_keys", entry.get("n_events")),
+                # merge lineage records the pre-LWW row count as n_keys
+                "n_keys": entry.get("n_keys"),
                 "n_deletes": entry.get("n_deletes"),
                 "n_buckets_touched": len(entry.get("buckets", []) or []),
                 "schema_changed": bool(
@@ -136,7 +135,7 @@ def statistics_frame(
             else None
         )
         job = e.get("job_id")
-        nk = e.get("n_keys", e.get("n_events")) or 0
+        nk = e.get("n_keys") or 0
         nd = e.get("n_deletes") or 0
         folded[(period, job, "success")] = (
             folded.get((period, job, "success"), 0) + nk - nd

@@ -29,6 +29,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from jitsu_spark.lake.maintenance import maintain
 from jitsu_spark.lake.merge import MergeResult, merge_batch
 from jitsu_spark.lake.table import LakeTable
 
@@ -59,22 +60,20 @@ class CdcStreamJob:
     event_fn: Callable | None = None
     event_fn_schema: T.StructType | None = None
     dead_letter_dir: str | None = None
-    # background compaction cadence: after every N applied batches, fold
-    # buckets above the file-count threshold (MoR deltas back to base /
-    # CoW small files together). At the 10^10-event tail this bounds the
-    # read amplification of write.mode=mor without blocking every batch.
-    compact_every_n_batches: int | None = None
-    compact_max_files_per_bucket: int = 8
-    # on the same cadence, additionally expire version DESCRIPTORS older
-    # than this many (None = off, the safe default: changes()/time-travel
+    # in-stream maintenance (None = off): after every applied batch,
+    # lake.maintenance.maintain folds the buckets above this file count
+    # (MoR deltas back to base / CoW small files together) and a grown
+    # manifest. At the 10^10-event tail this bounds the read
+    # amplification of write.mode=mor by layout, not by a batch count.
+    compact_max_files_per_bucket: int | None = None
+    # with maintenance on, also expire version DESCRIPTORS older than
+    # this many (None = off, the safe default: changes()/time-travel
     # consumers below the horizon break — opt in once downstream syncs
-    # are chained via post_commit, which runs first). Clamped to >= 2:
-    # in-stream expiry with keep=1 would delete the descriptor a
-    # concurrent reader just resolved as current; keep it comfortably
-    # above the number of commits any concurrent reader may lag.
+    # are chained via post_commit, which runs first; maintain clamps it
+    # to >= 4).
     expire_snapshots_keep: int | None = None
     # post-commit hook, called after every APPLIED (non-skipped) merge and
-    # BEFORE any compaction — the seam for chaining downstream incremental
+    # BEFORE maintenance — the seam for chaining downstream incremental
     # consumers (lake.mirror.sync_mirror / sync_aggregate over
     # table.changes()); running pre-compaction preserves the
     # consume-before-compact contract of changes()
@@ -139,48 +138,32 @@ class CdcStreamJob:
             if combined is not None:
                 combined.unpersist()
         self.results.append(res)
-        if self.post_commit is not None and not res.skipped:
+        if res.skipped:
+            return
+        if self.post_commit is not None:
             self.post_commit(batch_id)
-        if self.compact_every_n_batches:
-            applied = len([r for r in self.results if not r.skipped])
-            if applied and applied % self.compact_every_n_batches == 0:
-                self.table.compact(
-                    max_files_per_bucket=self.compact_max_files_per_bucket
-                )
-                # same cadence bounds METADATA growth: fold contiguous
-                # batch ids to a watermark + archive old lineage (runs
-                # after post_commit syncs, so changes() consumers are
-                # already past the range being archived)
-                from jitsu_spark.lake.maintenance import (
-                    compact_manifest,
-                    expire_snapshots,
-                )
+        if self.compact_max_files_per_bucket is not None:
+            maintain(
+                self.table,
+                self.compact_max_files_per_bucket,
+                self.expire_snapshots_keep,
+            )
 
-                compact_manifest(self.table)
-                if self.expire_snapshots_keep:
-                    # a cadence batch can append up to TWO maintenance
-                    # commits (compact + manifest_compact) AFTER the merge
-                    # a post_commit consumer just synced to — its next
-                    # window's pre-image read needs that merge's snapshot
-                    # descriptor, so the floor is merge+compact+
-                    # manifest_compact+headroom, not the plain-reader 2
-                    expire_snapshots(
-                        self.table,
-                        keep_last=max(self.expire_snapshots_keep, 4),
-                    )
-
-    def run_available_now(self, spark: SparkSession, timeout_s: int = 600) -> list[MergeResult]:
-        """Replay the current backlog to completion and stop (the batch
-        mode of SURVEY.md §1.4); resumable via the checkpoint."""
+    def _start(self, spark: SparkSession, **trigger):
         os.makedirs(self.checkpoint_dir, exist_ok=True)
-        q = (
+        return (
             self._reader(spark)
             .writeStream.foreachBatch(self._apply)
             .option("checkpointLocation", self.checkpoint_dir)
             .queryName(self.job_id)
-            .trigger(availableNow=True)
+            .trigger(**trigger)
             .start()
         )
+
+    def run_available_now(self, spark: SparkSession, timeout_s: int = 600) -> list[MergeResult]:
+        """Replay the current backlog to completion and stop (the batch
+        mode of SURVEY.md §1.4); resumable via the checkpoint."""
+        q = self._start(spark, availableNow=True)
         try:
             q.awaitTermination(timeout_s)
         finally:
@@ -192,15 +175,7 @@ class CdcStreamJob:
 
     def start_continuous(self, spark: SparkSession, processing_time: str = "5 seconds"):
         """Tail the log continuously (stream mode). Caller manages the query."""
-        os.makedirs(self.checkpoint_dir, exist_ok=True)
-        return (
-            self._reader(spark)
-            .writeStream.foreachBatch(self._apply)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .queryName(self.job_id)
-            .trigger(processingTime=processing_time)
-            .start()
-        )
+        return self._start(spark, processingTime=processing_time)
 
     # -- observability -------------------------------------------------------
 

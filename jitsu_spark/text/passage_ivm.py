@@ -412,8 +412,10 @@ class PassageDedupView:
                     " ",
                 ).alias("clean_text"),
             )
-            # upstream deletes retract their row (NULL payload)
-            deleted = ch3.join(
+            # upstream deletes retract their row (NULL payload); a bootstrap
+            # has no rows to retract, and limit(0) lets the optimizer drop
+            # the anti-join's second scan of the whole upstream
+            deleted = (ch3 if res_since else ch3.limit(0)).join(
                 post3.select(key), on=key, how="left_anti"
             ).select(
                 F.col(key).alias("doc"),

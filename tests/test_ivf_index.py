@@ -370,7 +370,6 @@ def test_index_stays_fresh_through_embedding_stream(spark, tmpdir_path):
             max_files_per_trigger=1,
             job_id="ivfstream",
             post_commit=lambda batch_id: sync_ivf_index(table, index),
-            compact_every_n_batches=1,
             compact_max_files_per_bucket=1,
         )
 

@@ -747,7 +747,7 @@ def test_changes_window_crosses_background_compaction(spark, tmpdir_path):
 
 def test_mirror_sync_survives_in_stream_compaction(spark, tmpdir_path):
     """The combination that used to wedge: CdcStreamJob with
-    compact_every_n_batches + a post_commit mirror sync. post_commit fires
+    in-stream maintenance + a post_commit mirror sync. post_commit fires
     BEFORE the compaction (cursor = the merge version), so every later
     sync window starts at a merge and only ever CROSSES fold commits —
     legal now, and the mirror stays exact."""
@@ -777,8 +777,7 @@ def test_mirror_sync_survives_in_stream_compaction(spark, tmpdir_path):
         source_schema=CHANGELOG_SCHEMA,
         max_files_per_trigger=1,
         job_id="compmir",
-        compact_every_n_batches=1,  # fold after EVERY batch — worst case
-        compact_max_files_per_bucket=1,
+        compact_max_files_per_bucket=1,  # fold at every 2nd file — worst case
         # keep=2 would expire the merge snapshot the mirror's next window
         # reads as its pre-image base (compact + manifest_compact commits
         # land after it) — the runner clamps to >= 4 for exactly this
@@ -790,3 +789,100 @@ def test_mirror_sync_survives_in_stream_compaction(spark, tmpdir_path):
     up = {r["doc_id"]: r["tokens"] for r in table.read().collect()}
     mi = {r["doc_id"]: r["tokens"] for r in mirror.read().collect()}
     assert mi == up and len(up) > 0
+
+
+def test_stream_maintenance_folds_only_buckets_over_threshold(
+    spark, tmpdir_path
+):
+    """CdcStreamJob maintenance is triggered by the layout, not a batch
+    count: with compact_max_files_per_bucket=D, post_commit (which runs
+    after the merge and before maintenance) never sees a bucket holding
+    more than D+1 files, and every compact commit folds exactly the
+    buckets that were over D after the merge before it."""
+    from jitsu_spark.changelog import (
+        CHANGELOG_SCHEMA,
+        assert_matches_oracle,
+        changelog_df,
+        dict_replay,
+    )
+    from jitsu_spark.streaming import CdcStreamJob
+
+    D, n_batches, per = 2, 10, 8
+    log = changelog_df(spark, n_events=n_batches * per, n_docs=40, seed=31)
+    expected = dict_replay([r.asDict(recursive=True) for r in log.collect()])
+    src = os.path.join(tmpdir_path, "log")
+    for i in range(n_batches):
+        log.filter(
+            (F.col("seq") >= i * per) & (F.col("seq") < (i + 1) * per)
+        ).coalesce(1).write.mode("append").parquet(src)
+
+    table = LakeTable.create(
+        spark, os.path.join(tmpdir_path, "tbl"), TARGET_SCHEMA, "doc_id",
+        n_buckets=16, properties={"write.mode": "mor"},
+    )
+    counts: dict[int, dict[str, int]] = {}  # merge version -> files/bucket
+
+    def check(batch_id):
+        snap = table.snapshot()
+        counts[snap.version] = {b: len(es) for b, es in snap.files.items()}
+        assert max(counts[snap.version].values()) <= D + 1, counts
+
+    CdcStreamJob(
+        table=table,
+        source_dir=src,
+        checkpoint_dir=os.path.join(tmpdir_path, "ckpt"),
+        source_schema=CHANGELOG_SCHEMA,
+        max_files_per_trigger=1,
+        job_id="maint",
+        compact_max_files_per_bucket=D,
+        post_commit=check,
+    ).run_available_now(spark)
+    assert len(counts) == n_batches
+    assert_matches_oracle(table.read(), expected)
+
+    folds = [e for e in table.history() if e["kind"] == "compact"]
+    assert folds
+    for e in folds:
+        before = counts[e["version"] - 1]
+        over = sorted(b for b, n in before.items() if n > D)
+        assert sorted(e["buckets"]) == over, (e, before)
+        assert len(over) < len(before)  # the healthy buckets stay put
+
+
+def test_maintain_soak_1000_commits_bounded(spark, tmpdir_path):
+    """The metadata soak driven by maintain after every commit instead of
+    a fixed cadence: descriptor count, manifest ids and lineage stay
+    bounded, the manifest folds at most once per ~50 commits (a fold
+    is due only once the contiguous ids reach twice the 50 it keeps),
+    and exactly-once survives the folds."""
+    from jitsu_spark.lake import metadata as md
+    from jitsu_spark.lake.maintenance import full_history, maintain
+    from jitsu_spark.lake.merge import is_committed
+
+    t = make_table(spark, tmpdir_path, n_buckets=4)
+    md_dir = os.path.join(t.root, "metadata")
+    N = 1000
+    for i in range(N):
+        snap = t.snapshot()
+        md.commit_snapshot(t.root, md.next_snapshot(
+            snap, "merge", snap.files, commit_key=f"soak/{i}", batch_id=i,
+        ))
+        maintain(t, max_files_per_bucket=8, keep_snapshots=20)
+
+    vfiles = [
+        f for f in os.listdir(md_dir)
+        if f.startswith("v") and f.endswith(".json")
+    ]
+    assert len(vfiles) <= 20, len(vfiles)
+    cur = t.snapshot()
+    assert len(cur.committed) <= 1 + 2 * 50, len(cur.committed)
+    assert len(cur.lineage) <= 2 * 200 + 2, len(cur.lineage)
+
+    hist = full_history(t)
+    n_folds = sum(e["kind"] == "manifest_compact" for e in hist)
+    assert 1 <= n_folds <= -(-N // 50) + 1, n_folds
+    for k in (0, 1, 499, 500, 950, N - 1):
+        assert is_committed(cur, "soak", k), k
+    assert not is_committed(cur, "soak", N)
+    merged = {e.get("batch_id") for e in hist if e["kind"] == "merge"}
+    assert set(range(N)) <= merged

@@ -305,7 +305,9 @@ def test_sync_pins_state_table_snapshots(spark, tmpdir_path, monkeypatch):
     cannot pair two layouts. winners: the stage-2 cursor, the old-winner
     read and the merge; in stage 3 one current snapshot (lineage lookup,
     new-winner docs and the kept-set join) plus the pinned pre-state.
-    occ: the cursor, the merge and the displaced-passage read."""
+    occ: the cursor, the merge and the displaced-passage read. upstream:
+    the current version, then the window's two ends, each loaded once
+    (changes() takes the window's loaded upper snapshot)."""
     from jitsu_spark.lake import metadata as md
 
     src = _mk_src(spark, os.path.join(tmpdir_path, "up"))
@@ -334,4 +336,5 @@ def test_sync_pins_state_table_snapshots(spark, tmpdir_path, monkeypatch):
     assert versions(view.winners) == [None] * 4 + [1]
     assert versions(view.occ) == [None] * 3
     assert versions(view.result) == [None] * 2
+    assert versions(src) == [None, 1, 2]
     assert _actual(view) == _expected(src)

@@ -596,3 +596,35 @@ def test_commit_kinds_spark_job_counts(spark, tmpdir_path):
         "merge", "append", "overwrite_where", "compact", "rebucket",
         "manifest_compact",
     }
+
+
+def test_maintain_on_healthy_table_runs_no_job(spark, tmpdir_path):
+    """In-stream maintenance decides from the snapshot descriptor alone:
+    on a table with no bucket over the threshold, a short manifest and
+    few descriptors it starts no Spark job and publishes no snapshot. A
+    bucket over the threshold costs exactly the compaction's 3 jobs."""
+    from jitsu_spark.lake import LakeTable
+    from jitsu_spark.lake.maintenance import maintain
+    from jitsu_spark.lake.merge import merge_batch
+    from tests.test_merge import TARGET_SCHEMA, batch, ev
+
+    t = LakeTable.create(
+        spark, os.path.join(tmpdir_path, "mor"), TARGET_SCHEMA, "doc_id",
+        n_buckets=4, properties={"write.mode": "mor"},
+    )
+    for b in range(2):
+        merge_batch(t, batch(spark, [
+            ev(10 * b + i, "u", f"doc{i}", [b]) for i in range(8)
+        ]), batch_id=b)
+    v = t.snapshot().version
+    tag = os.path.basename(tmpdir_path)
+    assert spark_jobs(
+        spark, f"{tag}-healthy", lambda: maintain(t, 2, keep_snapshots=10)
+    ) == 0
+    assert t.snapshot().version == v
+
+    assert spark_jobs(
+        spark, f"{tag}-over", lambda: maintain(t, 1, keep_snapshots=10)
+    ) == 3
+    assert [e["kind"] for e in t.history()][-1] == "compact"
+    assert t.snapshot().version == v + 1

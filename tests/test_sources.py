@@ -851,8 +851,8 @@ def test_singer_tap_crash_resume_no_dupes(spark, tmpdir_path):
 
 def test_singer_tap_mor_mode_with_compaction_cadence(spark, tmpdir_path):
     """Steady-state Singer: stream tables in write.mode=mor (portion
-    merges are O(portion) delta writes) with the portion-cadence
-    compaction folding deltas back to base. Final state identical to the
+    merges are O(portion) delta writes) with per-portion maintenance
+    folding deltas back to base. Final state identical to the
     CoW sync; per-bucket file counts stay bounded; crash-resume still
     converges."""
     import os
@@ -871,7 +871,6 @@ def test_singer_tap_mor_mode_with_compaction_cadence(spark, tmpdir_path):
         job_id="singer-mor",
         n_buckets=4,
         table_properties={"write.mode": "mor"},
-        compact_every_n_portions=2,
         compact_max_files_per_bucket=1,
     )
     try:
@@ -889,14 +888,14 @@ def test_singer_tap_mor_mode_with_compaction_cadence(spark, tmpdir_path):
     }
     assert rows == _expected_users()
     snap = t.snapshot()
-    # 4 portions of deltas would pile up ~4 files/bucket unbounded; the
-    # cadence folds them (compaction ran at portions 2 and 4)
+    # 4 portions of deltas would pile up ~4 files/bucket unbounded;
+    # maintenance folds every bucket that reaches 2 files
     assert any(e.get("kind") == "compact" for e in snap.lineage)
     assert max((len(es) for es in snap.files.values()), default=0) <= 3
 
 
 def test_stream_auto_compaction_bounds_files(spark, tmpdir_path):
-    """compact_every_n_batches folds MoR deltas mid-stream; final state
+    """In-stream maintenance folds MoR deltas mid-stream; final state
     stays oracle-exact and per-bucket file counts stay bounded."""
     import os
 
@@ -931,7 +930,6 @@ def test_stream_auto_compaction_bounds_files(spark, tmpdir_path):
         source_schema=CHANGELOG_SCHEMA,
         max_files_per_trigger=1,
         job_id="autocompact",
-        compact_every_n_batches=3,
         compact_max_files_per_bucket=2,
         expire_snapshots_keep=5,
     )

@@ -103,8 +103,7 @@ def test_tokens_stack_stays_fresh_through_stream(spark, tmpdir_path):
             max_files_per_trigger=1,
             job_id="stack",
             post_commit=sync_all,
-            compact_every_n_batches=1,  # fold after every batch
-            compact_max_files_per_bucket=1,
+            compact_max_files_per_bucket=1,  # fold any bucket past 1 file
         )
 
     make_job().run_available_now(spark)
